@@ -13,7 +13,15 @@ SQL):
   evaluate identically per row; the BIGINT sum is exact and associative, so
   aggregation order stops mattering. The result is bit-identical in both
   engines. (Quantization error ≤ 1e-6 per row is applied identically on both
-  sides, so it cancels for comparison purposes.)
+  sides, so it cancels for comparison purposes.) The write side (rollup
+  ``sum_q``, :func:`qsum`) quantizes raw values so.
+- **Grid-exact re-quantization** — the render tier's series functions
+  re-quantize doubles that an upstream stage derived as ``k / 1e6``; there
+  ``FLOOR(x * 1e6)`` is off by one quantum whenever ``k * 1e6`` rounds down
+  in double (``133.26 * 1e6`` = 133259999.99999999). They use
+  :func:`qfloor` instead — the largest ``k`` with ``k / 1e6 <= x``, in
+  double — whose error is zero on values already on the 1e-6 grid and
+  below one quantum otherwise (mirror :func:`qfloor_sql`).
 - **Averages** — derived as ``qsum / count`` with one double division, again
   bit-identical.
 - **min/max/count/count distinct** — order-insensitive already; used raw.
@@ -59,6 +67,55 @@ def qavg(col: Column | str, alias: str | None = None) -> Column:
 #: into A/1e6/B/1e6 — a silent 1e12 error (bitten once; see batch7 Q8).
 QSUM_SQL = "(CAST(SUM(CAST(FLOOR(({x}) * 1000000) AS BIGINT)) AS DOUBLE) / 1000000)"
 QAVG_SQL = f"CAST({QSUM_SQL} / COUNT({{x}}) AS DOUBLE)"
+
+
+#: Doubles hold every integer exactly below 2**53: the ±1 steps of qfloor
+#: stay exact there, and beyond it FLOOR(x·scale) is x·scale itself.
+_EXACT_INT = 2**53
+
+
+def qfloor(col: Column | str, scale: int = QUANT) -> Column:
+    """Grid-exact quantizer of the render tier: the largest integer ``k``
+    with ``k / scale <= x``, evaluated in double (``k`` as BIGINT).
+
+    ``FLOOR(x * scale)`` alone is not idempotent on its own grid:
+    ``133.26 * 1e6`` is 133259999.99999999 in double, so a value that
+    ``k / 1e6`` produced quantizes back to ``k - 1`` and one quantum is
+    lost each time a series function re-quantizes an upstream result.
+    Starting from ``k = FLOOR(x * scale)``, ``k + 1`` is taken when
+    ``(k + 1) / scale <= x`` and ``k - 1`` when ``k / scale > x``. For
+    ``|x * scale| < 2**52`` (``|x| < 4.5e9`` at scale 1e6) that is the
+    exact answer: zero error on a value already on the grid, below one
+    quantum otherwise. Where ``|x * scale| >= 2**53`` (or it is NaN) ``k``
+    stays ``FLOOR(x * scale)``. Mirrored by :func:`qfloor_sql`; both
+    engines evaluate it identically per row.
+    """
+    x = F.col(col) if isinstance(col, str) else col
+    s = F.lit(float(scale))
+    y = x * s
+    k = F.floor(y)
+    kd = k.cast("double")
+    exact = F.abs(y) < F.lit(float(_EXACT_INT))
+    return (
+        F.when(exact & ((kd + F.lit(1.0)) / s <= x), k + F.lit(1))
+        .when(exact & (kd / s > x), k - F.lit(1))
+        .otherwise(k)
+        .cast("long")
+    )
+
+
+def qfloor_sql(x: str, scale: int = QUANT) -> str:
+    """DuckDB mirror of :func:`qfloor`: a BIGINT per row for the DOUBLE
+    expression ``x`` at ``scale``. DuckDB's FLOOR(DOUBLE) is a DOUBLE, so
+    the ±1 steps are taken in double, exact below 2**53."""
+    y = f"(({x}) * {scale})"
+    k = f"FLOOR{y}"
+    return (
+        f"CAST(CASE WHEN ABS{y} < {_EXACT_INT} AND ({k} + 1) / {scale} <= ({x})"
+        f" THEN {k} + 1"
+        f" WHEN ABS{y} < {_EXACT_INT} AND {k} / {scale} > ({x})"
+        f" THEN {k} - 1 ELSE {k} END AS BIGINT)"
+    )
 
 
 def epoch_seconds(col: Column | str, alias: str | None = None) -> Column:

@@ -24,7 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from kenshin_backup_spark.functions.deterministic import QUANT
+from kenshin_backup_spark.functions.deterministic import QUANT, qfloor
 from kenshin_backup_spark.operators.scalepat import global_topk, with_global_prefix
 
 
@@ -167,7 +167,7 @@ def per_second(
 
 def integral(df: DataFrame) -> DataFrame:
     """graphite ``integral()``: running total (quantized-exact)."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     w = _w().rowsBetween(W.unboundedPreceding, 0)
     return df.withColumn(
         "value", (_qsum(q).over(w) / F.lit(float(QUANT))).cast("double")
@@ -188,7 +188,7 @@ def moving_average(
     series have no full preceding window — graphite omits those points
     (it fetches preview data instead); on the canonical grid they
     surface as NULL gaps."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     w = _w().rowsBetween(-int(window_points), -1)
     avg = (
         _qsum(q).over(w) / (F.lit(float(QUANT)) * F.count(q).over(w))
@@ -212,7 +212,7 @@ def moving_average_time(
     current point). Slots earlier than ``first_slot + window`` have no
     full window and stay NULL, mirroring graphite's omitted leading
     points."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     w = (
         W.partitionBy("metric")
         .orderBy(F.col("bucket_ts").cast("long"))
@@ -241,9 +241,14 @@ def summarize(df: DataFrame, interval_seconds: int, func: str = "sum") -> DataFr
     re-average over raw data needs the (sum,count)-carrying rollup
     cascade (`operators/rollup.cascade`), which is the engine's storage
     path for that.
+
+    ``sum``/``avg`` add the slot values as BIGINT quanta from the
+    grid-exact :func:`~kenshin_backup_spark.functions.deterministic.qfloor`:
+    a value already on the 1e-6 grid (any upstream quantized result)
+    enters the sum with zero error, so one slot of 133.26 sums to 133.26.
     """
     bucket = (F.col("bucket_ts") - (F.col("bucket_ts") % interval_seconds)).cast("long")
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     aggs = {
         "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
         # sequential divisions match _combine's oracle-mirrorable order
@@ -370,7 +375,12 @@ def average_series(df: DataFrame, name: str = "averageSeries") -> DataFrame:
 
 
 def _combine(df: DataFrame, func: str) -> DataFrame:
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    """Per-(metric, bucket) cross-series ``sum``/``avg``/``max``/``min``.
+    ``sum``/``avg`` add BIGINT quanta from the grid-exact ``qfloor``:
+    zero error on values already on the 1e-6 grid, below one quantum
+    otherwise, and the same integers in the DuckDB mirror
+    (``qfloor_sql``)."""
+    q = qfloor("value")
     aggs = {
         "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
         # sequential divisions, matching the oracle's SUM/1e6/COUNT order
@@ -419,7 +429,7 @@ def series_stdev(df: DataFrame) -> DataFrame:
     our DOCUMENTED DEVIATION degrades to a gap. In-envelope results are
     bit-identical (try_sum == sum when no overflow).
     """
-    q = F.floor(F.col("value") * _STDEV_QUANT).cast("long")
+    q = qfloor("value", _STDEV_QUANT)
     qd = q.cast("decimal(19,0)")
     agg = df.groupBy("metric").agg(
         F.count(q).alias("n"),
@@ -452,7 +462,7 @@ def most_deviant(df: DataFrame, n: int) -> DataFrame:
 def sort_by_total(df: DataFrame) -> DataFrame:
     """graphite ``sortByTotal()``: rank series by their (quantized-exact)
     total, descending; ties → metric asc."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     tot = df.groupBy("metric").agg(
         (_qsum(q) / F.lit(float(QUANT))).cast("double").alias("series_total")
     )
@@ -491,7 +501,7 @@ def sort_by_maxima_series(df: DataFrame) -> DataFrame:
 def sort_by_total_series(df: DataFrame) -> DataFrame:
     """graphite ``sortByTotal()`` in CANONICAL form (quantized-exact
     totals; see :func:`sort_by_total` for the ranking-table variant)."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     total = (_qsum(q) / F.lit(float(QUANT))).cast("double")
     return _with_series_order(df, total)
 
@@ -553,13 +563,13 @@ def as_percent(
             "value",
             ((F.col("value") / F.lit(t)) * F.lit(100.0)).cast("double"),
         )
-    q = F.floor(F.col("value") * 1_000_000).cast("long")
+    q = qfloor("value")
     if total is not None:  # a series frame: graphite's matchSeries rules
         t_names = sorted(
             r["metric"]
             for r in total.select("metric").distinct().collect()
         )
-        tq = F.floor(F.col("value") * 1_000_000).cast("long")
+        tq = qfloor("value")
         if len(t_names) == 1:
             tot = total.select(
                 "bucket_ts", tq.alias("__tq")
@@ -654,7 +664,7 @@ def as_percent_nodes(
             for n in nodes
         ],
     )
-    q = F.floor(F.col("value") * 1_000_000).cast("long")
+    q = qfloor("value")
     src = total if total is not None else df
     tot = (
         src.withColumn("__k", key)
@@ -780,7 +790,7 @@ def transform_null(df: DataFrame, default: float = 0.0) -> DataFrame:
 
 def _series_mean(df: DataFrame) -> DataFrame:
     """Per-series quantized-exact mean over non-gap slots."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     return df.groupBy("metric").agg(
         (_qsum(q) / F.lit(float(QUANT)) / F.count(q))
         .cast("double")
@@ -870,7 +880,7 @@ def stddev_series(df: DataFrame, name: str = "stddevSeries") -> DataFrame:
     SUM(BIGINT) is HUGEINT, so oracles need no change. Σq² uses
     ``try_sum`` so escalated out-of-envelope magnitudes gap instead of
     crashing (see :func:`series_stdev` — r12)."""
-    q = F.floor(F.col("value") * _STDEV_QUANT).cast("long")
+    q = qfloor("value", _STDEV_QUANT)
     qd = q.cast("decimal(19,0)")
     g = (
         df.withColumn("metric", F.lit(name))
@@ -1168,7 +1178,7 @@ def moving_sum(
 ) -> DataFrame:
     """graphite ``movingSum()`` (quantized-exact safeSum over the
     strictly-before window; all-gap windows stay NULL)."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     w, ok = _moving_frame(df, window_points, window_seconds,
                           x_files_factor)
     val = (_qsum(q).over(w) / F.lit(float(QUANT))).cast("double")
@@ -1305,10 +1315,10 @@ def weighted_average(
     )
     qp = F.when(
         F.col("__a").isNotNull() & F.col("__w").isNotNull(),
-        F.floor(F.col("__a") * F.col("__w") * QUANT).cast("long"),
+        qfloor(F.col("__a") * F.col("__w")),
     )
     qw = F.when(
-        F.col("__w").isNotNull(), F.floor(F.col("__w") * QUANT).cast("long")
+        F.col("__w").isNotNull(), qfloor(F.col("__w"))
     )
     g = j.groupBy("bucket_ts").agg(
         _qsum(qp).alias("__sp"), _qsum(qw).alias("__sw")
@@ -1495,7 +1505,7 @@ def hitcount(
     from_ts/range are interval-aligned (the canonical render grid here
     always is)."""
     per_slot = F.col("value") * _series_step().cast("double")
-    q = F.floor(per_slot * QUANT).cast("long")
+    q = qfloor(per_slot)
     if anchor_ts is None:
         bucket = (
             F.col("bucket_ts") - (F.col("bucket_ts") % int(interval_seconds))
@@ -1528,7 +1538,7 @@ def integral_by_interval(df: DataFrame, interval_seconds: int) -> DataFrame:
     (``bucket_ts % interval``); graphite-web resets relative to the
     REQUEST start time. Identical whenever from_ts is interval-aligned
     (the canonical render grid here always is)."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     bucket = F.col("bucket_ts") - (F.col("bucket_ts") % int(interval_seconds))
     w = (
         W.partitionBy("metric", bucket)
@@ -1923,7 +1933,7 @@ def stdev_series_window(
     ``try_sum`` gaps escalated out-of-envelope magnitudes instead of
     crashing (see :func:`series_stdev` — r12)."""
     w = _w().rowsBetween(-(int(points) - 1), 0)
-    q = F.floor(F.col("value") * _STDEV_QUANT).cast("long")
+    q = qfloor("value", _STDEV_QUANT)
     qd = q.cast("decimal(19,0)")
     n = F.count(q).over(w)
     s1 = _qsum(q).over(w)
@@ -2228,7 +2238,7 @@ def aggregate_line(df: DataFrame, func: str = "avg") -> DataFrame:
     """graphite ``aggregateLine(func)``: replace each series with a flat
     line at its aggregate (avg/sum/min/max/last — quantized-exact for
     avg/sum). Per-series 1-row aggregate broadcast back."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     aggs = {
         "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
         "average": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
@@ -2585,7 +2595,7 @@ def _series_key(df: DataFrame, func: str) -> DataFrame:
         raise ValueError(
             f"series key func must be one of {sorted(set(_SERIES_KEY_FUNCS))}"
         )
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     if func in ("average", "avg"):
         key = (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double")
     elif func in ("current", "last"):
@@ -2616,7 +2626,7 @@ def _series_key(df: DataFrame, func: str) -> DataFrame:
             (F.element_at(arr, mid) + F.element_at(arr, mid + 1)) / 2.0
         ).cast("double")
     elif func == "stddev":
-        qs = F.floor(F.col("value") * _STDEV_QUANT).cast("long")
+        qs = qfloor("value", _STDEV_QUANT)
         qd = qs.cast("decimal(19,0)")
         n = F.count(qs).cast("double")
         s2 = F.try_sum(qd * qd)  # out-of-envelope → NULL key, not a crash
@@ -2708,7 +2718,7 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
     ``last`` is the lexically-last member's non-gap value, ``diff`` is
     graphite's safeDiff (first non-gap member minus the sum of the
     rest, quantized-exact as ``(2·q_first − Σq)/1e6``)."""
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     simple = {
         "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
         "total": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
@@ -2790,7 +2800,7 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
             .alias("value"),
         )
     if func == "stddev":
-        qs = F.floor(F.col("value") * _STDEV_QUANT).cast("long")
+        qs = qfloor("value", _STDEV_QUANT)
         qd = qs.cast("decimal(19,0)")
         g = (
             df.withColumn("__q", qs)
@@ -3110,7 +3120,7 @@ def legend_value(df: DataFrame, *value_types: str) -> DataFrame:
             raise ValueError("legendValue unit systems are not supported")
         if vt not in fns:
             raise ValueError(f"legendValue type must be one of {sorted(fns)}")
-    q = F.floor(F.col("value") * QUANT).cast("long")
+    q = qfloor("value")
     aggs = {
         "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
         "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),

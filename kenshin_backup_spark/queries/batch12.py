@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from kenshin_backup_spark.functions.deterministic import (
     EPOCH_S_SQL,
     QSUM_SQL,
+    qfloor_sql,
     qsum,
 )
 from kenshin_backup_spark.sources import load_table
@@ -51,11 +52,11 @@ WITH hourly AS (
   FROM events GROUP BY 1, 2
 ), finalized AS (
   -- mirror finalize() + as_percent(): the engine divides the exact BIGINT
-  -- by 1e6 into a double, then RE-quantizes that double; replay the same
-  -- two IEEE ops so a one-ulp floor crossing lands identically.
+  -- by 1e6 into a double, then RE-quantizes that double with the
+  -- grid-exact quantizer (which maps it back to q0 itself).
   SELECT metric, bucket_ts,
          CAST(q0 AS DOUBLE) / 1000000 AS value,
-         CAST(FLOOR((CAST(q0 AS DOUBLE) / 1000000) * 1000000) AS BIGINT) AS q
+         {qfloor_sql("CAST(q0 AS DOUBLE) / 1000000")} AS q
   FROM hourly
 )
 SELECT metric, bucket_ts,

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL
+from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, qfloor_sql
 from kenshin_backup_spark.operators import seriesfns as S
 from kenshin_backup_spark.operators.rollup import finalize, rollup_partials
 from kenshin_backup_spark.operators.similarity import (
@@ -77,8 +77,7 @@ def graphite_groupbynode_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GROUPBYNODE_SQL = f"""
 WITH {_TEN_SQL}
 SELECT str_split(metric, '.')[2] AS metric, bucket_ts,
-       CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
-         / 1000000.0 AS value
+       CAST(SUM({qfloor_sql("value")}) AS DOUBLE) / 1000000.0 AS value
 FROM ten GROUP BY 1, 2
 """
 
@@ -102,7 +101,7 @@ def graphite_exclude_average(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EXCLUDE_AVG_SQL = f"""
 WITH {_TEN_SQL}
 SELECT 'avgSeries' AS metric, bucket_ts,
-       CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
+       CAST(SUM({qfloor_sql("value")}) AS DOUBLE)
          / 1000000.0 / COUNT(value) AS value
 FROM ten
 WHERE NOT regexp_matches(metric, 'error|signup')
@@ -144,9 +143,9 @@ aliased AS (
 moments AS (
   SELECT metric,
          COUNT(value) AS n,
-         SUM(CAST(FLOOR(value * 1000) AS BIGINT)) AS s1,
-         SUM(CAST(FLOOR(value * 1000) AS BIGINT)
-             * CAST(FLOOR(value * 1000) AS BIGINT)) AS s2
+         SUM({qfloor_sql("value", 1000)}) AS s1,
+         SUM({qfloor_sql("value", 1000)}
+             * {qfloor_sql("value", 1000)}) AS s2
   FROM aliased GROUP BY 1
 ),
 sd AS (
@@ -160,8 +159,7 @@ sd AS (
 ),
 totals AS (
   SELECT metric,
-         CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
-           / 1000000.0 AS series_total
+         CAST(SUM({qfloor_sql("value")}) AS DOUBLE) / 1000000.0 AS series_total
   FROM aliased GROUP BY 1
 ),
 ranked AS (

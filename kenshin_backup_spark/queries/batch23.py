@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL
+from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, qfloor_sql
 from kenshin_backup_spark.operators import seriesfns as S
 from kenshin_backup_spark.operators.dedup import normalize_text, with_shingles
 from kenshin_backup_spark.operators.rollup import finalize, rollup_partials
@@ -188,14 +188,12 @@ _DIVIDE_SQL = f"""
 WITH {_TEN_SQL},
 num AS (
   SELECT bucket_ts,
-         CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
-           / 1000000.0 AS err_sum
+         CAST(SUM({qfloor_sql("value")}) AS DOUBLE) / 1000000.0 AS err_sum
   FROM ten WHERE regexp_matches(metric, '\\.error\\.') GROUP BY 1
 ),
 den AS (
   SELECT bucket_ts,
-         CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
-           / 1000000.0 AS all_sum
+         CAST(SUM({qfloor_sql("value")}) AS DOUBLE) / 1000000.0 AS all_sum
   FROM ten GROUP BY 1
 )
 SELECT den.bucket_ts, num.err_sum, den.all_sum,
@@ -225,8 +223,7 @@ _MINMAX_SQL = f"""
 WITH {_TEN_SQL},
 per_type AS (
   SELECT str_split(metric, '.')[2] AS metric, bucket_ts,
-         CAST(SUM(CAST(FLOOR(value * 1000000) AS BIGINT)) AS DOUBLE)
-           / 1000000.0 AS value
+         CAST(SUM({qfloor_sql("value")}) AS DOUBLE) / 1000000.0 AS value
   FROM ten GROUP BY 1, 2
 ),
 band AS (

@@ -20,7 +20,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, QSUM_SQL
+from kenshin_backup_spark.functions.deterministic import (
+    EPOCH_S_SQL,
+    QSUM_SQL,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
@@ -57,12 +61,14 @@ WITH hourly AS (
   FROM events WHERE event_type IN ('click', 'view')
   GROUP BY 1, 2
 ),
+-- sumSeries and summarize re-quantize each derived double (qfloor)
 summed AS (
-  SELECT h, {QSUM_SQL.format(x="avg_v")} AS v FROM hourly GROUP BY 1
+  SELECT h, CAST(SUM({qfloor_sql("avg_v")}) AS DOUBLE) / 1000000 AS v
+  FROM hourly GROUP BY 1
 )
 SELECT 'sumSeries' AS metric,
        CAST((h // 86400) * 86400 AS BIGINT) AS bucket_ts,
-       CAST({QSUM_SQL.format(x="v")} AS DOUBLE) AS value
+       CAST(SUM({qfloor_sql("v")}) AS DOUBLE) / 1000000 AS value
 FROM summed GROUP BY 2
 """
 

@@ -28,7 +28,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, QAVG_SQL
+from kenshin_backup_spark.functions.deterministic import (
+    EPOCH_S_SQL,
+    QAVG_SQL,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
@@ -63,11 +67,9 @@ def graphite_render_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # The oracle mirrors the evaluator stage by stage. Requantization at each
-# combine/summarize stage (FLOOR(x*1e6) again on an already-derived double)
-# is intentional — it is exactly what _combine/summarize do, and both
+# combine/summarize stage (qfloor again on an already-derived double) is
+# intentional — it is exactly what _combine/summarize do, and both
 # engines run the identical IEEE ops.
-_Q = "CAST(FLOOR(({x}) * 1000000) AS BIGINT)"
-
 _RATIO_SQL = f"""
 WITH bounds AS (
   SELECT (MIN({_ES}) - MIN({_ES}) % 86400) AS lo,
@@ -85,35 +87,35 @@ hourly AS (
 ),
 num_h AS (
   SELECT g.h,
-         CAST(SUM({_Q.format(x="p.avg_v")}) / 1000000 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("p.avg_v")}) / 1000000 AS DOUBLE) AS v
   FROM grid g
   LEFT JOIN hourly p ON p.h = g.h AND p.metric = 'purchase'
   GROUP BY g.h
 ),
 den_h AS (
   SELECT g.h,
-         CAST(SUM({_Q.format(x="c.avg_v")}) / 1000000 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("c.avg_v")}) / 1000000 AS DOUBLE) AS v
   FROM grid g
   LEFT JOIN hourly c ON c.h = g.h AND c.metric IN ('click', 'view')
   GROUP BY g.h
 ),
 num_d0 AS (
   SELECT CAST((h // 86400) * 86400 AS BIGINT) AS d,
-         CAST(SUM({_Q.format(x="v")}) / 1000000 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("v")}) / 1000000 AS DOUBLE) AS v
   FROM num_h GROUP BY 1
 ),
 den_d0 AS (
   SELECT CAST((h // 86400) * 86400 AS BIGINT) AS d,
-         CAST(SUM({_Q.format(x="v")}) / 1000000 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("v")}) / 1000000 AS DOUBLE) AS v
   FROM den_h GROUP BY 1
 ),
 -- divide_series funnels BOTH sides through _combine once more, which
--- requantizes the single daily row (floor(v*1e6)/1e6) — mirror it.
+-- requantizes the single daily row (qfloor(v)/1e6) — mirror it.
 num_d AS (
-  SELECT d, CAST({_Q.format(x="v")} / 1000000 AS DOUBLE) AS v FROM num_d0
+  SELECT d, CAST({qfloor_sql("v")} / 1000000 AS DOUBLE) AS v FROM num_d0
 ),
 den_d AS (
-  SELECT d, CAST({_Q.format(x="v")} / 1000000 AS DOUBLE) AS v FROM den_d0
+  SELECT d, CAST({qfloor_sql("v")} / 1000000 AS DOUBLE) AS v FROM den_d0
 )
 SELECT 'divideSeries' AS metric, n.d AS bucket_ts,
        CAST(COALESCE(
@@ -193,7 +195,7 @@ hourly AS (
 ),
 summed AS (
   SELECT g.h,
-         CAST(SUM({_Q.format(x="p.avg_v")}) / 1000000 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("p.avg_v")}) / 1000000 AS DOUBLE) AS v
   FROM grid g LEFT JOIN hourly p ON p.h = g.h
   GROUP BY g.h
 )
@@ -250,9 +252,9 @@ hourly AS (
   FROM events WHERE event_type IN ('click', 'view', 'purchase')
   GROUP BY 1, 2
 ),
--- summarize requantizes the hourly DOUBLE per stage (floor(x*1e6))
+-- summarize requantizes the hourly DOUBLE per stage (qfloor)
 hq AS (
-  SELECT metric, h, {_Q.format(x="avg_v")} AS q FROM hourly
+  SELECT metric, h, {qfloor_sql("avg_v")} AS q FROM hourly
 ),
 daily_avg AS (
   SELECT metric, CAST((h // 86400) * 86400 AS BIGINT) AS d,

@@ -34,13 +34,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, QAVG_SQL
+from kenshin_backup_spark.functions.deterministic import (
+    EPOCH_S_SQL,
+    QAVG_SQL,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
 
 _ES = EPOCH_S_SQL.format(x="ts")
-_Q = "CAST(FLOOR(({x}) * 1000000) AS BIGINT)"
 
 _T1 = "percentileOfSeries(summarize({click,view,purchase}, '1d', 'avg'), 50)"
 _T2 = "movingMedian(summarize({click}, '1d', 'sum'), 3)"
@@ -88,9 +91,9 @@ hourly AS (
   FROM events WHERE event_type IN ('click', 'view', 'purchase')
   GROUP BY 1, 2
 ),
--- summarize requantizes the hourly DOUBLE per stage (floor(x*1e6))
+-- summarize requantizes the hourly DOUBLE per stage (qfloor)
 hq AS (
-  SELECT metric, h, {_Q.format(x="avg_v")} AS q FROM hourly
+  SELECT metric, h, {qfloor_sql("avg_v")} AS q FROM hourly
 ),
 daily_avg AS (
   SELECT metric, CAST((h // 86400) * 86400 AS BIGINT) AS d,

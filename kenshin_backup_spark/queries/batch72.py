@@ -46,13 +46,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, QAVG_SQL
+from kenshin_backup_spark.functions.deterministic import (
+    EPOCH_S_SQL,
+    QAVG_SQL,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
 
 _ES = EPOCH_S_SQL.format(x="ts")
-_Q = "CAST(FLOOR(({x}) * 1000000) AS BIGINT)"
 _TYPES = ("click", "error", "purchase", "signup", "view")
 
 
@@ -117,7 +120,7 @@ hourly AS (
          {QAVG_SQL.format(x="value")} AS avg_v
   FROM events GROUP BY 1, 2
 ),
-hq AS (SELECT metric, h, {_Q.format(x="avg_v")} AS q FROM hourly),
+hq AS (SELECT metric, h, {qfloor_sql("avg_v")} AS q FROM hourly),
 mets AS (SELECT UNNEST(['click','error','purchase','signup','view']) AS metric),
 daily AS (
   SELECT m.metric, g.d,
@@ -232,8 +235,8 @@ t1 AS (
 t2 AS (
   SELECT 'app.' || et || '.sum' AS metric, h AS bucket_ts,
          CAST(
-           (COALESCE({_Q.format(x="used_v")}, 0)
-            + COALESCE({_Q.format(x="total_v")}, 0)) / 1000000.0
+           (COALESCE({qfloor_sql("used_v")}, 0)
+            + COALESCE({qfloor_sql("total_v")}, 0)) / 1000000.0
          AS DOUBLE) AS value
   FROM ongrid
   WHERE used_v IS NOT NULL OR total_v IS NOT NULL

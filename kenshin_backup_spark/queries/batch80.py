@@ -23,7 +23,7 @@ backward off the render grid, so the hash match certifies the sign
 normalization on both the refetch windows and the copy re-gridding.
 
 Determinism: store values are ``floor()``-ed integers, the hourly MAX
-rollup keeps them integral, quantization (``FLOOR(v·1e6)`` BIGINT) is
+rollup keeps them integral, quantization (``qfloor(v)`` BIGINT) is
 exact for this range, and the percent is a single double division ×100
 mirrored operand-for-operand in DuckDB (every float literal CAST AS
 DOUBLE — the engine's quantized-oracle house rules). The timeStack
@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL
+from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, qfloor_sql
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
@@ -152,9 +152,9 @@ grid AS (
 -- (the engine's as_percent_nodes arithmetic, operand for operand)
 pct AS (
   SELECT etype, h,
-         CAST(FLOOR(va * CAST(1000000 AS DOUBLE)) AS BIGINT) AS qa,
-         CAST(FLOOR(vb * CAST(1000000 AS DOUBLE)) AS BIGINT) AS qb,
-         CAST(FLOOR(vt * CAST(1000000 AS DOUBLE)) AS BIGINT) AS qt
+         {qfloor_sql("va")} AS qa,
+         {qfloor_sql("vb")} AS qb,
+         {qfloor_sql("vt")} AS qt
   FROM grid
 )
 SELECT 'svc.' || etype || '.a' AS metric, h AS bucket_ts,

@@ -58,14 +58,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.api import Engine
-from kenshin_backup_spark.functions.deterministic import EPOCH_S_SQL, QAVG_SQL
+from kenshin_backup_spark.functions.deterministic import (
+    EPOCH_S_SQL,
+    QAVG_SQL,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy
 from kenshin_backup_spark.queries.batch80 import _store_points
 from kenshin_backup_spark.sources import load_table
 from kenshin_backup_spark.sources.tables import staged_path
 
 _ES = EPOCH_S_SQL.format(x="ts")
-_Q = "CAST(FLOOR(({x}) * 1000000) AS BIGINT)"
 
 #: 'mon' in graphite's unit-prefix table = 30 days (attime._UNITS).
 _MON = 30 * 86400
@@ -153,7 +156,7 @@ hourly AS (
 -- component; quantized NULL-ignoring sum per (group, hour)
 grouped AS (
   SELECT split_part(metric, '.', 2) AS grp, h,
-         CAST(SUM({_Q.format(x="v")}) / 1000000.0 AS DOUBLE) AS v
+         CAST(SUM({qfloor_sql("v")}) / 1000000.0 AS DOUBLE) AS v
   FROM hourly GROUP BY 1, 2
 ),
 grps AS (
@@ -269,7 +272,7 @@ t1 AS (
 -- sum across the five used series; all-gap hour -> NULL row)
 t2 AS (
   SELECT 'all.used' AS metric, h AS bucket_ts,
-         CAST(SUM({_Q.format(x="used_v")}) / 1000000.0 AS DOUBLE)
+         CAST(SUM({qfloor_sql("used_v")}) / 1000000.0 AS DOUBLE)
            AS value
   FROM ongrid
   GROUP BY h

@@ -108,19 +108,41 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: Ceiling of the default driver heap (``SPARK_DRIVER_MEMORY`` overrides).
+MAX_DRIVER_GB = 48
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Default ``spark.driver.memory``: a third of the host's RAM
+    (``MemTotal`` in ``meminfo``), at least 1 GB and at most
+    :data:`MAX_DRIVER_GB` (also the answer where RAM cannot be read). A
+    local[N] JVM grows its heap towards the cap before it collects, so a
+    cap above the RAM lets a long session (the test suite, a render
+    fuzz run) be OOM-killed rather than garbage-collected."""
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{MAX_DRIVER_GB}g"
+    return f"{max(1, min(MAX_DRIVER_GB, kb // (3 * 2**20)))}g"
+
+
 def get_spark(app_name: str = "kenshin_backup_spark") -> SparkSession:
     """Build (or reuse) a local session sized for this container.
 
     local[N] is a single JVM: ``spark.driver.memory`` is the only memory
-    knob. Shuffle partitions match core count — 200 would over-parallelize
-    sub-GB local data (and on a real cluster this is set to ~2-3× cores).
+    knob; ``SPARK_DRIVER_MEMORY`` sets it, else :func:`default_driver_memory`
+    sizes it from the host's RAM. Shuffle partitions match core count —
+    200 would over-parallelize sub-GB local data (and on a real cluster
+    this is set to ~2-3× cores).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    memory = os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/kenshin_spark_warehouse")
     )

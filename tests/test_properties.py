@@ -7,14 +7,21 @@ random cases into ONE job (a `case` key column) so the suite stays fast.
 from __future__ import annotations
 
 import datetime as dt
+import math
 import random
 import re
 
+import duckdb
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from kenshin_backup_spark.functions.deterministic import glob_to_regex
+from kenshin_backup_spark.functions.deterministic import (
+    glob_to_regex,
+    qfloor,
+    qfloor_sql,
+)
 from kenshin_backup_spark.operators.policies import Policy, assign_policy
 from kenshin_backup_spark.operators.rollup import cascade, finalize, rollup_partials
 
@@ -41,6 +48,58 @@ def test_glob_star_matches_any_single_segment(segments, pos):
     # star must NOT cross a dot boundary
     extended = ".".join(segments[:pos] + ["x.y"] + segments[pos + 1 :])
     assert not re.match(pat, extended)
+
+
+def test_qfloor_is_exact_on_its_grid_and_matches_duckdb(spark):
+    """qfloor(x, scale) is the largest k with k / scale <= x in double:
+    it maps every grid value k / scale back to k (a bare FLOOR(x * 1e6)
+    maps 133.26 to 133259999), never exceeds x off the grid, and its
+    DuckDB mirror gives the same BIGINT for every row."""
+    rng = random.Random(7)
+    cases = []  # (scale, k on the grid or None, x)
+    for scale, top in ((1_000_000, 4 * 10**15), (1_000, 4 * 10**12)):
+        ks = list(range(-3000, 3001)) + [133_260_000, 545_425_000]
+        ks += [rng.randint(-top, top) for _ in range(3000)]
+        for k in ks:
+            x = k / scale
+            cases.append((scale, k, x))
+            cases.append((scale, None, math.nextafter(x, math.inf)))
+            cases.append((scale, None, math.nextafter(x, -math.inf)))
+        cases += [(scale, None, rng.uniform(-1e9, 1e9)) for _ in range(2000)]
+    rows = [(i, sc, x) for i, (sc, _, x) in enumerate(cases)]
+    df = spark.createDataFrame(rows, "i long, scale long, x double")
+    got = {
+        r["i"]: r["q"]
+        for r in df.select(
+            "i",
+            F.when(F.col("scale") == 1_000, qfloor("x", 1_000))
+            .otherwise(qfloor("x"))
+            .alias("q"),
+        ).collect()
+    }
+    for i, (scale, k, x) in enumerate(cases):
+        q = got[i]
+        if k is not None:
+            assert q == k, (scale, k, x, q)
+        assert q / scale <= x < (q + 1) / scale, (scale, x, q)
+
+    t = pa.table(
+        {
+            "i": pa.array([r[0] for r in rows], pa.int64()),
+            "scale": pa.array([r[1] for r in rows], pa.int64()),
+            "x": pa.array([r[2] for r in rows], pa.float64()),
+        }
+    )
+    con = duckdb.connect()
+    con.register("t", t)
+    duck = dict(
+        con.execute(
+            f"SELECT i, CASE WHEN scale = 1000 THEN {qfloor_sql('x', 1_000)} "
+            f"ELSE {qfloor_sql('x')} END FROM t"
+        ).fetchall()
+    )
+    con.close()
+    assert duck == got
 
 
 def test_cascade_equals_direct_many_random_cases(spark):

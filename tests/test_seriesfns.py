@@ -107,6 +107,17 @@ def test_sum_and_average_series(spark):
     assert a == {0: 1.5, 60: 5.0}
 
 
+def test_one_point_sums_are_exact_on_the_quantum_grid(spark):
+    """A value already on the 1e-6 grid survives re-quantization: in
+    double, 133.26 * 1e6 is 133259999.99999999, so a bare FLOOR would
+    drop one quantum and return 133.259999."""
+    df = _series(spark, [("m", 0, 133.26)])
+    assert S.sum_series(df).first()["value"] == 133.26
+    assert S.average_series(df).first()["value"] == 133.26
+    for func in ("sum", "avg"):
+        assert S.summarize(df, 3600, func).first()["value"] == 133.26
+
+
 def test_exclude_and_grep(spark):
     df = _series(spark, [("web.cpu", 0, 1.0), ("db.cpu", 0, 2.0), ("web.mem", 0, 3.0)])
     assert sorted(set(r["metric"] for r in S.exclude(df, "^web").collect())) == ["db.cpu"]

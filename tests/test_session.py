@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import warnings
 
-from kenshin_backup_spark.session import RUNTIME_CONFS, tune
+from kenshin_backup_spark.session import RUNTIME_CONFS, default_driver_memory, tune
 
 
 def test_tune_is_idempotent_and_pins_criticals(spark):
@@ -28,3 +28,11 @@ def test_tune_is_idempotent_and_pins_criticals(spark):
     # every runtime conf either applied or was loudly adjudicated above
     for k, v in RUNTIME_CONFS.items():
         assert spark.conf.get(k, v) is not None
+
+
+def test_default_driver_memory_is_a_third_of_ram_within_bounds(tmp_path):
+    meminfo = tmp_path / "meminfo"
+    for kb, want in ((16479424, "5g"), (2**20, "1g"), (512 * 2**20, "48g")):
+        meminfo.write_text(f"MemFree:  1024 kB\nMemTotal: {kb} kB\n")
+        assert default_driver_memory(str(meminfo)) == want
+    assert default_driver_memory(str(tmp_path / "missing")) == "48g"
