@@ -28,6 +28,8 @@ facade adds no semantics of its own.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +39,7 @@ from kenshin_backup_spark.operators.ladder import (
     Ladder,
     build_ladder,
     compact_level,
+    delete_metrics,
     expire_retention,
     fetch_from_ladder,
 )
@@ -84,13 +87,42 @@ class Engine:
         )
 
     def policy_for(self, metric: str) -> Policy:
-        """First-match policy for one metric name (carbon semantics)."""
+        """The policy :meth:`write` routes one metric name to: the first
+        whose pattern matches (carbon semantics), else the policy named
+        ``default``. Raises ``ValueError`` for a metric that routes to
+        neither, as ``write`` stores none of its points."""
         import re
 
         for p in self.policies:
             if re.search(p.pattern, metric):
                 return p
-        return self.policies[-1]
+        for p in self.policies:
+            if p.name == DEFAULT_POLICY.name:
+                return p
+        raise ValueError(
+            f"metric {metric!r} matches no policy pattern and there is no "
+            f"{DEFAULT_POLICY.name!r} policy, so write stores none of its "
+            "points"
+        )
+
+    def _written_ladders(self) -> Iterator[tuple[Policy, Ladder]]:
+        """``(policy, ladder)`` of every policy a write stored points for,
+        in policy order."""
+        for p in self.policies:
+            if p.name in self._written:
+                yield p, self._ladder(p)
+
+    def _catalog(self) -> DataFrame | None:
+        """The ``metric`` column of every written ladder's finest level,
+        unioned into one scan (``None`` before any write)."""
+        cat = None
+        for _, lad in self._written_ladders():
+            finest = min(a.step_seconds for a in lad.archives)
+            scan = self.spark.read.parquet(lad.level_path(finest)).select(
+                "metric"
+            )
+            cat = scan if cat is None else cat.unionByName(scan)
+        return cat
 
     # -- write path -----------------------------------------------------------
 
@@ -105,10 +137,19 @@ class Engine:
     ) -> tuple[int, int] | None:
         """Materialize the retention ladder(s) for a long points frame.
 
-        Points route to their metric's policy; each policy's ladder is
-        built fine→coarse with cascaded aggregates (never re-reading
-        raw). Re-writing a policy's ladder replaces it (the batch
-        equivalent of the streaming update sink).
+        One path for every engine: :func:`assign_policy` tags each point
+        with its metric's policy (first match, else ``default``; carbon
+        semantics), and each policy's rows, ``where(policy == name)``,
+        feed :func:`build_ladder`, which builds that policy's ladder
+        fine→coarse with cascaded aggregates (never re-reading raw) and
+        swaps each level in beside the old one. With one policy, Catalyst
+        folds the tag and the filter to that policy's own predicate.
+        Re-writing a policy's ladder replaces it (the batch equivalent of
+        the streaming update sink). Emptiness is read from the written
+        level: a policy no row routes to gets a fine-level write that
+        holds no parquet file, which ``build_ladder`` discards, so the
+        policy is not marked written and any ladder it had stays as it
+        was; no separate emptiness probe runs.
 
         ``observe_bounds=True`` additionally returns the EXACT
         ``(min, max)`` epoch seconds of the written points' timestamps,
@@ -127,54 +168,31 @@ class Engine:
             F.col(ts_col).alias("ts"),
             F.col(value_col).alias("value"),
         )
+        tagged = assign_policy(pts, self.policies)
         lo: int | None = None
         hi: int | None = None
-
-        def _build(sub: DataFrame, p: Policy) -> None:
-            nonlocal lo, hi
+        for p in self.policies:
+            sub = tagged.where(F.col("policy") == p.name).drop("policy")
             ob = None
             if observe_bounds:
                 # The metrics come from the FIRST action on this plan —
-                # build_ladder's fine-level write, a full pass. The
-                # emptiness probes below run on the un-observed lineage,
-                # so their LIMIT-1 scans can never satisfy the
-                # observation with partial data.
+                # build_ladder's fine-level write, a full pass. Read them
+                # only when that write stored something: under adaptive
+                # execution an observation on an empty aggregated write
+                # is never delivered.
                 ob = Observation()
                 es = F.unix_timestamp(F.col("ts")).cast("long")
                 sub = sub.observe(
                     ob, F.min(es).alias("lo"), F.max(es).alias("hi")
                 )
-            build_ladder(sub, self._ladder(p))
+            if not build_ladder(sub, self._ladder(p)):
+                continue
             self._written.add(p.name)
             if ob is not None:
                 got = ob.get
                 if got["lo"] is not None:
                     lo = got["lo"] if lo is None else min(lo, got["lo"])
                     hi = got["hi"] if hi is None else max(hi, got["hi"])
-
-        if len(self.policies) == 1:
-            # Single-policy engine (every store-backed render query):
-            # first-match-or-default routing degenerates to one predicate,
-            # so skip the when-chain tag column + per-policy filter. Row
-            # membership is EXACTLY the old chain's: a policy named
-            # "default" absorbs the fallback (all rows); otherwise
-            # membership is the null-rejecting rlike — spelled
-            # metric IS NOT NULL for the match-everything '.*' pattern.
-            p = self.policies[0]
-            if p.name == DEFAULT_POLICY.name:
-                sub = pts
-            elif p.pattern == ".*":
-                sub = pts.where(F.col("metric").isNotNull())
-            else:
-                sub = pts.where(F.col("metric").rlike(p.pattern))
-            if sub.take(1):
-                _build(sub, p)
-        else:
-            tagged = assign_policy(pts, self.policies)
-            for p in self.policies:
-                sub = tagged.where(F.col("policy") == p.name).drop("policy")
-                if sub.take(1):
-                    _build(sub, p)
         if observe_bounds:
             if lo is None:
                 raise ValueError(
@@ -272,12 +290,10 @@ class Engine:
         if now_ts is None:
             now_ts = until_ts
         out: DataFrame | None = None
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
+        for p, lad in self._written_ladders():
             raw = fetch_from_ladder(
                 self.spark,
-                self._ladder(p),
+                lad,
                 metric_glob=metric_glob,
                 from_ts=from_ts,
                 until_ts=until_ts,
@@ -423,8 +439,6 @@ class Engine:
         request only and are released by ``clear_tracked()``."""
         if not targets:
             raise ValueError("render_many: need at least one target")
-        from pyspark.sql import functions as F
-
         memo: dict = {}
         out: DataFrame | None = None
         for t in targets:
@@ -567,25 +581,18 @@ class Engine:
         discipline as compaction); returns
         ``{policy: {step_seconds: rows_deleted}}`` as the erasure
         receipt."""
-        from kenshin_backup_spark.functions.deterministic import glob_to_regex
-        from kenshin_backup_spark.operators.ladder import delete_metrics
-
         exact = not any(ch in glob for ch in "*?{[")
         regex = glob_to_regex(glob)
         receipt: dict[str, dict[int, int]] = {}
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
+        for p, lad in self._written_ladders():
             if exact:
                 # exact-name deletes take the bucket-pruned path on a
                 # bucketed ladder (and a plain isin rewrite on a flat one)
                 receipt[p.name] = delete_metrics(
-                    self.spark, self._ladder(p), metrics=[glob]
+                    self.spark, lad, metrics=[glob]
                 )
             else:
-                receipt[p.name] = delete_metrics(
-                    self.spark, self._ladder(p), regex
-                )
+                receipt[p.name] = delete_metrics(self.spark, lad, regex)
         return receipt
 
     # -- header / catalog -----------------------------------------------------
@@ -618,20 +625,9 @@ class Engine:
         list, so a driver-side list is inherent — the cap bounds it; raise
         ``limit`` or narrow the glob for bigger catalogs). Exact globs
         short-circuit to an equality predicate."""
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select("metric")
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return []
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         cat = metric_filter(cat, "metric", glob)
         rows = cat.distinct().limit(limit).collect()
         return sorted(r.metric for r in rows)
@@ -641,24 +637,9 @@ class Engine:
         graphite-1.1 path (``name;tag=value;...``). One job: the catalog
         scan dedupes names map-side, tags explode from the tiny distinct
         name set — never from the point data."""
-        from pyspark.sql import functions as F
-
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select(
-                    "metric"
-                )
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return None
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         names = cat.distinct()
         pair = F.split(F.col("__kv"), "=", 2)
         return (
@@ -697,8 +678,6 @@ class Engine:
     def tag_values(self, tag: str, *, limit: int = 10_000) -> list[str]:
         """Graphite ``/tags/<tag>``: the distinct values recorded for one
         tag key across the catalog (driver list bounded by ``limit``)."""
-        from pyspark.sql import functions as F
-
         pairs = self._tag_pairs()
         if pairs is None:
             return []
@@ -732,20 +711,9 @@ class Engine:
         # tail anchored to "end of name OR a deeper component"
         body = glob_to_regex(query)[1:-1]
         prefix_rx = f"^(?:{body})(?:$|\\.)"
-        scans = []
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            finest = min(a.step_seconds for a in lad.archives)
-            scans.append(
-                self.spark.read.parquet(lad.level_path(finest)).select("metric")
-            )
-        if not scans:
+        cat = self._catalog()
+        if cat is None:
             return []
-        cat = scans[0]
-        for s in scans[1:]:
-            cat = cat.unionByName(s)
         parts = F.split(F.col("metric"), r"\.")
         nodes = (
             cat.where(F.col("metric").rlike(prefix_rx))
@@ -769,21 +737,17 @@ class Engine:
     def expire(self, *, now_ts: int) -> dict[str, dict[int, list[str]]]:
         """Drop date partitions older than each level's retention."""
         return {
-            p.name: expire_retention(self._ladder(p), now_ts=now_ts)
-            for p in self.policies
-            if p.name in self._written
+            p.name: expire_retention(lad, now_ts=now_ts)
+            for p, lad in self._written_ladders()
         }
 
     def compact(self) -> dict[str, dict[int, tuple[int, int]]]:
         """Compact every written level's small files; returns per-policy
         per-step (files_before, files_after)."""
-        out: dict[str, dict[int, tuple[int, int]]] = {}
-        for p in self.policies:
-            if p.name not in self._written:
-                continue
-            lad = self._ladder(p)
-            out[p.name] = {
+        return {
+            p.name: {
                 a.step_seconds: compact_level(self.spark, lad, a.step_seconds)
                 for a in lad.archives
             }
-        return out
+            for p, lad in self._written_ladders()
+        }

@@ -18,10 +18,21 @@ execution coalesces the small shuffle partitions of the coarser levels;
 there is no explicit per-level repartition. Each level is written
 partitioned by ``date`` (``mbucket``/``date`` when bucketed) and sorted
 by metric within each write task.
+
+Every level write (a build, a compaction, a delete's rewrite) goes to a
+sibling temp directory that is then swapped in by :func:`_swap_in`, so a
+reader never sees a partly written level, and a write that fails or
+produces nothing leaves the old level as it was. The swap is atomic per
+level, not per ladder: a build that fails at a coarse level leaves the
+finer levels new and that level and the coarser ones old.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -60,7 +71,6 @@ class Ladder:
         unknowable N (``-1``); only ``date=`` entries → flat (``0``).
         ``None`` = nothing materialized yet."""
         import json
-        import os
 
         try:
             with open(self.manifest_path()) as fh:
@@ -141,14 +151,23 @@ def build_ladder(
     *,
     ts_col: str = "ts",
     value_col: str = "value",
-) -> None:
+) -> bool:
     """Materialize every archive level, fine→coarse, each cascaded from the
-    previous (never re-reading raw — reference O4 semantics)."""
+    previous (never re-reading raw — reference O4 semantics), each written
+    beside the old level and swapped in (:func:`_swap_in`).
+
+    Returns True when every level was written. Returns False when the
+    input is empty: the fine level's write then holds no parquet file, so
+    it is discarded, nothing coarser is built and a prior ladder at the
+    same root stays readable as it was."""
     steps = sorted(a.step_seconds for a in ladder.archives)
     prev: DataFrame | None = None
     prev_step: int | None = None
     for step in steps:
-        if prev is None:
+        if prev is None or step % prev_step != 0:
+            # the fine level, and any level whose step is not a multiple
+            # of the previous one (cascade needs aligned buckets; such
+            # ladders are legal in the reference too), aggregate raw
             level = rollup_partials(
                 points,
                 key_cols=list(ladder.key_cols),
@@ -157,34 +176,25 @@ def build_ladder(
                 step_seconds=step,
             )
         else:
-            if step % prev_step != 0:
-                # cascade needs aligned buckets; fall back to raw for
-                # non-multiple ladders (legal in the reference too)
-                level = rollup_partials(
-                    points,
-                    key_cols=list(ladder.key_cols),
-                    ts_col=ts_col,
-                    value_col=value_col,
-                    step_seconds=step,
-                )
-            else:
-                level = cascade(
-                    prev, key_cols=list(ladder.key_cols), step_seconds=step
-                )
+            level = cascade(
+                prev, key_cols=list(ladder.key_cols), step_seconds=step
+            )
         out = level.withColumn(
             "date", F.to_date(F.timestamp_seconds(F.col("bucket_ts")))
         )
         if ladder.metric_buckets > 0:
             out = out.withColumn("mbucket", ladder.bucket_expr())
-        (
-            # sort by metric within each date partition: parquet min/max
-            # row-group statistics then prune metric-filtered fetches
-            # (SURVEY §4.2 "bucket or Z-order by metric")
-            out.sortWithinPartitions("metric" if "metric" in out.columns else ladder.key_cols[0])
-            .write.mode("overwrite")
-            .partitionBy(*ladder.partition_cols)
-            .parquet(ladder.level_path(step))
+        # sort by metric within each date partition: parquet min/max
+        # row-group statistics then prune metric-filtered fetches
+        # (SURVEY §4.2 "bucket or Z-order by metric")
+        out = out.sortWithinPartitions(
+            "metric" if "metric" in out.columns else ladder.key_cols[0]
         )
+        if not _swap_in(
+            ladder.level_path(step),
+            lambda tmp: out.write.partitionBy(*ladder.partition_cols).parquet(tmp),
+        ):
+            return False
         # Cascade the next level from the level just MATERIALIZED, not from
         # its unevaluated plan: `prev = level` made every coarser build
         # re-run this level's aggregation from raw (the exact re-read O4
@@ -197,6 +207,69 @@ def build_ladder(
         )
         prev_step = step
     _write_layout_manifest(ladder)
+    return True
+
+
+def _parquet_files(path: str) -> dict[str, int]:
+    """Parquet file count per directory under ``path`` that holds any
+    (empty when there is none, or no ``path``)."""
+    per_leaf: dict[str, int] = {}
+    for root, _, files in os.walk(path):
+        n = sum(1 for f in files if f.endswith(".parquet"))
+        if n:
+            per_leaf[root] = n
+    return per_leaf
+
+
+def _swap_in(path: str, write: Callable[[str], object] | None) -> bool:
+    """Replace the directory ``path`` whole. ``write(tmp)`` writes the new
+    content to a sibling temp directory, which then takes ``path``'s place
+    (rename the old directory away, rename the new one in, delete the old
+    one), so a reader sees the old content or the new, never a mix;
+    between the two renames ``path`` is briefly absent.
+
+    A temp directory that holds no parquet file is not swapped in (a
+    reader could not infer a schema from it): it is removed, ``path`` is
+    left as it was and the result is False. The temp directory is removed
+    too when ``write`` raises. ``write=None`` removes ``path``, renamed
+    away first so that it is never seen half-deleted."""
+    tag = uuid.uuid4().hex[:8]
+    tmp, old = f"{path}__new_{tag}", f"{path}__old_{tag}"
+    if write is not None:
+        try:
+            write(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if not _parquet_files(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+            return False
+    existed = os.path.isdir(path)
+    if existed:
+        os.rename(path, old)
+    if write is not None:
+        os.rename(tmp, path)
+    if existed:
+        shutil.rmtree(old)
+    return True
+
+
+def _rewrite(
+    df: DataFrame, key: str, max_records_per_file: int
+) -> Callable[[str], object]:
+    """The writer every compaction and delete rewrite shares: one task per
+    partition, sorted by series key and time, written partitioned by the
+    layout columns the DISK has (partition discovery put them in
+    ``df.columns``), never by the configured layout — a misconfigured
+    Ladder must not re-shape a level."""
+    parts = [c for c in ("mbucket", "date") if c in df.columns]
+    return lambda tmp: (
+        df.repartition(*parts)
+        .sortWithinPartitions(key, "bucket_ts")
+        .write.partitionBy(*parts)
+        .option("maxRecordsPerFile", max_records_per_file)
+        .parquet(tmp)
+    )
 
 
 def _write_layout_manifest(ladder: Ladder) -> None:
@@ -205,7 +278,6 @@ def _write_layout_manifest(ladder: Ladder) -> None:
     ``metric_buckets`` over the on-disk truth). Lives at the ladder
     root — level swaps never touch it."""
     import json
-    import os
 
     os.makedirs(ladder.root, exist_ok=True)
     tmp = ladder.manifest_path() + ".tmp"
@@ -231,8 +303,6 @@ def expire_retention(ladder: Ladder, *, now_ts: int) -> dict[int, list[str]]:
     no compaction), exactly why the date-partitioned layout was chosen.
     """
     import datetime as dt
-    import os
-    import shutil
 
     dropped: dict[int, list[str]] = {}
     for a in ladder.archives:
@@ -279,29 +349,17 @@ def compact_level(
     into O(1) files, re-sorted by metric so parquet row-group min/max
     statistics prune metric-filtered fetches again (SURVEY §4.2).
 
-    Rewrites into a temp directory and atomically swaps, so readers never
-    see a partial level and the job is restart-safe. Returns
+    Rewrites into a temp directory and swaps it in (:func:`_swap_in`), so
+    readers never see a partial level and the job is restart-safe. Returns
     ``(files_before, files_after)``.
 
     Scale note: ``repartition("date")`` gives one task (→ one file) per
     date; at 100 TB repartition on (date, metric-hash-bucket) instead and
     raise ``max_records_per_file`` so each partition compacts in parallel.
     """
-    import os
-    import shutil
-    import uuid
-
     path = ladder.level_path(step_seconds)
-
-    def _count_files(p: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    before = _count_files(path)
+    per_leaf = _parquet_files(path)
+    before = sum(per_leaf.values())
     # Short-circuit when there is nothing to merge: every partition dir
     # already holds at most one file (the state build_ladder leaves a
     # freshly built level in — its write lands one file per date at local
@@ -317,38 +375,17 @@ def compact_level(
     # the streaming upsert sink only ever ADDS files, making the leaf
     # multi-file and ineligible for the skip). A future single-file
     # replace writer must keep that sort order or drop a marker to force
-    # the rewrite. (b) The count below is a driver-side local-FS walk —
+    # the rewrite. (b) The count above is a driver-side local-FS walk —
     # O(files) and local-only, fine for this project's store; a 100 TB
     # deployment gets file counts from the table format's manifest
     # (Iceberg/Delta) instead of listing.
-    per_leaf: dict[str, int] = {}
-    for root, _, files in os.walk(path):
-        n = sum(1 for f in files if f.endswith(".parquet"))
-        if n:
-            per_leaf[root] = n
     # An empty level (an expire dropped every date partition) has nothing
     # to rewrite, and spark.read.parquet on it could not infer a schema.
     if not per_leaf or max(per_leaf.values()) <= 1:
         return before, before
     df = spark.read.parquet(path)
-    sort_key = ladder.key_cols[0]
-    tmp = f"{path}__compacting_{uuid.uuid4().hex[:8]}"
-    # partition by what the DISK has, never the configured layout (a
-    # misconfigured Ladder must not re-shape a level on compaction)
-    parts = [c for c in ("mbucket", "date") if c in df.columns]
-    (
-        df.repartition(*parts)
-        .sortWithinPartitions(sort_key, "bucket_ts")
-        .write.mode("overwrite")
-        .partitionBy(*parts)
-        .option("maxRecordsPerFile", max_records_per_file)
-        .parquet(tmp)
-    )
-    old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return before, _count_files(path)
+    _swap_in(path, _rewrite(df, ladder.key_cols[0], max_records_per_file))
+    return before, sum(_parquet_files(path).values())
 
 
 def delete_metrics(
@@ -363,10 +400,10 @@ def delete_metrics(
     surface (and the execute half of the GDPR erasure story whose audit
     is ``gdpr_erasure_audit``): rewrite every ladder level WITHOUT the
     series matching ``metric_regex`` (or the exact names in
-    ``metrics``). Uses the same rewrite-to-temp-then-atomic-swap
-    discipline as :func:`compact_level` (readers never see a partial
-    level; restart-safe). Returns deleted row counts per step for the
-    erasure receipt.
+    ``metrics``). Each level is rewritten to a temp directory and swapped
+    in (:func:`_swap_in`), as in :func:`compact_level` (readers never see
+    a partial level; restart-safe). Returns deleted row counts per step
+    for the erasure receipt.
 
     Scale path: with ``metrics`` (exact names — the normal GDPR shape)
     on a BUCKETED ladder (``metric_buckets > 0``), only the hash
@@ -376,10 +413,6 @@ def delete_metrics(
     same atomicity. A regex delete (or a flat ladder) rewrites the whole
     level: the regex's matches can live in any bucket.
     """
-    import os
-    import shutil
-    import uuid
-
     if (metric_regex is None) == (metrics is None):
         raise ValueError("exactly one of metric_regex/metrics")
     if metrics is not None and ladder.metric_buckets > 0:
@@ -412,36 +445,16 @@ def delete_metrics(
         deleted[a.step_seconds] = n_del
         if n_del == 0:
             continue
-        tmp = f"{path}__deleting_{uuid.uuid4().hex[:8]}"
-        if n_del == int(n_total):
-            # Every series in the level matched. A partitionBy write of an
-            # empty frame leaves only _SUCCESS (zero parquet footers), and
-            # the next spark.read.parquet on the level — fetch, compaction,
-            # a later delete — dies with "Unable to infer schema". Write
-            # the empty frame UNPARTITIONED instead so at least one footer
-            # carries the schema (round-7 ADVICE fix); the swap below is
-            # unchanged.
-            spark.createDataFrame([], df.schema).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-        else:
-            # partition by what the DISK has (partition discovery put
-            # mbucket/date in df.columns), not by the configured layout —
-            # a misconfigured Ladder must never silently re-shape a level
-            parts = [c for c in ("mbucket", "date") if c in df.columns]
-            (
-                df.where(~hit)
-                .repartition(*parts)
-                .sortWithinPartitions(ladder.key_cols[0], "bucket_ts")
-                .write.mode("overwrite")
-                .partitionBy(*parts)
-                .option("maxRecordsPerFile", max_records_per_file)
-                .parquet(tmp)
-            )
-        old = f"{path}__old_{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
+        # Every series in the level matched: a partitionBy write of an
+        # empty frame leaves zero parquet footers, which the swap refuses
+        # (no later read could infer a schema). Write the empty frame
+        # UNPARTITIONED instead so one footer carries the schema.
+        _swap_in(
+            path,
+            (lambda tmp: spark.createDataFrame([], df.schema).write.parquet(tmp))
+            if n_del == int(n_total)
+            else _rewrite(df.where(~hit), ladder.key_cols[0], max_records_per_file),
+        )
     return deleted
 
 
@@ -461,10 +474,6 @@ def _delete_exact_bucketed(
     mixed depths); if that removes the LAST bucket, the level root gets
     a single-footer empty frame so it stays readable — the same guard
     as the flat path."""
-    import os
-    import shutil
-    import uuid
-
     affected = ladder.buckets_for(spark, list(metrics))
     key = ladder.key_cols[0]
     deleted: dict[int, int] = {}
@@ -488,64 +497,25 @@ def _delete_exact_bucketed(
                 schema = bdf.withColumn(
                     "mbucket", F.lit(0).cast("int")
                 ).schema
-                # same atomic-swap discipline as the partial branch: a
-                # reader must see the bucket whole or gone, never a
+                # a reader must see the bucket whole or gone, never a
                 # half-rmtree'd directory (ADVICE r7)
-                old = f"{bpath}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(bpath, old)
-                shutil.rmtree(old)
+                _swap_in(bpath, None)
             else:
-                tmp = f"{bpath}__deleting_{uuid.uuid4().hex[:8]}"
-                (
-                    bdf.where(~hit)
-                    .repartition("date")
-                    .sortWithinPartitions(key, "bucket_ts")
-                    .write.mode("overwrite")
-                    .partitionBy("date")
-                    .option("maxRecordsPerFile", max_records_per_file)
-                    .parquet(tmp)
+                _swap_in(
+                    bpath, _rewrite(bdf.where(~hit), key, max_records_per_file)
                 )
-                old = f"{bpath}__old_{uuid.uuid4().hex[:8]}"
-                os.rename(bpath, old)
-                os.rename(tmp, bpath)
-                shutil.rmtree(old)
         if total and not any(
             e.startswith("mbucket=") for e in os.listdir(path)
         ):
             # every bucket vanished: leave one footer so the level stays
             # readable (mbucket/date become ordinary columns of an empty
             # frame, as in the flat path's all-deleted guard)
-            spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-                path
+            _swap_in(
+                path,
+                lambda tmp: spark.createDataFrame([], schema).write.parquet(tmp),
             )
         deleted[a.step_seconds] = total
     return deleted
-
-
-def ladder_info(spark: SparkSession, ladder: Ladder) -> DataFrame:
-    """Reference ``kenshin-info`` / header read (SURVEY §2.1 S6): one row
-    per archive level with its configuration and materialized extent."""
-    rows = []
-    for a in sorted(ladder.archives, key=lambda x: x.step_seconds):
-        try:
-            lvl = spark.read.parquet(ladder.level_path(a.step_seconds))
-            stats = lvl.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.countDistinct(*[F.col(c) for c in ladder.key_cols]).alias("metrics"),
-                F.min("bucket_ts").alias("min_ts"),
-                F.max("bucket_ts").alias("max_ts"),
-            ).first()
-            rows.append(
-                (a.step_seconds, a.points, a.retention_seconds,
-                 stats["rows"], stats["metrics"], stats["min_ts"], stats["max_ts"])
-            )
-        except Exception:
-            rows.append((a.step_seconds, a.points, a.retention_seconds, 0, 0, None, None))
-    return spark.createDataFrame(
-        rows,
-        "step_seconds long, points long, retention_seconds long, "
-        "rows long, metrics long, min_ts long, max_ts long",
-    )
 
 
 def load_levels(spark: SparkSession, ladder: Ladder) -> dict[int, DataFrame]:

@@ -10,8 +10,7 @@ Spark mapping: policy assignment is a deterministic expression evaluated at
 ingest — a ``coalesce(when-chain)`` over the ordered patterns. The policy
 list is driver-side config (tens of entries), so a when-chain is strictly
 better than a join: it inlines into whole-stage codegen with zero shuffle
-and zero broadcast. (A broadcast join variant is provided for very large
-policy lists.)
+and zero broadcast.
 
 Scale notes (100 TB): the when-chain evaluates per input row inside the scan
 stage; regex matching is the only cost. On a real deployment the assignment
@@ -61,47 +60,15 @@ def assign_policy(
 
     First-match-wins over the *ordered* list — encoded as a cascaded
     ``when`` chain, which Catalyst evaluates top-down exactly like the
-    reference's ordered regex scan.
+    reference's ordered regex scan. A row no pattern matches (a null
+    metric included) gets ``'default'``. The match-everything pattern
+    ``.*`` is spelled ``metric IS NOT NULL`` (the same rows), so a filter
+    on its policy folds to that predicate instead of a regex.
     """
+    col = F.col(metric_col)
     acc = None
     for p in policies:
-        cond = F.col(metric_col).rlike(p.pattern)
+        cond = col.isNotNull() if p.pattern == ".*" else col.rlike(p.pattern)
         acc = F.when(cond, F.lit(p.name)) if acc is None else acc.when(cond, F.lit(p.name))
     expr = acc.otherwise(F.lit(DEFAULT_POLICY.name)) if acc is not None else F.lit(DEFAULT_POLICY.name)
     return df.withColumn(out_col, expr)
-
-
-def policies_dim(spark, policies: list[Policy]) -> DataFrame:
-    """Policies as a broadcastable dimension table (priority = list order),
-    for deployments where the list is too large for a when-chain. Join
-    pattern: rlike non-equi → min(priority) per metric."""
-    rows = [
-        (i, p.name, p.pattern, list(p.steps), p.agg, float(p.xff))
-        for i, p in enumerate(policies)
-    ]
-    return spark.createDataFrame(
-        rows, "priority int, name string, pattern string, steps array<int>, agg string, xff double"
-    )
-
-
-def assign_policy_via_join(
-    df: DataFrame, dim: DataFrame, *, metric_col: str = "metric", out_col: str = "policy"
-) -> DataFrame:
-    """Join-based first-match assignment: broadcast NLJ on ``regexp_like``
-    then keep the minimum-priority match per row (ties impossible: priority
-    is unique). Falls back to 'default' when nothing matches. A synthetic
-    row id keeps duplicate input rows distinct through the group-by."""
-    with_id = df.withColumn("__rid", F.monotonically_increasing_id())
-    matched = with_id.join(
-        F.broadcast(dim),
-        F.regexp_like(F.col(metric_col), dim["pattern"]),
-        "left",
-    )
-    best = F.min(F.struct(dim["priority"], dim["name"].alias("_pname")))
-    keys = [F.col(c) for c in with_id.columns]
-    return (
-        matched.groupBy(*keys)
-        .agg(best.alias("_best"))
-        .withColumn(out_col, F.coalesce(F.col("_best._pname"), F.lit(DEFAULT_POLICY.name)))
-        .drop("_best", "__rid")
-    )

@@ -527,10 +527,10 @@ def test_engine_render_pie(spark, tmp_path):
 
 
 def test_engine_write_observe_bounds(spark, tmp_path):
-    """r16: observe_bounds returns the EXACT raw min/max epoch seconds,
-    on single-policy (fast path) and multi-policy (per-policy
-    observations combined) engines, without a separate bounds scan; an
-    empty write raises a ValueError naming the store root."""
+    """observe_bounds returns the EXACT raw min/max epoch seconds, on
+    single-policy and multi-policy (per-policy observations combined)
+    engines, without a separate bounds scan; an empty write raises a
+    ValueError naming the store root."""
     pts = _points(spark)
     es = F.unix_timestamp("ts").cast("long")
     expect = pts.agg(F.min(es), F.max(es)).first()
@@ -563,9 +563,9 @@ def test_engine_write_observe_bounds(spark, tmp_path):
 
 
 def test_engine_write_single_policy_pattern_filter(spark, tmp_path):
-    """r16 fast path: a single NON-'.*' policy writes exactly the
-    rlike-matching rows (the old when-chain membership), and a policy
-    named 'default' absorbs everything regardless of pattern."""
+    """A single NON-'.*' policy writes exactly the rlike-matching rows
+    (first-match routing), and a policy named 'default' absorbs
+    everything regardless of pattern."""
     pts = _points(spark)
     sel = Engine(
         spark,
@@ -604,14 +604,11 @@ _T0 = 1_700_006_400  # a UTC midnight
 _SLOTS = 3 * 288  # three days at 5 min
 
 
-def _svc_engine(spark, tmp_path):
-    """svc.h{0,1}.m{0..3} at 5 min over three days, written through
-    ``Engine.write`` into one 300 s / 1 h / 1 d policy with 288 points
-    per level (the benchmark's ``dashboard`` store shape, smaller).
-    Returns ``(engine, now)`` with ``now`` the last written slot."""
+def _svc_points(spark):
+    """svc.h{0,1}.m{0..3} at 5 min over three days."""
     ids = spark.range(2 * 4 * _SLOTS)
     series = F.floor(F.col("id") / _SLOTS).cast("int")
-    pts = ids.select(
+    return ids.select(
         F.format_string(
             "svc.h%d.m%d", (series / 4).cast("int"), series % 4
         ).alias("metric"),
@@ -620,13 +617,20 @@ def _svc_engine(spark, tmp_path):
         ((series * 97) % 13 * 10 + F.col("id") % 7).cast("double")
         .alias("value"),
     )
+
+
+def _svc_engine(spark, tmp_path):
+    """:func:`_svc_points` written through ``Engine.write`` into one
+    300 s / 1 h / 1 d policy with 288 points per level (the benchmark's
+    ``dashboard`` store shape, smaller). Returns ``(engine, now)`` with
+    ``now`` the last written slot."""
     eng = Engine(
         spark,
         str(tmp_path / "svc"),
         policies=[Policy("svc", r"^svc\.", steps=(300, 3600, 86400))],
         points_per_level=288,
     )
-    eng.write(pts)
+    eng.write(_svc_points(spark))
     return eng, _T0 + (_SLOTS - 1) * 300
 
 
@@ -704,3 +708,33 @@ def test_policy_rejects_unknown_agg():
     with pytest.raises(ValueError, match="'means'.*'avg'"):
         Policy("means", ".*", agg="avg")
     assert Policy("ok", ".*", agg="max").agg == "max"
+
+
+def test_single_policy_write_job_count(spark, tmp_path):
+    """A single-policy write runs its ladder build and no emptiness
+    probe: 9 jobs for a rewrite of the three-level svc store (10 with
+    the former take(1) probe)."""
+    eng, _ = _svc_engine(spark, tmp_path)
+    pts = _svc_points(spark)
+    counts = [_count_jobs(spark, lambda: eng.write(pts)) for _ in range(2)]
+    assert counts == [9, 9]
+
+
+def test_policy_for_agrees_with_write_routing(spark, tmp_path):
+    """``policy_for`` routes as ``write`` does: the first matching
+    pattern, else the policy named 'default', else a ValueError naming
+    the metric (``write`` stores no point of it)."""
+    svc = Policy("svc", r"^svc\.", steps=(3600,))
+    only = Engine(spark, str(tmp_path / "only"), policies=[svc])
+    assert only.info("svc.a")["policy"] == "svc"
+    with pytest.raises(ValueError, match="cap.x"):
+        only.info("cap.x")
+
+    fallback = Engine(
+        spark,
+        str(tmp_path / "fallback"),
+        policies=[Policy("default", r"^zzz\.", steps=(60,)), svc],
+    )
+    assert fallback.policy_for("svc.a").name == "svc"
+    assert fallback.policy_for("cap.x").name == "default"
+    assert fallback.info("cap.x")["archives"][0]["step_seconds"] == 60

@@ -4,7 +4,9 @@ cascade-vs-direct equality on the materialized tables (SURVEY §5.2.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.operators.fetch import Archive
@@ -13,7 +15,6 @@ from kenshin_backup_spark.operators.ladder import (
     build_ladder,
     expire_retention,
     fetch_from_ladder,
-    ladder_info,
     load_levels,
 )
 from kenshin_backup_spark.operators.rollup import finalize, rollup_partials
@@ -59,8 +60,8 @@ def test_ladder_build_and_fetch(spark, tmp_path):
 
 def test_retention_expiry_and_info(spark, tmp_path):
     """Reference ring-buffer expiry: partitions wholly older than a level's
-    retention horizon are dropped (file-level, no rewrite); ladder_info
-    reflects the shrunken extent (the kenshin-info read)."""
+    retention horizon are dropped (file-level, no rewrite), and each
+    level's extent shrinks accordingly."""
     ladder = Ladder(
         root=str(tmp_path / "ladder_exp"),
         # 60s × 60 points = 1h retention; 3600s × 48 = 2d retention
@@ -82,11 +83,11 @@ def test_retention_expiry_and_info(spark, tmp_path):
     assert len(dropped[60]) == 3
     assert len(dropped[3600]) == 2
 
-    info = {r["step_seconds"]: r for r in ladder_info(spark, ladder).collect()}
-    assert info[60]["min_ts"] >= 3 * 86_400
-    assert info[3600]["min_ts"] >= 2 * 86_400
-    assert info[60]["metrics"] == 1
-    assert info[3600]["retention_seconds"] == 48 * 3600
+    levels = load_levels(spark, ladder)
+    fine = levels[60].agg(F.min("bucket_ts"), F.countDistinct("metric")).first()
+    assert fine[0] >= 3 * 86_400
+    assert fine[1] == 1
+    assert levels[3600].agg(F.min("bucket_ts")).first()[0] >= 2 * 86_400
 
 
 def test_compact_level_preserves_fetch(spark, tmp_path):
@@ -294,9 +295,8 @@ def test_bucketed_ladder_expiry_and_compaction(spark, tmp_path):
     now = 4 * 86_400
     dropped = expire_retention(ladder, now_ts=now)
     assert len(dropped[60]) == 3 and len(dropped[3600]) == 2
-    info = {r["step_seconds"]: r
-            for r in ladder_info(spark, ladder).collect()}
-    assert info[60]["min_ts"] >= 3 * 86_400
+    fine = load_levels(spark, ladder)[60]
+    assert fine.agg(F.min("bucket_ts")).first()[0] >= 3 * 86_400
 
     before, after = compact_level(spark, ladder, 3600)
     assert after <= before
@@ -392,3 +392,62 @@ def test_layout_manifest_guards_bucket_pruning(spark, tmp_path):
             fh.write(corrupt)
         assert bkt.on_disk_metric_buckets() == -1  # inferred from mbucket=
         assert bkt.verified_bucketed() is False
+
+
+def _level_rows(spark, ladder):
+    return {
+        step: lvl.agg(F.sum("cnt")).first()[0]
+        for step, lvl in load_levels(spark, ladder).items()
+    }
+
+
+def test_build_ladder_on_empty_input_keeps_prior_ladder(spark, tmp_path):
+    """An empty build writes nothing: every level of the prior ladder
+    stays readable with its rows, and build_ladder reports False."""
+    ladder = Ladder(
+        root=str(tmp_path / "empty_rebuild"),
+        archives=(Archive(60, 200), Archive(600, 200)),
+    )
+    pts = _points(spark)
+    assert build_ladder(pts, ladder) is True
+    before = _level_rows(spark, ladder)
+    assert build_ladder(pts.where(F.lit(False)), ladder) is False
+    assert _level_rows(spark, ladder) == before
+    assert sorted(os.listdir(ladder.root)) == [
+        "_kenshin_layout.json", "step=60", "step=600",
+    ]
+
+
+def test_failed_level_write_keeps_prior_level(spark, tmp_path, monkeypatch):
+    """A build whose coarse-level write raises leaves that level with its
+    prior rows (levels swap in one at a time, so the fine level already
+    holds the new build) and no temp directory under the ladder root."""
+    import kenshin_backup_spark.operators.ladder as ladder_mod
+
+    ladder = Ladder(
+        root=str(tmp_path / "faulty"),
+        archives=(Archive(60, 200), Archive(600, 200)),
+    )
+    pts = _points(spark)
+    build_ladder(pts, ladder)
+    before = _level_rows(spark, ladder)
+
+    real_cascade = ladder_mod.cascade
+
+    def failing_cascade(prev, **kw):
+        return real_cascade(prev, **kw).withColumn(
+            "boom", F.raise_error(F.lit("injected level-2 write failure"))
+        )
+
+    monkeypatch.setattr(ladder_mod, "cascade", failing_cascade)
+    doubled = pts.unionByName(pts)
+    with pytest.raises(Exception, match="injected level-2 write failure"):
+        build_ladder(doubled, ladder)
+
+    after = _level_rows(spark, ladder)
+    assert after[600] == before[600]
+    assert after[60] == 2 * before[60]
+    leftovers = [
+        d for _, dirs, _ in os.walk(ladder.root) for d in dirs if "__" in d
+    ]
+    assert leftovers == []

@@ -106,28 +106,35 @@ def test_upsert_rollup_partitions_multibatch(spark, tmp_path):
 
 
 def test_policy_join_variant_equals_when_chain(spark):
-    """assign_policy_via_join (broadcast rlike + min-priority) must agree
-    with the codegen when-chain on overlapping patterns."""
-    from kenshin_backup_spark.operators.policies import (
-        Policy,
-        assign_policy,
-        assign_policy_via_join,
-        policies_dim,
-    )
+    """assign_policy (the codegen when-chain) must agree with a plain
+    Python first-match scan on overlapping patterns, with and without a
+    trailing match-everything '.*' policy; a metric nothing matches, a
+    null one included, gets 'default'."""
+    import re
 
-    policies = [
+    from kenshin_backup_spark.operators.policies import Policy, assign_policy
+
+    overlapping = [
         Policy(name="p0", pattern="^a"),
         Policy(name="p1", pattern="b$"),
         Policy(name="p2", pattern="meta"),
     ]
-    df = spark.createDataFrame(
-        [(m,) for m in ["abc", "ab", "zzb", "metal", "none"]], "metric string"
-    )
-    chain = {r["metric"]: r["policy"] for r in assign_policy(df, policies).collect()}
-    dim = policies_dim(spark, policies)
-    joined = {r["metric"]: r["policy"] for r in
-              assign_policy_via_join(df, dim).collect()}
-    assert chain == joined
+    names = ["abc", "ab", "zzb", "metal", "none", None]
+    df = spark.createDataFrame([(m,) for m in names], "metric string")
+    for policies in (overlapping, overlapping + [Policy(name="rest", pattern=".*")]):
+        chain = {
+            r["metric"]: r["policy"]
+            for r in assign_policy(df, policies).collect()
+        }
+        oracle = {
+            m: next(
+                (p.name for p in policies
+                 if m is not None and re.search(p.pattern, m)),
+                "default",
+            )
+            for m in names
+        }
+        assert chain == oracle
 
 
 def test_watermark_drops_late_data(spark, tmp_path):
