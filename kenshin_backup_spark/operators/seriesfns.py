@@ -66,6 +66,83 @@ def _qsum(q) -> Column:
     return F.sum(q.cast("decimal(38,0)"))
 
 
+#: Quantization for second-moment sums: value·1e3 keeps Σq² far below 2^63
+#: even for million-point series (see Bollinger-band precedent).
+_STDEV_QUANT = 1_000
+
+#: graphite's alternative spellings of the same statistic
+_KERNEL_ALIASES = {
+    "total": "sum", "average": "avg", "rangeOf": "range", "current": "last",
+}
+
+
+def _kernel(func: str) -> Column:
+    """The one definition of each aggregate statistic over ``value``,
+    for any grouping: per series (grouped by ``metric``), per bucket
+    across series, or per coarse bucket (``summarize``). Callers keep
+    their own accepted-name sets and error texts.
+
+    - ``sum``/``avg`` add BIGINT quanta from the grid-exact ``qfloor``:
+      zero error on values already on the 1e-6 grid, the same integers
+      in the DuckDB mirror (``qfloor_sql``); ``avg`` divides
+      sequentially, SUM/1e6/COUNT, as the oracles do (float division is
+      not associative); gap slots leave the denominator (safeAvg).
+    - ``last`` is the time-last non-gap value (arg-max by ``bucket_ts``).
+    - ``median`` is graphite's safeMedian: the mean of the two middles
+      for an even count, not the NIST rank percentile.
+    - ``stddev`` is the population stdev from exact integer moments
+      (Σq, Σq² at 1e3 quantization), order-insensitive so partial
+      aggregation is safe. Σq² accumulates in DECIMAL(38,0) (an int64 q²
+      overflows, erroring under ANSI, beyond |value| ≈ 3e6; DuckDB's
+      SUM(BIGINT) is HUGEINT, so oracles need no change), and through
+      ``try_sum``, so an out-of-envelope magnitude gaps instead of
+      crashing (see :func:`series_stdev`)."""
+    f = _KERNEL_ALIASES.get(func, func)
+    v = F.col("value")
+    if f in ("sum", "avg"):
+        q = qfloor("value")
+        total = _qsum(q) / F.lit(float(QUANT))
+        return (total if f == "sum" else total / F.count(q)).cast("double")
+    if f == "max":
+        return F.max(v)
+    if f == "min":
+        return F.min(v)
+    if f == "count":
+        return F.count(v).cast("double")
+    if f == "range":
+        return (F.max(v) - F.min(v)).cast("double")
+    if f == "last":
+        return F.max(
+            F.when(
+                v.isNotNull(),
+                F.struct(F.col("bucket_ts").alias("t"), v.alias("v")),
+            )
+        )["v"]
+    if f == "median":
+        arr = F.array_sort(F.collect_list(F.when(v.isNotNull(), v)))
+        n = F.size(arr)
+        mid = (n / 2).cast("int")  # 0-based middle, matching len//2
+        return F.when(
+            n == 0, F.lit(None).cast("double")
+        ).when(
+            n % 2 == 1, F.element_at(arr, mid + 1)
+        ).otherwise(
+            (F.element_at(arr, mid) + F.element_at(arr, mid + 1)) / 2.0
+        ).cast("double")
+    if f == "stddev":
+        qs = qfloor("value", _STDEV_QUANT)
+        qd = qs.cast("decimal(19,0)")
+        n = F.count(qs).cast("double")
+        s2 = F.try_sum(qd * qd)
+        var = (
+            s2.cast("double") / n - (_qsum(qs).cast("double") / n) ** 2
+        ) / F.lit(float(_STDEV_QUANT) ** 2)
+        return F.when(
+            (n > 0) & s2.isNotNull(), F.sqrt(F.greatest(var, F.lit(0.0)))
+        ).cast("double")
+    raise ValueError(f"no aggregate kernel named {func!r}")
+
+
 def time_shift(df: DataFrame, shift_seconds: int) -> DataFrame:
     """graphite ``timeShift()``: move the series along the time axis
     (negative = into the past, for period-over-period comparison)."""
@@ -248,54 +325,28 @@ def summarize(df: DataFrame, interval_seconds: int, func: str = "sum") -> DataFr
     enters the sum with zero error, so one slot of 133.26 sums to 133.26.
     """
     bucket = (F.col("bucket_ts") - (F.col("bucket_ts") % interval_seconds)).cast("long")
-    q = qfloor("value")
-    aggs = {
-        "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        # sequential divisions match _combine's oracle-mirrorable order
-        "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "max": F.max("value"),
-        "min": F.min("value"),
-        "count": F.count("value").cast("double"),
-        "last": F.max(
-            F.when(
-                F.col("value").isNotNull(),
-                F.struct(F.col("bucket_ts").alias("t"), F.col("value").alias("v")),
-            )
-        )["v"],
-    }
-    if func not in aggs:
-        raise ValueError(f"summarize func must be one of {sorted(aggs)}")
+    funcs = ("sum", "avg", "max", "min", "count", "last")
+    if func not in funcs:
+        raise ValueError(f"summarize func must be one of {sorted(funcs)}")
     return (
         df.groupBy("metric", bucket.alias("bucket_ts"))
-        .agg(aggs[func].alias("value"))
+        .agg(_kernel(func).alias("value"))
     )
 
 
-def current_value(df: DataFrame) -> DataFrame:
-    """Per-series latest non-gap value (helper for highestCurrent etc.)."""
-    cur = F.max(
-        F.when(
-            F.col("value").isNotNull(),
-            F.struct(F.col("bucket_ts").alias("t"), F.col("value").alias("v")),
-        )
+def _rank_table(df: DataFrame, func: str, col: str) -> DataFrame:
+    """``(metric, <col>, rank)``: every series ranked by its ``func``
+    aggregate, descending; ties → metric asc."""
+    keys = _series_key(df, func).withColumnRenamed("__k", col)
+    return with_global_prefix(
+        keys, [F.desc(col), F.asc("metric")], row_number_col="rank"
     )
-    return df.groupBy("metric").agg(cur["v"].alias("current"))
-
-
-def highest_current(df: DataFrame, n: int) -> DataFrame:
-    """graphite ``highestCurrent(n)``: keep the n series with the largest
-    latest value (ties → metric name asc). Returns the filtered series."""
-    cur = current_value(df)
-    top = global_topk(cur, [F.desc("current"), F.asc("metric")], n)
-    return df.join(F.broadcast(top.select("metric")), "metric")
 
 
 def sort_by_maxima(df: DataFrame) -> DataFrame:
-    """graphite ``sortByMaxima()``: rank series by their max value."""
-    mx = df.groupBy("metric").agg(F.max("value").alias("series_max"))
-    return with_global_prefix(
-        mx, [F.desc("series_max"), F.asc("metric")], row_number_col="rank"
-    )
+    """graphite ``sortByMaxima()`` as an explicit ranking table:
+    ``(metric, series_max, rank)``, by series max descending."""
+    return _rank_table(df, "max", "series_max")
 
 
 def _node(n: int):
@@ -344,20 +395,14 @@ def group_by_node(
     sharing the n-th name component, combining same-bucket values with
     ``func``. The default callback is graphite's ``average`` (r9 fix —
     it was ``sum`` here; every in-repo caller passes the callback
-    explicitly). ``average`` normalizes to the combine kernel's ``avg``.
+    explicitly).
 
-    The fast sum/avg/max/min kernels keep the original one-aggregate
-    plan; the REST of graphite's aggFuncs (median / stddev / count /
-    range / multiply / pow) route through :func:`_combine_grouped`,
-    which needs the original member names for its completeness gates
-    (r12 fuzz find: ``groupByNode(x, 0, 'median')`` was a loud reject).
-
-    One hash aggregate on (node, bucket_ts) — the merged key is coarser
-    than the input key, so this is a shrinking map-side-combinable shuffle.
+    Every graphite aggFunc routes through :func:`_combine_grouped`,
+    which keeps the original member names for its completeness gates
+    (multiply / pow). For the order-insensitive kernels this is one hash
+    aggregate on (node, bucket_ts) — the merged key is coarser than the
+    input key, so this is a shrinking map-side-combinable shuffle.
     """
-    f = "avg" if func == "average" else func
-    if f in ("sum", "avg", "max", "min"):
-        return _combine(df.withColumn("metric", _node(node)), f)
     return _combine_grouped(df.withColumn("__grp", _node(node)), func)
 
 
@@ -375,23 +420,12 @@ def average_series(df: DataFrame, name: str = "averageSeries") -> DataFrame:
 
 
 def _combine(df: DataFrame, func: str) -> DataFrame:
-    """Per-(metric, bucket) cross-series ``sum``/``avg``/``max``/``min``.
-    ``sum``/``avg`` add BIGINT quanta from the grid-exact ``qfloor``:
-    zero error on values already on the 1e-6 grid, below one quantum
-    otherwise, and the same integers in the DuckDB mirror
-    (``qfloor_sql``)."""
-    q = qfloor("value")
-    aggs = {
-        "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        # sequential divisions, matching the oracle's SUM/1e6/COUNT order
-        # (division is not associative in float)
-        "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "max": F.max("value"),
-        "min": F.min("value"),
-    }
-    if func not in aggs:
-        raise ValueError(f"combine func must be one of {sorted(aggs)}")
-    return df.groupBy("metric", "bucket_ts").agg(aggs[func].alias("value"))
+    """Per-(metric, bucket) cross-series ``sum``/``avg``/``max``/``min``
+    (the :func:`_kernel` expressions)."""
+    funcs = ("sum", "avg", "max", "min")
+    if func not in funcs:
+        raise ValueError(f"combine func must be one of {sorted(funcs)}")
+    return df.groupBy("metric", "bucket_ts").agg(_kernel(func).alias("value"))
 
 
 def exclude(df: DataFrame, pattern: str) -> DataFrame:
@@ -402,11 +436,6 @@ def exclude(df: DataFrame, pattern: str) -> DataFrame:
 def grep(df: DataFrame, pattern: str) -> DataFrame:
     """graphite ``grep(regex)``: keep only series whose name matches."""
     return df.where(F.col("metric").rlike(pattern))
-
-
-#: Quantization for second-moment sums: value·1e3 keeps Σq² far below 2^63
-#: even for million-point series (see Bollinger-band precedent).
-_STDEV_QUANT = 1_000
 
 
 def series_stdev(df: DataFrame) -> DataFrame:
@@ -462,48 +491,7 @@ def most_deviant(df: DataFrame, n: int) -> DataFrame:
 def sort_by_total(df: DataFrame) -> DataFrame:
     """graphite ``sortByTotal()``: rank series by their (quantized-exact)
     total, descending; ties → metric asc."""
-    q = qfloor("value")
-    tot = df.groupBy("metric").agg(
-        (_qsum(q) / F.lit(float(QUANT))).cast("double").alias("series_total")
-    )
-    return with_global_prefix(
-        tot, [F.desc("series_total"), F.asc("metric")], row_number_col="rank"
-    )
-
-
-def _with_series_order(df: DataFrame, key, key_desc: bool = True) -> DataFrame:
-    """Attach ``__series_order`` (1-based series rank by the aggregate
-    ``key``, ties → metric asc) to every row of the canonical frame.
-    This is how graphite's ORDERING composes through a DataFrame, which
-    has no row order: sortBy* attaches the order, and order-sensitive
-    consumers (``limit``) honor it. The per-series key frame is tiny
-    (one row per series) → broadcast back. A pre-existing order (stacked
-    sortBy* calls) is replaced, as in graphite."""
-    df = df.drop("__series_order")
-    keys = df.groupBy("metric").agg(key.alias("__k"))
-    ranked = with_global_prefix(
-        keys,
-        [F.desc("__k") if key_desc else F.asc("__k"), F.asc("metric")],
-        row_number_col="__series_order",
-    )
-    return df.join(
-        F.broadcast(ranked.select("metric", "__series_order")), "metric"
-    )
-
-
-def sort_by_maxima_series(df: DataFrame) -> DataFrame:
-    """graphite ``sortByMaxima()`` in CANONICAL form: the same rows with
-    ``__series_order`` = rank by series max (the render-language variant;
-    :func:`sort_by_maxima` returns the explicit ranking table)."""
-    return _with_series_order(df, F.max("value"))
-
-
-def sort_by_total_series(df: DataFrame) -> DataFrame:
-    """graphite ``sortByTotal()`` in CANONICAL form (quantized-exact
-    totals; see :func:`sort_by_total` for the ranking-table variant)."""
-    q = qfloor("value")
-    total = (_qsum(q) / F.lit(float(QUANT))).cast("double")
-    return _with_series_order(df, total)
+    return _rank_table(df, "total", "series_total")
 
 
 def limit_series(df: DataFrame, n: int) -> DataFrame:
@@ -700,24 +688,6 @@ def as_percent_nodes(
     return out
 
 
-def min_series(df: DataFrame, name: str = "minSeries") -> DataFrame:
-    """graphite ``minSeries()``: per-bucket minimum across series."""
-    return _combine(df.withColumn("metric", F.lit(name)), "min")
-
-
-def max_series(df: DataFrame, name: str = "maxSeries") -> DataFrame:
-    """graphite ``maxSeries()``: per-bucket maximum across series."""
-    return _combine(df.withColumn("metric", F.lit(name)), "max")
-
-
-def count_series(df: DataFrame, name: str = "countSeries") -> DataFrame:
-    """graphite ``countSeries()``: per-bucket count of non-gap series."""
-    out = df.withColumn("metric", F.lit(name)).groupBy(
-        "metric", "bucket_ts"
-    ).agg(F.count("value").cast("double").alias("value"))
-    return out
-
-
 def diff_series(minuend: DataFrame, subtrahend: DataFrame) -> DataFrame:
     """graphite ``diffSeries(a, b)``: the first target minus the (summed)
     second, per bucket; missing subtrahend buckets count as 0 (graphite's
@@ -788,43 +758,6 @@ def transform_null(df: DataFrame, default: float = 0.0) -> DataFrame:
     )
 
 
-def _series_mean(df: DataFrame) -> DataFrame:
-    """Per-series quantized-exact mean over non-gap slots."""
-    q = qfloor("value")
-    return df.groupBy("metric").agg(
-        (_qsum(q) / F.lit(float(QUANT)) / F.count(q))
-        .cast("double")
-        .alias("__mean")
-    )
-
-
-def average_above(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``averageAbove(n)``: keep series whose mean exceeds n.
-    The per-series means are a tiny aggregate — broadcast semi-join back."""
-    keep = _series_mean(df).where(F.col("__mean") > threshold)
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
-def average_below(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``averageBelow(n)``: keep series whose mean is below n."""
-    keep = _series_mean(df).where(F.col("__mean") < threshold)
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
-def current_above(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``currentAbove(n)``: keep series whose latest non-gap
-    value exceeds n (``current_value`` = arg-max by bucket, tie-safe)."""
-    keep = current_value(df).where(F.col("current") > threshold)
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
-def current_below(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``currentBelow(n)``: keep series whose latest non-gap
-    value is below n."""
-    keep = current_value(df).where(F.col("current") < threshold)
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
 # --- round-5 catalog widening ----------------------------------------------
 
 
@@ -859,53 +792,6 @@ def offset_to_zero(df: DataFrame) -> DataFrame:
         df.join(F.broadcast(mins), "metric")
         .withColumn("value", (F.col("value") - F.col("__mn")).cast("double"))
         .drop("__mn")
-    )
-
-
-def range_of_series(df: DataFrame, name: str = "rangeOfSeries") -> DataFrame:
-    """graphite ``rangeOfSeries()``: per-bucket max−min across series."""
-    return (
-        df.withColumn("metric", F.lit(name))
-        .groupBy("metric", "bucket_ts")
-        .agg((F.max("value") - F.min("value")).cast("double").alias("value"))
-    )
-
-
-def stddev_series(df: DataFrame, name: str = "stddevSeries") -> DataFrame:
-    """graphite ``stddevSeries()``: per-bucket population stdev across
-    series, from exact integer moments (Σq, Σq² on quantized longs) —
-    order-insensitive, so partial aggregation is safe. Σq² accumulates in
-    DECIMAL(38,0) so values up to ~9e15 in magnitude stay exact (an int64
-    q² overflows — erroring under ANSI — beyond |value| ≈ 3e6); DuckDB's
-    SUM(BIGINT) is HUGEINT, so oracles need no change. Σq² uses
-    ``try_sum`` so escalated out-of-envelope magnitudes gap instead of
-    crashing (see :func:`series_stdev` — r12)."""
-    q = qfloor("value", _STDEV_QUANT)
-    qd = q.cast("decimal(19,0)")
-    g = (
-        df.withColumn("metric", F.lit(name))
-        .withColumn("__q", q)
-        .withColumn("__qd", qd)
-        .groupBy("metric", "bucket_ts")
-        .agg(
-            F.count("__q").alias("n"),
-            _qsum(F.col("__q")).alias("s1"),
-            F.try_sum(F.col("__qd") * F.col("__qd")).alias("s2"),
-        )
-    )
-    var = (
-        F.col("s2").cast("double") / F.col("n")
-        - (F.col("s1").cast("double") / F.col("n")) ** 2
-    ) / F.lit(float(_STDEV_QUANT) ** 2)
-    return g.select(
-        "metric",
-        "bucket_ts",
-        F.when(
-            (F.col("n") > 0) & F.col("s2").isNotNull(),
-            F.sqrt(F.greatest(var, F.lit(0.0))),
-        )
-        .cast("double")
-        .alias("value"),
     )
 
 
@@ -954,45 +840,6 @@ def multiply_series(df: DataFrame, name: str = "multiplySeries") -> DataFrame:
             .alias("value"),
         )
     )
-
-
-def lowest_current(df: DataFrame, n: int) -> DataFrame:
-    """graphite ``lowestCurrent(n)``: the n series with the smallest
-    latest value."""
-    cur = current_value(df)
-    top = global_topk(cur, [F.asc("current"), F.asc("metric")], n)
-    return df.join(F.broadcast(top.select("metric")), "metric")
-
-
-def highest_average(df: DataFrame, n: int) -> DataFrame:
-    """graphite ``highestAverage(n)`` (quantized-exact means)."""
-    means = _series_mean(df)
-    top = global_topk(means, [F.desc("__mean"), F.asc("metric")], n)
-    return df.join(F.broadcast(top.select("metric")), "metric")
-
-
-def lowest_average(df: DataFrame, n: int) -> DataFrame:
-    """graphite ``lowestAverage(n)`` (quantized-exact means)."""
-    means = _series_mean(df)
-    top = global_topk(means, [F.asc("__mean"), F.asc("metric")], n)
-    return df.join(F.broadcast(top.select("metric")), "metric")
-
-
-def minimum_above(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``minimumAbove(n)``: keep series whose minimum exceeds n."""
-    keep = df.groupBy("metric").agg(F.min("value").alias("__m")).where(
-        F.col("__m") > threshold
-    )
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
-def maximum_below(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``maximumBelow(n)``: keep series whose maximum stays
-    below n."""
-    keep = df.groupBy("metric").agg(F.max("value").alias("__m")).where(
-        F.col("__m") < threshold
-    )
-    return df.join(F.broadcast(keep.select("metric")), "metric")
 
 
 def n_percentile(df: DataFrame, p: float) -> DataFrame:
@@ -1569,8 +1416,8 @@ def average_outside_percentile(df: DataFrame, n: float) -> DataFrame:
     n = float(n)
     if n < 50.0:
         n = 100.0 - n
-    means = _series_mean(df)
-    arr = F.array_sort(F.collect_list("__mean"))
+    means = _series_key(df, "average")
+    arr = F.array_sort(F.collect_list("__k"))
     band = means.agg(arr.alias("__arr")).select(
         F.when(
             F.size("__arr") > 0,
@@ -1584,10 +1431,10 @@ def average_outside_percentile(df: DataFrame, n: float) -> DataFrame:
     keep = (
         means.crossJoin(F.broadcast(band))
         .where(
-            F.col("__mean").isNull()
+            F.col("__k").isNull()
             | F.col("__lo").isNull()
-            | (F.col("__mean") <= F.col("__lo"))
-            | (F.col("__mean") >= F.col("__hi"))
+            | (F.col("__k") <= F.col("__lo"))
+            | (F.col("__k") >= F.col("__hi"))
         )
         .select("metric")
     )
@@ -1733,18 +1580,13 @@ def alias_by_tags(df: DataFrame, *tags: str) -> DataFrame:
 def group_by_tags(df: DataFrame, func: str, *tags: str) -> DataFrame:
     """graphite ``groupByTags(func, ...)``: aggregate series over every
     tag NOT listed, keeping one output series per combination of the
-    listed tags (named ``name;tag=value;...``). Aggregation goes through
-    the same quantized ``_combine`` kernels as sum/avg/min/max
-    Series — per-bucket, shuffle keyed on the collapsed name — with the
-    rest of graphite's aggFuncs routed through :func:`_combine_grouped`
-    like group_by_node (r12)."""
+    listed tags (named ``name;tag=value;...``). Every aggFunc routes
+    through :func:`_combine_grouped`, like group_by_node — per-bucket,
+    shuffle keyed on the collapsed name."""
     name_parts: list[Column] = [series_name("metric")]
     for t in sorted(tags):
         name_parts.append(F.lit(f";{t}="))
         name_parts.append(tag_value("metric", t))
-    f = "avg" if func == "average" else func
-    if f in ("sum", "avg", "max", "min"):
-        return _combine(df.withColumn("metric", F.concat(*name_parts)), f)
     return _combine_grouped(
         df.withColumn("__grp", F.concat(*name_parts)), func
     )
@@ -2010,39 +1852,6 @@ def logarithm(df: DataFrame, base: float = 10.0) -> DataFrame:
     return df.withColumn("value", val)
 
 
-def sort_by_minima_series(df: DataFrame) -> DataFrame:
-    """graphite ``sortByMinima()``: drop series whose max ≤ 0 (graphite
-    filters them before sorting), then order ascending by series min
-    (canonical ``__series_order`` form, like the other sortBy*)."""
-    keep = (
-        df.groupBy("metric")
-        .agg(F.max("value").alias("__mx"))
-        .where(F.col("__mx") > 0)
-    )
-    kept = df.join(F.broadcast(keep.select("metric")), "metric")
-    return _with_series_order(kept, F.min("value"), key_desc=False)
-
-
-def maximum_above(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``maximumAbove(n)``: keep series whose max exceeds n."""
-    keep = (
-        df.groupBy("metric")
-        .agg(F.max("value").alias("__mx"))
-        .where(F.col("__mx") > float(threshold))
-    )
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
-def minimum_below(df: DataFrame, threshold: float) -> DataFrame:
-    """graphite ``minimumBelow(n)``: keep series whose min is below n."""
-    keep = (
-        df.groupBy("metric")
-        .agg(F.min("value").alias("__mn"))
-        .where(F.col("__mn") < float(threshold))
-    )
-    return df.join(F.broadcast(keep.select("metric")), "metric")
-
-
 def interpolate(df: DataFrame, limit: int | None = None) -> DataFrame:
     """graphite ``interpolate(limit)``: fill interior gap runs by linear
     interpolation between the surrounding non-gap points; runs longer
@@ -2238,24 +2047,10 @@ def aggregate_line(df: DataFrame, func: str = "avg") -> DataFrame:
     """graphite ``aggregateLine(func)``: replace each series with a flat
     line at its aggregate (avg/sum/min/max/last — quantized-exact for
     avg/sum). Per-series 1-row aggregate broadcast back."""
-    q = qfloor("value")
-    aggs = {
-        "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "average": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        "min": F.min("value"),
-        "max": F.max("value"),
-        "last": F.max(
-            F.when(
-                F.col("value").isNotNull(),
-                F.struct(F.col("bucket_ts").alias("t"),
-                         F.col("value").alias("v")),
-            )
-        )["v"],
-    }
-    if func not in aggs:
-        raise ValueError(f"aggregateLine func must be one of {sorted(aggs)}")
-    line = df.groupBy("metric").agg(aggs[func].alias("__line"))
+    funcs = ("avg", "average", "sum", "min", "max", "last")
+    if func not in funcs:
+        raise ValueError(f"aggregateLine func must be one of {sorted(funcs)}")
+    line = df.groupBy("metric").agg(_kernel(func).alias("__line"))
     return (
         df.join(F.broadcast(line), "metric")
         .withColumn("value", F.col("__line").cast("double"))
@@ -2328,12 +2123,9 @@ def group_by_nodes(df: DataFrame, func: str, *nodes: int) -> DataFrame:
     """graphite ``groupByNodes(func, n1, n2, ...)``: the multi-node
     generalization of :func:`group_by_node` — merge series sharing ALL
     the selected name components, combining same-bucket values with
-    ``func``. Same shrinking map-side-combinable shuffle; same full
-    kernel routing as group_by_node (r12)."""
+    ``func``. Same shrinking map-side-combinable shuffle; same
+    :func:`_combine_grouped` routing as group_by_node."""
     key = F.concat_ws(".", *[_node(n) for n in nodes])
-    f = "avg" if func == "average" else func
-    if f in ("sum", "avg", "max", "min"):
-        return _combine(df.withColumn("metric", key), f)
     return _combine_grouped(df.withColumn("__grp", key), func)
 
 
@@ -2543,15 +2335,9 @@ def cacti_style(df: DataFrame) -> DataFrame:
     Numbers are plain fixed-point ``%.2f`` (``1234.57``) — graphite never
     inserts thousands separators, so ``format_number`` (``1,234.57``)
     would diverge for any |value| >= 1000 (ADVICE r7 fix)."""
-    cur = F.max(
-        F.when(
-            F.col("value").isNotNull(),
-            F.struct(F.col("bucket_ts").alias("t"), F.col("value").alias("v")),
-        )
-    )["v"]
     stats = df.groupBy("metric").agg(
-        cur.alias("__c"), F.max("value").alias("__mx"),
-        F.min("value").alias("__mn"),
+        _kernel("last").alias("__c"), _kernel("max").alias("__mx"),
+        _kernel("min").alias("__mn"),
     )
     fmt = lambda c: F.when(  # noqa: E731
         c.isNotNull(), F.format_string("%.2f", c)
@@ -2573,14 +2359,14 @@ def cacti_style(df: DataFrame) -> DataFrame:
 
 # --- round-8 wave 4: the generic function family ----------------------------
 #
-# graphite-web 1.1 exposes generic forms (aggregate, sortBy, filterSeries,
-# highest/lowest, movingWindow, aggregateWithWildcards, *SeriesLists) whose
-# specific variants this catalog already implements; the generics dispatch
-# onto the same kernels so the two families can never drift.
+# graphite-web 1.1 defines its selector, filter, sort and combine shorthands
+# (highestCurrent, averageAbove, sortByMaxima, minSeries, …) as one-line
+# calls into these generic forms (highest/lowest, filterSeries, sortBy,
+# aggregate); the render registry does the same, over the one aggregate
+# table in :func:`_kernel`, so the two families cannot drift.
 
 #: per-series scalar aggregates shared by highest/lowest/sortBy/filterSeries
-#: (graphite's keyFunc table). 'median' follows graphite's safeMedian — the
-#: mean of the two middles for an even count, NOT the NIST rank percentile.
+#: (graphite's keyFunc table)
 _SERIES_KEY_FUNCS = (
     "average", "avg", "current", "last", "max", "min", "sum", "total",
     "median", "stddev", "count", "range", "rangeOf",
@@ -2589,65 +2375,20 @@ _SERIES_KEY_FUNCS = (
 
 def _series_key(df: DataFrame, func: str) -> DataFrame:
     """One row per series: ``(metric, __k)`` where ``__k`` is the series'
-    ``func`` aggregate (quantized-exact for mean/sum; exact integer
-    moments for stddev). Tiny frame → always broadcast back."""
+    ``func`` aggregate (:func:`_kernel`). Tiny frame → always broadcast
+    back."""
     if func not in _SERIES_KEY_FUNCS:
         raise ValueError(
             f"series key func must be one of {sorted(set(_SERIES_KEY_FUNCS))}"
         )
-    q = qfloor("value")
-    if func in ("average", "avg"):
-        key = (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double")
-    elif func in ("current", "last"):
-        key = F.max(
-            F.when(
-                F.col("value").isNotNull(),
-                F.struct(F.col("bucket_ts").alias("t"),
-                         F.col("value").alias("v")),
-            )
-        )["v"]
-    elif func == "max":
-        key = F.max("value")
-    elif func == "min":
-        key = F.min("value")
-    elif func in ("sum", "total"):
-        key = (_qsum(q) / F.lit(float(QUANT))).cast("double")
-    elif func == "median":
-        arr = F.array_sort(
-            F.collect_list(F.when(F.col("value").isNotNull(), F.col("value")))
-        )
-        n = F.size(arr)
-        mid = (n / 2).cast("int")  # 0-based middle, matching len//2
-        key = F.when(
-            n == 0, F.lit(None).cast("double")
-        ).when(
-            n % 2 == 1, F.element_at(arr, mid + 1)
-        ).otherwise(
-            (F.element_at(arr, mid) + F.element_at(arr, mid + 1)) / 2.0
-        ).cast("double")
-    elif func == "stddev":
-        qs = qfloor("value", _STDEV_QUANT)
-        qd = qs.cast("decimal(19,0)")
-        n = F.count(qs).cast("double")
-        s2 = F.try_sum(qd * qd)  # out-of-envelope → NULL key, not a crash
-        var = (
-            s2.cast("double") / n
-            - (_qsum(qs).cast("double") / n) ** 2
-        ) / F.lit(float(_STDEV_QUANT) ** 2)
-        key = F.when(
-            (n > 0) & s2.isNotNull(), F.sqrt(F.greatest(var, F.lit(0.0)))
-        ).cast("double")
-    elif func == "count":
-        key = F.count("value").cast("double")
-    else:  # range / rangeOf
-        key = (F.max("value") - F.min("value")).cast("double")
-    return df.groupBy("metric").agg(key.alias("__k"))
+    return df.groupBy("metric").agg(_kernel(func).alias("__k"))
 
 
 def highest(df: DataFrame, n: int = 1, func: str = "average") -> DataFrame:
     """graphite ``highest(n, func)``: the n series with the largest
-    per-series ``func`` aggregate (generic form of highestCurrent /
-    highestAverage / highestMax)."""
+    per-series ``func`` aggregate (ties → metric asc). highestCurrent,
+    highestAverage and highestMax are this with 'current', 'average'
+    and 'max'."""
     keys = _series_key(df, func)
     top = global_topk(keys, [F.desc("__k"), F.asc("metric")], int(n))
     return df.join(F.broadcast(top.select("metric")), "metric")
@@ -2655,24 +2396,22 @@ def highest(df: DataFrame, n: int = 1, func: str = "average") -> DataFrame:
 
 def lowest(df: DataFrame, n: int = 1, func: str = "average") -> DataFrame:
     """graphite ``lowest(n, func)``: the n series with the smallest
-    per-series ``func`` aggregate."""
+    per-series ``func`` aggregate (lowestCurrent, lowestAverage)."""
     keys = _series_key(df, func)
     top = global_topk(keys, [F.asc("__k"), F.asc("metric")], int(n))
     return df.join(F.broadcast(top.select("metric")), "metric")
 
 
-def highest_max(df: DataFrame, n: int) -> DataFrame:
-    """graphite ``highestMax(n)``: the n series with the largest maxima."""
-    return highest(df, n, "max")
-
-
 def sort_by(
     df: DataFrame, func: str = "average", reverse: bool = False
 ) -> DataFrame:
-    """graphite ``sortBy(func, reverse)``: attach ``__series_order`` by
-    the per-series ``func`` aggregate, ASCENDING unless ``reverse`` (the
-    generic form; sortByTotal/sortByMaxima are the descending
-    specials)."""
+    """graphite ``sortBy(func, reverse)``: attach ``__series_order`` (the
+    1-based series rank by the per-series ``func`` aggregate, ASCENDING
+    unless ``reverse``; ties → metric asc) to every row. This is how
+    graphite's ordering composes through a DataFrame, which has no row
+    order: order-sensitive consumers (``limit``) honor the column, and a
+    pre-existing order (stacked sorts) is replaced, as in graphite.
+    sortByMaxima and sortByTotal are this with 'max' / 'total' reversed."""
     keys = _series_key(df, func)
     ranked = with_global_prefix(
         keys,
@@ -2688,8 +2427,10 @@ def filter_series(
     df: DataFrame, func: str, operator: str, threshold: float
 ) -> DataFrame:
     """graphite ``filterSeries(func, operator, threshold)``: keep series
-    whose ``func`` aggregate satisfies the comparison (generic form of
-    averageAbove / currentBelow / maximumAbove / …)."""
+    whose ``func`` aggregate satisfies the comparison; the per-series
+    keys are a tiny aggregate, broadcast semi-joined back. averageAbove,
+    currentBelow, maximumAbove and the rest of that family are this with
+    '>' or '<'."""
     ops = {
         "=": lambda c: c == float(threshold),
         "!=": lambda c: c != float(threshold),
@@ -2710,8 +2451,9 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
     ``df`` must carry ``__grp`` (the target series name) next to the
     original ``metric``; the original name count per group gates the
     gap-completeness kernels (multiply — graphite's safeMul/safePow
-    return None when ANY member is None OR missing). Kernels are the
-    same quantized/exact-moment expressions as the specific variants.
+    return None when ANY member is None OR missing). The cross-series
+    kernels (diff, last/current, multiply, pow) are handled here; every
+    other name is one aggregate from :func:`_kernel`.
     The order-dependent kernels (diff, last/current) use the frame
     model's DOCUMENTED stand-in for graphite's series-list order — name
     order (the same deviation multiply/pow's fold order carries):
@@ -2719,24 +2461,6 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
     graphite's safeDiff (first non-gap member minus the sum of the
     rest, quantized-exact as ``(2·q_first − Σq)/1e6``)."""
     q = qfloor("value")
-    simple = {
-        "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        "total": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "average": (
-            _qsum(q) / F.lit(float(QUANT)) / F.count(q)
-        ).cast("double"),
-        "max": F.max("value"),
-        "min": F.min("value"),
-        "count": F.count("value").cast("double"),
-        "range": (F.max("value") - F.min("value")).cast("double"),
-        "rangeOf": (F.max("value") - F.min("value")).cast("double"),
-    }
-    if func in simple:
-        return (
-            df.groupBy(F.col("__grp").alias("metric"), F.col("bucket_ts"))
-            .agg(simple[func].alias("value"))
-        )
     if func in ("diff", "last", "current"):
         # bounded collect: one struct per member series per bucket —
         # series count, never data volume (the multiply/pow contract)
@@ -2777,54 +2501,6 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
             )
         return g.select(
             "metric", "bucket_ts", val.cast("double").alias("value")
-        )
-    if func == "median":
-        arr = F.array_sort(
-            F.collect_list(F.when(F.col("value").isNotNull(), F.col("value")))
-        )
-        g = df.groupBy(
-            F.col("__grp").alias("metric"), F.col("bucket_ts")
-        ).agg(arr.alias("__vals"))
-        n = F.size("__vals")
-        mid = (n / 2).cast("int")
-        return g.select(
-            "metric",
-            "bucket_ts",
-            F.when(n == 0, F.lit(None).cast("double"))
-            .when(n % 2 == 1, F.element_at("__vals", mid + 1))
-            .otherwise(
-                (F.element_at("__vals", mid)
-                 + F.element_at("__vals", mid + 1)) / 2.0
-            )
-            .cast("double")
-            .alias("value"),
-        )
-    if func == "stddev":
-        qs = qfloor("value", _STDEV_QUANT)
-        qd = qs.cast("decimal(19,0)")
-        g = (
-            df.withColumn("__q", qs)
-            .withColumn("__qd", qd)
-            .groupBy(F.col("__grp").alias("metric"), F.col("bucket_ts"))
-            .agg(
-                F.count("__q").alias("n"),
-                _qsum(F.col("__q")).alias("s1"),
-                F.try_sum(F.col("__qd") * F.col("__qd")).alias("s2"),
-            )
-        )
-        var = (
-            F.col("s2").cast("double") / F.col("n")
-            - (F.col("s1").cast("double") / F.col("n")) ** 2
-        ) / F.lit(float(_STDEV_QUANT) ** 2)
-        return g.select(
-            "metric",
-            "bucket_ts",
-            F.when(
-                (F.col("n") > 0) & F.col("s2").isNotNull(),
-                F.sqrt(F.greatest(var, F.lit(0.0))),
-            )
-            .cast("double")
-            .alias("value"),
         )
     if func in ("multiply", "pow"):
         # completeness gate: members per GROUP (not per frame), so the
@@ -2874,10 +2550,14 @@ def _combine_grouped(df: DataFrame, func: str) -> DataFrame:
             .cast("double")
             .alias("value"),
         )
-    raise ValueError(
-        "aggregate func must be one of sum/avg/min/max/median/stddev/"
-        f"count/range/multiply/pow/diff/last/current; got {func!r}"
-    )
+    if func not in _SERIES_KEY_FUNCS:
+        raise ValueError(
+            "aggregate func must be one of sum/avg/min/max/median/stddev/"
+            f"count/range/multiply/pow/diff/last/current; got {func!r}"
+        )
+    return df.groupBy(
+        F.col("__grp").alias("metric"), F.col("bucket_ts")
+    ).agg(_kernel(func).alias("value"))
 
 
 #: canonical result-name prefix per aggregate kernel (graphite wraps the
@@ -2895,9 +2575,10 @@ def aggregate_series(
     x_files_factor: float | None = None,
 ) -> DataFrame:
     """graphite ``aggregate(func[, xFilesFactor])``: combine every input
-    series into one with the named kernel — the generic form of
-    sumSeries / averageSeries / minSeries / maxSeries / multiplySeries /
-    stddevSeries / rangeOfSeries / countSeries, plus 'median'.
+    series into one with the named kernel. minSeries / maxSeries /
+    countSeries / rangeOfSeries / stddevSeries are this with their
+    kernel name (sumSeries, averageSeries and multiplySeries keep their
+    own functions, which registry queries call directly).
 
     ``x_files_factor`` (r10) is graphite's aggregateSeries gate: a
     bucket keeps its aggregate only when it has at least one value AND
@@ -3120,22 +2801,8 @@ def legend_value(df: DataFrame, *value_types: str) -> DataFrame:
             raise ValueError("legendValue unit systems are not supported")
         if vt not in fns:
             raise ValueError(f"legendValue type must be one of {sorted(fns)}")
-    q = qfloor("value")
-    aggs = {
-        "avg": (_qsum(q) / F.lit(float(QUANT)) / F.count(q)).cast("double"),
-        "sum": (_qsum(q) / F.lit(float(QUANT))).cast("double"),
-        "min": F.min("value"),
-        "max": F.max("value"),
-        "last": F.max(
-            F.when(
-                F.col("value").isNotNull(),
-                F.struct(F.col("bucket_ts").alias("t"),
-                         F.col("value").alias("v")),
-            )
-        )["v"],
-    }
     stats = df.groupBy("metric").agg(
-        *[aggs[k].alias(f"__{k}") for k in sorted(set(fns.values()))]
+        *[_kernel(k).alias(f"__{k}") for k in sorted(set(fns.values()))]
     )
     name = F.col("metric")
     for vt in value_types:

@@ -39,13 +39,6 @@ def bpe_ish_token_count(col: Column | str) -> Column:
     return (words + F.floor((chars - words * 4) / 4).cast("long")).cast("long")
 
 
-def punct_ratio(col: Column | str) -> Column:
-    """Punctuation chars / total chars (quality signal)."""
-    c = F.col(col) if isinstance(col, str) else col
-    punct = F.length(F.regexp_replace(c, r"[^.,;:!?'\"-]", ""))
-    return (punct.cast("double") / F.length(c).cast("double")).cast("double")
-
-
 #: Tiny multilingual stopword inventory for the language-id heuristic.
 #: Real deployments use fastText/cld3; the *Spark plumbing* (scan-side
 #: scoring, argmax by when-chain) is identical.

@@ -128,6 +128,7 @@ def streaming_update_sink_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kenshin_backup_spark.session import tune
     from kenshin_backup_spark.streaming.ingest import (
         bounded_file_stream,
+        start_query,
         streaming_rollup,
         write_rollup_sink,
     )
@@ -164,10 +165,9 @@ def streaming_update_sink_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replay_each_epoch: every micro-batch is applied twice (the
     # at-least-once crash-replay simulation) — the driver hash against the
     # batch oracle therefore certifies the merge-upsert is exactly-once.
-    q = (
+    q = start_query(
         write_rollup_sink(rolled, path, chk, replay_each_epoch=True)
         .trigger(availableNow=True)
-        .start()
     )
     q.awaitTermination()
     back = spark.read.parquet(path).drop("date")

@@ -193,7 +193,7 @@ def graphite_summarize_top(spark: SparkSession, sf_dir: str) -> DataFrame:
         rollup_partials(ev, key_cols=["metric"], step_seconds=600), agg="average"
     ).select("metric", "bucket_ts", "value")
     hourly = S.summarize(ten, 3600, "max")
-    top = S.highest_current(hourly, 3)
+    top = S.highest(hourly, 3, "current")
     return top.select(
         "metric", F.col("bucket_ts").cast("long").alias("bucket_ts"),
         F.col("value").cast("double").alias("value"),

@@ -218,9 +218,7 @@ def streaming_counter_resets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def streaming_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-metric running peak / drawdown as a CUSTOM STATEFUL streaming
-    operator (applyInPandasWithState; the transformWithStateInPandas twin
-    exists in streaming/stateful.py but that API's state server needs
-    protobuf, absent in this container). Unlike the EWMA/counter-reset
+    operator (applyInPandasWithState). Unlike the EWMA/counter-reset
     recurrences, running max has no float accumulation, so this stateful
     query is EXACTLY the batch window ``max() OVER (ORDER BY es,
     event_id)`` — the rare arbitrary-state operator with a full oracle."""
@@ -318,7 +316,7 @@ def streaming_sharded_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import shutil
 
-    from kenshin_backup_spark.streaming.ingest import write_sharded_sink
+    from kenshin_backup_spark.streaming.ingest import start_query, write_sharded_sink
 
     stream = _events_stream(spark, sf_dir)
     rolled = streaming_rollup(
@@ -334,13 +332,12 @@ def streaming_sharded_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # simulation); the epoch-keyed dynamic partition overwrite makes the
     # second application rewrite the same partitions, so the oracle hash
     # certifies the append sink is exactly-once under replay.
-    q = (
+    q = start_query(
         write_sharded_sink(
             rolled, path, chk, shard_col="event_type", n_shards=4,
             replay_each_epoch=True,
         )
         .trigger(availableNow=True)
-        .start()
     )
     q.awaitTermination()
     back = spark.read.parquet(path).drop("shard", "date", "epoch")

@@ -402,12 +402,14 @@ def _registry() -> dict[str, Callable]:
             sf.smart_summarize if len(s) > 2 and _to_bool(s[2])
             else sf.summarize
         )(d[0], parse_interval(s[0]), str(s[1]) if len(s) > 1 else "sum"),
-        "highestCurrent": lambda d, s: sf.highest_current(d[0], int(s[0])),
-        # canonical-frame variants: ordering rides along as
-        # __series_order so limit() composes (top-N-by-total idiom);
-        # the bare ranking tables stay available as operator functions
-        "sortByMaxima": lambda d, s: sf.sort_by_maxima_series(d[0]),
-        "sortByTotal": lambda d, s: sf.sort_by_total_series(d[0]),
+        # graphite-web's selector, filter, sort and combine shorthands
+        # are one-line calls into the generic highest/lowest,
+        # filterSeries, sortBy and aggregate; so are these. The sorts
+        # attach __series_order, so limit() composes (the
+        # top-N-by-total idiom)
+        "highestCurrent": lambda d, s: sf.highest(d[0], int(s[0]), "current"),
+        "sortByMaxima": lambda d, s: sf.sort_by(d[0], "max", reverse=True),
+        "sortByTotal": lambda d, s: sf.sort_by(d[0], "total", reverse=True),
         "aliasByNode": lambda d, s: sf.alias_by_node(d[0], *[int(x) for x in s]),
         # default callback is graphite's "average" (r9 fix)
         "groupByNode": lambda d, s: sf.group_by_node(
@@ -428,9 +430,9 @@ def _registry() -> dict[str, Callable]:
         # rejects fail LOUDLY rather than silently dropping arguments
         # (r10 ADVICE fix).
         "asPercent": lambda d, s: _as_percent_target(d, s),
-        "minSeries": lambda d, s: sf.min_series(_union(d)),
-        "maxSeries": lambda d, s: sf.max_series(_union(d)),
-        "countSeries": lambda d, s: sf.count_series(_union(d)),
+        "minSeries": lambda d, s: sf.aggregate_series(_union(d), "min"),
+        "maxSeries": lambda d, s: sf.aggregate_series(_union(d), "max"),
+        "countSeries": lambda d, s: sf.aggregate_series(_union(d), "count"),
         "diffSeries": lambda d, s: sf.diff_series(d[0], d[1]),
         "divideSeries": lambda d, s: sf.divide_series(d[0], d[1]),
         "removeAboveValue": lambda d, s: sf.remove_above_value(d[0], float(s[0])),
@@ -443,14 +445,20 @@ def _registry() -> dict[str, Callable]:
         "squareRoot": lambda d, s: sf.square_root(d[0]),
         "pow": lambda d, s: sf.pow_series(d[0], float(s[0])),
         "offsetToZero": lambda d, s: sf.offset_to_zero(d[0]),
-        "rangeOfSeries": lambda d, s: sf.range_of_series(_union(d)),
-        "stddevSeries": lambda d, s: sf.stddev_series(_union(d)),
+        "rangeOfSeries": lambda d, s: sf.aggregate_series(
+            _union(d), "range", name="rangeOfSeries"
+        ),
+        "stddevSeries": lambda d, s: sf.aggregate_series(_union(d), "stddev"),
         "multiplySeries": lambda d, s: sf.multiply_series(_union(d)),
-        "lowestCurrent": lambda d, s: sf.lowest_current(d[0], int(s[0])),
-        "highestAverage": lambda d, s: sf.highest_average(d[0], int(s[0])),
-        "lowestAverage": lambda d, s: sf.lowest_average(d[0], int(s[0])),
-        "minimumAbove": lambda d, s: sf.minimum_above(d[0], float(s[0])),
-        "maximumBelow": lambda d, s: sf.maximum_below(d[0], float(s[0])),
+        "lowestCurrent": lambda d, s: sf.lowest(d[0], int(s[0]), "current"),
+        "highestAverage": lambda d, s: sf.highest(d[0], int(s[0]), "average"),
+        "lowestAverage": lambda d, s: sf.lowest(d[0], int(s[0]), "average"),
+        "minimumAbove": lambda d, s: sf.filter_series(
+            d[0], "min", ">", float(s[0])
+        ),
+        "maximumBelow": lambda d, s: sf.filter_series(
+            d[0], "max", "<", float(s[0])
+        ),
         "nPercentile": lambda d, s: sf.n_percentile(d[0], float(s[0])),
         "removeAbovePercentile": lambda d, s: sf.remove_above_percentile(
             d[0], float(s[0]),
@@ -463,10 +471,18 @@ def _registry() -> dict[str, Callable]:
         "timeSlice": lambda d, s: sf.time_slice(
             d[0], parse_interval(s[0]), parse_interval(s[1])
         ),
-        "averageAbove": lambda d, s: sf.average_above(d[0], float(s[0])),
-        "averageBelow": lambda d, s: sf.average_below(d[0], float(s[0])),
-        "currentAbove": lambda d, s: sf.current_above(d[0], float(s[0])),
-        "currentBelow": lambda d, s: sf.current_below(d[0], float(s[0])),
+        "averageAbove": lambda d, s: sf.filter_series(
+            d[0], "average", ">", float(s[0])
+        ),
+        "averageBelow": lambda d, s: sf.filter_series(
+            d[0], "average", "<", float(s[0])
+        ),
+        "currentAbove": lambda d, s: sf.filter_series(
+            d[0], "current", ">", float(s[0])
+        ),
+        "currentBelow": lambda d, s: sf.filter_series(
+            d[0], "current", "<", float(s[0])
+        ),
         # leaf-style call — intercepted in render()'s evaluator before
         # this entry is ever invoked; present here so the name resolves
         # and SUPPORTED_FUNCTIONS lists it
@@ -510,9 +526,17 @@ def _registry() -> dict[str, Callable]:
         "logarithm": lambda d, s: sf.logarithm(
             d[0], float(s[0]) if s else 10.0
         ),
-        "sortByMinima": lambda d, s: sf.sort_by_minima_series(d[0]),
-        "maximumAbove": lambda d, s: sf.maximum_above(d[0], float(s[0])),
-        "minimumBelow": lambda d, s: sf.minimum_below(d[0], float(s[0])),
+        # graphite-web's own definition: drop series whose max is not
+        # positive, then sort ascending by min
+        "sortByMinima": lambda d, s: sf.sort_by(
+            sf.filter_series(d[0], "max", ">", 0), "min"
+        ),
+        "maximumAbove": lambda d, s: sf.filter_series(
+            d[0], "max", ">", float(s[0])
+        ),
+        "minimumBelow": lambda d, s: sf.filter_series(
+            d[0], "min", "<", float(s[0])
+        ),
         "interpolate": lambda d, s: sf.interpolate(
             d[0], int(s[0]) if s else None
         ),
@@ -594,7 +618,7 @@ def _registry() -> dict[str, Callable]:
             d[0], int(s[0]) if s else 1,
             str(s[1]) if len(s) > 1 else "average",
         ),
-        "highestMax": lambda d, s: sf.highest_max(d[0], int(s[0])),
+        "highestMax": lambda d, s: sf.highest(d[0], int(s[0]), "max"),
         "sortBy": lambda d, s: sf.sort_by(
             d[0], str(s[0]) if s else "average",
             _to_bool(s[1]) if len(s) > 1 else False,

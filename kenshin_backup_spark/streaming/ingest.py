@@ -15,10 +15,12 @@ parquet so the batch fetch path reads the same tables.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from kenshin_backup_spark.functions.deterministic import QUANT
 from kenshin_backup_spark.session import tune
@@ -92,6 +94,19 @@ def streaming_rollup(
     )
 
 
+#: Held across every streaming start() in the package, so no query starts
+#: while run_stream_to_memory has the session's no-data-batch conf off.
+_START_LOCK = threading.Lock()
+
+
+def start_query(writer: DataStreamWriter) -> StreamingQuery:
+    """``writer.start()`` under :data:`_START_LOCK`: the query starts
+    with the session's own ``noDataMicroBatches`` setting, never with
+    the complete-mode flip of a concurrent :func:`run_stream_to_memory`."""
+    with _START_LOCK:
+        return writer.start()
+
+
 def run_stream_to_memory(
     spark: SparkSession, streaming_df: DataFrame, *, output_mode: str = "complete"
 ) -> DataFrame:
@@ -105,29 +120,36 @@ def run_stream_to_memory(
     """
     tune(spark)
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    # COMPLETE mode re-emits the entire aggregation state on every
-    # micro-batch, so the trailing no-data batch (whose only job is to
-    # advance the watermark for append-mode finalization / state
-    # eviction) cannot change the final table — skip it and save one
-    # full stateful batch of fixed overhead (probed r16:
-    # tools/streaming_decompose.py). APPEND-mode sinks NEED it to close
-    # windows, so the conf is scoped to this query and restored.
-    ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
-    prior = spark.conf.get(ndb, "true")
-    if output_mode == "complete":
-        spark.conf.set(ndb, "false")
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if output_mode == "complete":
-            spark.conf.set(ndb, prior)
+    writer = (
+        streaming_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if output_mode != "complete":
+        q = start_query(writer)
+    else:
+        # COMPLETE mode re-emits the entire aggregation state on every
+        # micro-batch, so the trailing no-data batch (whose only job is
+        # to advance the watermark for append-mode finalization / state
+        # eviction) cannot change the final table — skip it and save
+        # one full stateful batch of fixed overhead (probed r16:
+        # tools/streaming_decompose.py). Spark asks for that batch in
+        # complete mode only for a watermarked operator other than the
+        # aggregate itself (dropDuplicates). APPEND-mode sinks NEED it
+        # to close windows, and the conf is session-global, so it is off
+        # only from set to start(), under the lock start_query takes. A
+        # started query keeps the conf it started with (its session is
+        # cloned at start; pinned in tests/test_streaming.py).
+        ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
+        with _START_LOCK:
+            prior = spark.conf.get(ndb, "true")
+            spark.conf.set(ndb, "false")
+            try:
+                q = writer.start()
+            finally:
+                spark.conf.set(ndb, prior)
+    q.awaitTermination()
     return spark.table(name)
 
 

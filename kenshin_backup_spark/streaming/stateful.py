@@ -155,82 +155,10 @@ def counter_reset_stream(
     )
 
 
-# --- transformWithState (Spark 4 arbitrary-state API) -----------------------
-
 DRAWDOWN_OUTPUT_SCHEMA = (
     "metric string, es long, event_id long, value double, peak double, "
     "drawdown double"
 )
-
-
-def drawdown_stream_tws(
-    stream: DataFrame,
-    *,
-    key_col: str = "metric",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """Per-metric running peak + drawdown on Spark 4's
-    ``transformWithStateInPandas`` (the successor of applyInPandasWithState:
-    typed state handles, TTL, timers).
-
-    ENVIRONMENT-BLOCKED in this container: the API's Python state-server
-    protocol requires ``google.protobuf``, which is not installed (verified:
-    ``ModuleNotFoundError``; no pip allowed). The code is the real
-    implementation and runs where protobuf exists —
-    ``tests/test_stateful.py`` skips it cleanly here; the registered
-    harness query uses the applyInPandasWithState twin
-    :func:`drawdown_stream` with identical semantics and oracle.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    k, t, v, i = key_col, ts_col, value_col, id_col
-
-    class _DrawdownProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._peak = handle.getValueState("peak", "peak double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            peak = self._peak.get()[0] if self._peak.exists() else None
-            out = []
-            chunks = list(rows)
-            if chunks:
-                pdf = pd.concat(chunks).sort_values(["__es", i])
-                for es, eid, val in zip(pdf["__es"], pdf[i], pdf[v]):
-                    peak = val if peak is None or val > peak else peak
-                    out.append(
-                        (
-                            key[0],
-                            int(es),
-                            int(eid),
-                            float(val),
-                            float(peak),
-                            float(peak - val),
-                        )
-                    )
-            if peak is not None:
-                self._peak.update((float(peak),))
-            yield pd.DataFrame(
-                out,
-                columns=["metric", "es", "event_id", "value", "peak", "drawdown"],
-            )
-
-        def close(self) -> None:
-            pass
-
-    prepped = stream.withColumn("__es", F.unix_timestamp(F.col(t)).cast("long"))
-    return prepped.groupBy(F.col(k)).transformWithStateInPandas(
-        statefulProcessor=_DrawdownProcessor(),
-        outputStructType=DRAWDOWN_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
 
 
 def drawdown_stream(
@@ -243,8 +171,7 @@ def drawdown_stream(
 ) -> DataFrame:
     """Per-metric running peak + drawdown (peak − current): the classic
     "how far below the high-water mark" monitoring operator, state = one
-    double per metric. applyInPandasWithState twin of
-    :func:`drawdown_stream_tws` (which needs protobuf — absent here).
+    double per metric, kept with applyInPandasWithState.
 
     Rows are processed in (es, event_id) order inside each batch, and
     max/subtract involve no float accumulation, so the output is EXACTLY

@@ -83,7 +83,7 @@ def test_render_matches_direct_composition(spark):
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     got2 = render("highestCurrent(cpu.*, 1)", fetch).collect()
-    want2 = sf.highest_current(fetch("cpu.*"), 1).collect()
+    want2 = sf.highest(fetch("cpu.*"), 1, "current").collect()
     assert sorted(map(tuple, got2)) == sorted(map(tuple, want2))
 
     got3 = render("movingAverage(absolute(offset(mem.used, -10)), 2)", fetch)

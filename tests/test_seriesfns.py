@@ -2,13 +2,23 @@
 
 from __future__ import annotations
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.operators import seriesfns as S
+from kenshin_backup_spark.render import _registry, render
 
 
 def _series(spark, rows):
     return spark.createDataFrame(rows, "metric string, bucket_ts long, value double")
+
+
+def _g(name, df, *scalars):
+    """The render registry's graphite function ``name`` applied to one
+    series frame (internal columns such as ``__series_order`` kept)."""
+    return _registry()[name]([df], list(scalars))
 
 
 def test_scale_offset_absolute_alias(spark):
@@ -69,7 +79,7 @@ def test_highest_current_and_sort_by_maxima(spark):
          ("b", 0, 50.0), ("b", 60, 2.0),
          ("c", 0, 1.0), ("c", 60, 5.0)],
     )
-    top = S.highest_current(df, 2)
+    top = _g("highestCurrent", df, 2)
     assert {r["metric"] for r in top.collect()} == {"a", "c"}  # current: a=9, c=5, b=2
     ranks = {r["metric"]: r["rank"] for r in S.sort_by_maxima(df).collect()}
     assert ranks == {"b": 1, "a": 2, "c": 3}
@@ -149,9 +159,9 @@ def test_sort_by_total_and_limit(spark):
 
 def test_min_max_count_series(spark):
     df = _series(spark, [("a", 0, 1.0), ("b", 0, 3.0), ("a", 60, 2.0)])
-    mn = {r.bucket_ts: r.value for r in S.min_series(df).collect()}
-    mx = {r.bucket_ts: r.value for r in S.max_series(df).collect()}
-    ct = {r.bucket_ts: r.value for r in S.count_series(df).collect()}
+    mn = {r.bucket_ts: r.value for r in _g("minSeries", df).collect()}
+    mx = {r.bucket_ts: r.value for r in _g("maxSeries", df).collect()}
+    ct = {r.bucket_ts: r.value for r in _g("countSeries", df).collect()}
     assert mn == {0: 1.0, 60: 2.0}
     assert mx == {0: 3.0, 60: 2.0}
     assert ct == {0: 2.0, 60: 1.0}
@@ -182,10 +192,10 @@ def test_remove_above_below_transform_null(spark):
 def test_average_and_current_filters(spark):
     df = _series(spark, [("hot", 0, 10.0), ("hot", 60, 20.0),
                          ("cold", 0, 1.0), ("cold", 60, 2.0)])
-    assert {r.metric for r in S.average_above(df, 5.0).collect()} == {"hot"}
-    assert {r.metric for r in S.average_below(df, 5.0).collect()} == {"cold"}
-    assert {r.metric for r in S.current_above(df, 5.0).collect()} == {"hot"}
-    assert {r.metric for r in S.current_below(df, 5.0).collect()} == {"cold"}
+    assert {r.metric for r in _g("averageAbove", df, 5.0).collect()} == {"hot"}
+    assert {r.metric for r in _g("averageBelow", df, 5.0).collect()} == {"cold"}
+    assert {r.metric for r in _g("currentAbove", df, 5.0).collect()} == {"hot"}
+    assert {r.metric for r in _g("currentBelow", df, 5.0).collect()} == {"cold"}
 
 
 def test_series_by_tag_operators(spark):
@@ -274,10 +284,10 @@ def test_round5_catalog_functions(spark):
     otz = {(r["metric"], r["bucket_ts"]): r["value"] for r in S.offset_to_zero(df).collect()}
     assert otz[("a", 0)] == 4.0 and otz[("b", 0)] == 0.0  # mins 0 and 2
 
-    rng = {r["bucket_ts"]: r["value"] for r in S.range_of_series(df).collect()}
+    rng = {r["bucket_ts"]: r["value"] for r in _g("rangeOfSeries", df).collect()}
     assert rng == {0: 2.0, 3600: 8.0, 7200: 12.0}
 
-    sd = {r["bucket_ts"]: r["value"] for r in S.stddev_series(df).collect()}
+    sd = {r["bucket_ts"]: r["value"] for r in _g("stddevSeries", df).collect()}
     assert sd[0] == 1.0  # {4,2}: pop stdev 1
     assert sd[3600] == 4.0  # {0,8}
 
@@ -290,11 +300,11 @@ def test_round5_catalog_functions(spark):
     assert npc[("b", 0)] == 4.0  # b={2,4,8} → 2nd = 4
 
     # filter twins
-    assert {r.metric for r in S.lowest_current(df, 1).collect()} == {"b"}  # current a=16 b=4
-    assert {r.metric for r in S.highest_average(df, 1).collect()} == {"a"}  # means 20/3 vs 14/3
-    assert {r.metric for r in S.lowest_average(df, 1).collect()} == {"b"}
-    assert {r.metric for r in S.minimum_above(df, 1).collect()} == {"b"}  # min a=0 b=2
-    assert {r.metric for r in S.maximum_below(df, 10).collect()} == {"b"}  # max a=16 b=8
+    assert {r.metric for r in _g("lowestCurrent", df, 1).collect()} == {"b"}  # current a=16 b=4
+    assert {r.metric for r in _g("highestAverage", df, 1).collect()} == {"a"}  # means 20/3 vs 14/3
+    assert {r.metric for r in _g("lowestAverage", df, 1).collect()} == {"b"}
+    assert {r.metric for r in _g("minimumAbove", df, 1).collect()} == {"b"}  # min a=0 b=2
+    assert {r.metric for r in _g("maximumBelow", df, 10).collect()} == {"b"}  # max a=16 b=8
 
 
 def test_percentile_clips_and_timeslice(spark):
@@ -337,7 +347,7 @@ def test_limit_reranks_surviving_series(spark):
     df = _series(spark, [
         ("a", 0, 10.0), ("b", 0, 8.0), ("c", 0, 5.0),
     ])
-    ordered = S.sort_by_total_series(df)          # a=1, b=2, c=3
+    ordered = _g("sortByTotal", df)               # a=1, b=2, c=3
     survivors = S.exclude(ordered, "^a$")         # ranks now 2, 3
     lim = sorted(set(r["metric"] for r in S.limit_series(survivors, 2).collect()))
     assert lim == ["b", "c"]                      # stale-rank filter gave only b
@@ -406,7 +416,7 @@ def test_sort_by_name_and_stacked_sort(spark):
     ))
     assert lim == ["a", "b"]
     # stacking sortBy* replaces the previous order (no column collision)
-    restacked = S.sort_by_name_series(S.sort_by_total_series(df))
+    restacked = S.sort_by_name_series(_g("sortByTotal", df))
     orders = {r["metric"]: r["__series_order"]
               for r in restacked.select("metric", "__series_order")
               .distinct().collect()}
@@ -421,7 +431,8 @@ def test_stdev_large_values_no_overflow(spark):
                          ("n", 0, 0.0), ("n", 60, 0.0)])
     sd = {r["metric"]: r["stdev"] for r in S.series_stdev(df).collect()}
     assert sd["m"] == 2.0e6 and sd["n"] == 0.0
-    sds = {r["bucket_ts"]: r["value"] for r in S.stddev_series(
+    sds = {r["bucket_ts"]: r["value"] for r in _g(
+        "stddevSeries",
         _series(spark, [("a", 0, 0.0), ("b", 0, 4.0e6)])).collect()}
     assert sds[0] == 2.0e6
 
@@ -620,12 +631,12 @@ def test_sort_by_minima_and_threshold_filters(spark):
         ("lo", 0, 1.0), ("lo", 60, 9.0),
         ("hi", 0, 5.0), ("hi", 60, 9.0),
     ])
-    out = S.limit_series(S.sort_by_minima_series(df), 1)
+    out = S.limit_series(_g("sortByMinima", df), 1)
     assert {r.metric for r in out.collect()} == {"lo"}  # smallest min first
 
-    assert {r.metric for r in S.maximum_above(df, 8.0).collect()} == {
+    assert {r.metric for r in _g("maximumAbove", df, 8.0).collect()} == {
         "lo", "hi"}
-    assert {r.metric for r in S.minimum_below(df, 0.0).collect()} == {"neg"}
+    assert {r.metric for r in _g("minimumBelow", df, 0.0).collect()} == {"neg"}
 
 
 def test_interpolate(spark):
@@ -817,7 +828,7 @@ def test_generic_highest_lowest_sortby_filter(spark):
     assert {r.metric for r in S.highest(df, 2, "average").collect()} == {
         "b", "c"}
     assert {r.metric for r in S.lowest(df, 1, "current").collect()} == {"a"}
-    assert {r.metric for r in S.highest_max(df, 2).collect()} == {"b", "c"}
+    assert {r.metric for r in _g("highestMax", df, 2).collect()} == {"b", "c"}
     # sortBy default ASCENDING by average: a(2) < c(4) < b(8)
     order = {r["metric"]: r["__series_order"]
              for r in S.sort_by(df, "average").collect()}
@@ -837,6 +848,58 @@ def test_generic_highest_lowest_sortby_filter(spark):
         S.filter_series(df, "max", "~", 1.0)
     with _p.raises(ValueError):
         S.highest(df, 1, "bogus")
+
+
+#: graphite's shorthands and their generic spellings. The sorts sit under
+#: limit(), because the order they attach is the only thing they change
+#: and the rendered result drops the order column.
+_SHORTHANDS = [
+    ("highestCurrent(x, 2)", "highest(x, 2, 'current')"),
+    ("lowestCurrent(x, 2)", "lowest(x, 2, 'current')"),
+    ("highestAverage(x, 2)", "highest(x, 2, 'average')"),
+    ("lowestAverage(x, 2)", "lowest(x, 2, 'average')"),
+    ("highestMax(x, 2)", "highest(x, 2, 'max')"),
+    ("averageAbove(x, 2.5)", "filterSeries(x, 'average', '>', 2.5)"),
+    ("averageBelow(x, 3)", "filterSeries(x, 'average', '<', 3)"),
+    ("currentAbove(x, 3)", "filterSeries(x, 'current', '>', 3)"),
+    ("currentBelow(x, 3)", "filterSeries(x, 'current', '<', 3)"),
+    ("minimumAbove(x, 0)", "filterSeries(x, 'min', '>', 0)"),
+    ("minimumBelow(x, 1)", "filterSeries(x, 'min', '<', 1)"),
+    ("maximumAbove(x, 5)", "filterSeries(x, 'max', '>', 5)"),
+    ("maximumBelow(x, 5)", "filterSeries(x, 'max', '<', 5)"),
+    ("limit(sortByMaxima(x), 3)", "limit(sortBy(x, 'max', true), 3)"),
+    ("limit(sortByTotal(x), 3)", "limit(sortBy(x, 'total', true), 3)"),
+    ("limit(sortByMinima(x), 3)",
+     "limit(sortBy(filterSeries(x, 'max', '>', 0), 'min'), 3)"),
+    ("minSeries(x)", "aggregate(x, 'min')"),
+    ("maxSeries(x)", "aggregate(x, 'max')"),
+    ("countSeries(x)", "aggregate(x, 'count')"),
+    ("rangeOfSeries(x)", "alias(aggregate(x, 'rangeOf'), 'rangeOfSeries')"),
+    ("stddevSeries(x)", "aggregate(x, 'stddev')"),
+]
+
+
+@pytest.mark.parametrize("shorthand,generic", _SHORTHANDS)
+def test_shorthand_equals_generic_spelling(spark, shorthand, generic):
+    """Every selector, filter, sort and combine shorthand returns the
+    rows of its generic spelling. Keys tie (average 3 for a-d, max 5 for
+    a/b/e, min 1 for a/b, total 6 for a/b/d, current 5 for a/e), there
+    are gap slots, bucket 180 is a gap in every series and z is all gap,
+    so null ordering and tie breaks are exercised."""
+    df = _series(spark, [
+        ("a", 0, 1.0), ("a", 60, 5.0), ("a", 120, None), ("a", 180, None),
+        ("b", 0, 5.0), ("b", 60, None), ("b", 120, 1.0), ("b", 180, None),
+        ("c", 0, 3.0), ("c", 60, 3.0), ("c", 120, 3.0), ("c", 180, None),
+        ("d", 0, -2.0), ("d", 60, None), ("d", 120, 8.0), ("d", 180, None),
+        ("e", 0, None), ("e", 60, 0.0), ("e", 120, 5.0), ("e", 180, None),
+        ("z", 0, None), ("z", 60, None), ("z", 120, None), ("z", 180, None),
+    ])
+
+    def rows(target):
+        return Counter(map(tuple, render(target, lambda glob: df).collect()))
+
+    got = rows(shorthand)
+    assert got and got == rows(generic)
 
 
 def test_generic_aggregate_and_wildcards(spark):

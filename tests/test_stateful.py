@@ -144,30 +144,3 @@ def test_drawdown_stream_matches_reference(spark, tmp_path):
         (280, 12.0, 7.0),
         (340, 12.0, 0.0),
     ]
-
-
-def test_drawdown_tws_requires_protobuf(spark, tmp_path):
-    """transformWithStateInPandas needs google.protobuf for its Python
-    state-server protocol; absent in this container (no pip). The twin is
-    kept as the forward path — skip unless the dependency appears."""
-    import importlib.util
-
-    import pytest
-
-    if importlib.util.find_spec("google") is None:
-        pytest.skip("google.protobuf not installed — transformWithState blocked")
-    src = tmp_path / "ddt"
-    src.mkdir()
-    df = spark.createDataFrame(
-        [("m", dt.datetime.fromtimestamp(100, UTC), 0, 10.0)],
-        "metric string, ts timestamp, event_id long, value double",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(str(src))
-    stream = spark.readStream.schema(df.schema).parquet(str(src))
-
-    from kenshin_backup_spark.streaming.stateful import drawdown_stream_tws
-
-    out = run_stream_to_memory(
-        spark, drawdown_stream_tws(stream), output_mode="append"
-    )
-    assert out.count() == 1

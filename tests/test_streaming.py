@@ -288,3 +288,103 @@ def test_complete_mode_skips_nodata_batch_and_restores_conf(spark):
         got.exceptAll(want.select(*got.columns)).count() == 0
         and want.select(*got.columns).exceptAll(got).count() == 0
     )
+
+
+def test_concurrent_append_stream_keeps_its_final_windows(
+    spark, tmp_path, monkeypatch
+):
+    """run_stream_to_memory turns the no-data micro-batch off for a
+    COMPLETE query only from set to start(), under the lock every
+    start_query takes, and restores the conf right after start(). An
+    APPEND stream started on another thread meanwhile still runs the
+    trailing no-data batch that closes its windows, so it equals its
+    batch oracle. The complete stream (watermarked dropDuplicates under
+    a count, the streaming_dedup_slots shape: its dedup state asks for a
+    no-data batch once the watermark moves) still skips that batch
+    although the conf is back on while it runs, so a started query keeps
+    the conf it started with. The control, the same complete query
+    started with the conf on, shows the batch it would otherwise run."""
+    import threading
+
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from kenshin_backup_spark.streaming.ingest import start_query
+
+    ndb = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(ndb, "true")
+    utc = dt.timezone.utc
+    t0 = 1_700_006_400  # a UTC midnight
+    rows = [("m", dt.datetime.fromtimestamp(t0 + 60 * i, utc), float(i))
+            for i in range(211)]  # event times t0 … t0 + 12600 s
+    df = spark.createDataFrame(rows, "metric string, ts timestamp, value double")
+    src = str(tmp_path / "pts")
+    df.coalesce(1).write.parquet(src)
+
+    def stream():
+        return spark.readStream.schema(df.schema).parquet(src)
+
+    def deduped_count():
+        return (
+            stream().withWatermark("ts", "0 seconds")
+            .dropDuplicates(["metric", "ts"])
+            .groupBy("metric").agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    queries = {
+        "complete": deduped_count,
+        "append": lambda: streaming_rollup(
+            stream(), key_col="metric", step_seconds=3600,
+            watermark="0 seconds",
+        ),
+    }
+    started = {}
+    start = DataStreamWriter.start
+
+    def recording_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started[threading.current_thread().name] = q
+        return q
+
+    monkeypatch.setattr(DataStreamWriter, "start", recording_start)
+    out, errors = {}, []
+
+    def run(mode):
+        try:
+            out[mode] = run_stream_to_memory(
+                spark, queries[mode](), output_mode=mode
+            )
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    threads = [threading.Thread(target=run, args=(m,), name=m)
+               for m in queries]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert spark.conf.get(ndb, "true") == before
+
+    cols = ["metric", "bucket_ts", "cnt", "sum_q", "min_v", "max_v",
+            "last_ts", "last_v"]
+    want = rollup_partials(df, key_cols=["metric"], step_seconds=3600)
+    # the final watermark is the max event time, t0 + 12600 s: it closes
+    # the windows that end by then, the first three hours
+    closed = want.where(F.col("bucket_ts") + 3600 <= t0 + 12600)
+    assert closed.count() == 3
+    assert sorted(map(tuple, out["append"].select(cols).collect())) == sorted(
+        map(tuple, closed.select(cols).collect()))
+    assert [tuple(r) for r in out["complete"].collect()] == [("m", 211)]
+
+    def input_rows(q):
+        return [p.numInputRows for p in q.recentProgress]
+
+    assert input_rows(started["append"])[-1] == 0     # the no-data batch
+    assert input_rows(started["complete"]) == [211]   # skipped
+    control = start_query(
+        deduped_count().writeStream.format("memory")
+        .queryName("ndb_control").outputMode("complete")
+        .trigger(availableNow=True)
+    )
+    control.awaitTermination()
+    assert input_rows(control) == [211, 0]

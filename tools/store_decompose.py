@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Phase decomposition for one store-backed render query: times the
-store build (Engine.write), the bounds acquisition, and the render
-evaluation separately, so write-cost claims are measurable per phase.
+store build (Engine.write, which also observes the render window's
+bounds) and the render evaluation separately, so write-cost claims are
+measurable per phase.
 
 Usage: python tools/store_decompose.py [--sf DIR] [--reps N]
-Prints one JSON line per rep: {"write": s, "bounds": s, "render": s}.
+Prints one JSON line per rep: {"write": s, "render": s, "total": s}.
 Uses graphite_render_group_order's store (the heaviest store-family
 query) rebuilt the same way the query builds it.
 """
@@ -33,8 +34,6 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown arg {args[0]}")
 
-    from pyspark.sql import functions as F
-
     from kenshin_backup_spark.api import Engine
     from kenshin_backup_spark.cache import clear_tracked
     from kenshin_backup_spark.operators.policies import Policy
@@ -55,26 +54,16 @@ def main() -> None:
                              agg="max")],
         )
         t0 = time.perf_counter()
-        try:
-            bounds = eng.write(pts, observe_bounds=True)
-        except TypeError:  # pre-r16 Engine.write (A/B against old code)
-            eng.write(pts)
-            bounds = None
+        bounds = eng.write(pts, observe_bounds=True)
         t1 = time.perf_counter()
-        if bounds is None:  # old-code path: separate bounds scan
-            es = F.unix_timestamp("ts").cast("long")
-            bd = pts.agg(F.min(es).alias("lo"), F.max(es).alias("hi")).collect()[0]
-            bounds = (bd.lo, bd.hi)
-        t2 = time.perf_counter()
         lo = bounds[0] - bounds[0] % 86400
         out = eng.render_many([_T_SORTED, _T_BRANCH], lo, bounds[1] + 1)
         out.write.format("noop").mode("overwrite").save()
-        t3 = time.perf_counter()
+        t2 = time.perf_counter()
         print(json.dumps({
             "write": round(t1 - t0, 3),
-            "bounds": round(t2 - t1, 3),
-            "render": round(t3 - t2, 3),
-            "total": round(t3 - t0, 3),
+            "render": round(t2 - t1, 3),
+            "total": round(t2 - t0, 3),
         }))
     spark.stop()
 
