@@ -42,6 +42,7 @@ from kenshin_backup_spark.operators.ladder import (
     delete_metrics,
     expire_retention,
     fetch_from_ladder,
+    window_bytes,
 )
 from kenshin_backup_spark.operators.policies import (
     DEFAULT_POLICY,
@@ -49,7 +50,10 @@ from kenshin_backup_spark.operators.policies import (
     assign_policy,
 )
 from kenshin_backup_spark.operators.rollup import finalize
-from kenshin_backup_spark.session import tune
+from kenshin_backup_spark.session import RENDER_CONFS, tune
+
+#: Key of a render memo's entry that holds the request's session.
+_SESSION = "session"
 
 
 class Engine:
@@ -72,6 +76,7 @@ class Engine:
         # fetches and deletes prune to their bucket — the 100 TB layout
         self._metric_buckets = int(metric_buckets)
         self._written: set[str] = set()
+        self._render_spark: SparkSession | None = None
 
     # -- storage-schema plumbing --------------------------------------------
 
@@ -238,9 +243,9 @@ class Engine:
             .parquet(f"{self.root}/_events")
         )
 
-    def _events_fn(self, tags: list[str]) -> DataFrame:
+    def _events_fn(self, spark: SparkSession, tags: list[str]) -> DataFrame:
         """Events matching ALL requested tags (graphite find_events
-        semantics), as ``when`` epoch-seconds rows."""
+        semantics), as ``when`` epoch-seconds rows read on ``spark``."""
         import os
 
         path = f"{self.root}/_events"
@@ -248,7 +253,7 @@ class Engine:
             raise ValueError(
                 "no event store written — call Engine.write_events first"
             )
-        ev = self.spark.read.parquet(path)
+        ev = spark.read.parquet(path)
         for t in tags:
             ev = ev.where(F.array_contains(F.col("tags"), t))
         return ev.select("when")
@@ -286,13 +291,27 @@ class Engine:
         (``'-24h'``, ``'now'``, ``'midnight'``, ``'17:00_20240115'`` … —
         see :mod:`kenshin_backup_spark.attime`); relative forms resolve
         against the injected ``now_ts``."""
+        return self._fetch(
+            self.spark, metric_glob, from_ts, until_ts, now_ts, kernel
+        )
+
+    def _fetch(
+        self,
+        spark: SparkSession,
+        metric_glob: str | None,
+        from_ts: int | str,
+        until_ts: int | str,
+        now_ts: int | None,
+        kernel: str | None,
+    ) -> DataFrame:
+        """:meth:`fetch`, with every frame built on ``spark``."""
         from_ts, until_ts = self._resolve_window(from_ts, until_ts, now_ts)
         if now_ts is None:
             now_ts = until_ts
         out: DataFrame | None = None
         for p, lad in self._written_ladders():
             raw = fetch_from_ladder(
-                self.spark,
+                spark,
                 lad,
                 metric_glob=metric_glob,
                 from_ts=from_ts,
@@ -335,45 +354,40 @@ class Engine:
         average — see seriesfns.consolidate_points). ``from_ts``/
         ``until_ts`` also accept graphite at-time strings (``'-24h'``,
         ``'now'``, ``'midnight'`` …) resolved against ``now_ts`` — the
-        full request-parameter surface a graphite consumer sends."""
+        full request-parameter surface a graphite consumer sends.
+
+        The frame belongs to the request's session
+        (:meth:`_request_session`): the engine's render session for a
+        dashboard-sized input, else the engine's own session."""
         from kenshin_backup_spark.cache import persist_tracked
         from kenshin_backup_spark.render import render as _render
 
         from_ts, until_ts = self._resolve_window(from_ts, until_ts, now_ts)
 
-        # Memoize + persist each distinct (glob, window) leaf fetch for the
-        # duration of this render call. Two reasons, both measured (r15):
-        # (a) render functions that rank/join a series frame back onto
-        # itself duplicate the leaf SUBTREE in the final plan — a deep
-        # target re-ran the archive scan+grid >100× per action; the persist
-        # point makes Spark's cache manager substitute one InMemoryRelation
-        # for every duplicate at execution. (b) each fetch_from_ladder plan
-        # build costs driver-side file listing + py4j round-trips; the memo
-        # pays it once per distinct glob instead of once per leaf
-        # reference. Scope is ONE render request (series-count × window
-        # buckets rows — dashboard-bounded); the registry wrapper clears
-        # tracked persists between queries, so a long session never
-        # accumulates render caches. A multi-target request (render_many,
-        # or a caller unioning several renders of one dashboard panel)
-        # passes ONE ``memo`` dict through every render so targets that
-        # reference the same (glob, window, now) leaf share a single
-        # fetch plan + persist instead of rebuilding it per target (r16;
-        # graphite_render_group_order's two targets fetch the same two
-        # globs). Same request-scoped lifetime — nothing outlives the
-        # caller's request.
+        # Memoize + persist each distinct (glob, window, now) leaf fetch for
+        # the request. A rank-then-join function references its input
+        # twice, and the persist point lets Spark's cache manager put one
+        # InMemoryRelation under every copy; the memo also pays each
+        # fetch's plan build (file listing, py4j round-trips) once per
+        # distinct leaf. A multi-target request (render_many, or a caller
+        # unioning several renders of one panel) passes ONE ``memo``
+        # through every render, so targets that name the same leaf share
+        # one fetch and one persist. The memo also holds the request's
+        # session, chosen by the first render that sees it, so every frame
+        # of the request is built on one session. Nothing outlives the
+        # request: the registry wrapper and ``clear_tracked()`` release the
+        # persists.
         if memo is None:
             memo = {}
+        spark = self._request_session(memo, from_ts, until_ts, now_ts)
 
         def _fetch_cached(glob: str | None, f: int, u: int, now: int | None) -> DataFrame:
-            # ADVICE r15: the key includes the fetch's effective now.
-            # Today every fetch in one render resolves to the same
-            # eff_now (fetch() normalizes now_ts=None to until_ts ==
-            # eff_now), so this entry is constant within a call — but a
-            # future refetch rail passing a per-shift now must never
-            # silently reuse a frame fetched under a different clock.
+            # the key includes the fetch's effective now, so a refetch
+            # under another clock never reuses a frame fetched under this
+            # one
             key = (glob, f, u, now if now is not None else u)
             if key not in memo:
-                memo[key] = self.fetch(glob, f, u, now_ts=now).select(
+                memo[key] = self._fetch(spark, glob, f, u, now, None).select(
                     "metric", "bucket_ts", "value"
                 ).transform(persist_tracked)
             return memo[key]
@@ -392,7 +406,7 @@ class Engine:
             # adjusted-window re-fetch for hitcount(alignToInterval),
             # linearRegression source windows, smartSummarize alignTo,
             # timeShift/timeStack and the holtWinters bootstrap — same
-            # rail as fetch_fn, different bounds (r10); shares the memo
+            # rail as fetch_fn, different bounds; shares the memo
             # keyed on the adjusted window
             return _fetch_cached(glob, f, u, eff_now)
 
@@ -401,11 +415,55 @@ class Engine:
         return _render(
             target, fetch_fn,
             from_ts=from_ts, until_ts=until_ts,
-            events_fn=self._events_fn,
+            events_fn=lambda tags: self._events_fn(spark, tags),
             max_data_points=max_data_points,
             refetch_fn=refetch_fn,
             x_files_factor=x_files_factor,
+            spark=spark,
         )
+
+    def _render_session(self) -> SparkSession:
+        """The engine's render session, made on first use: a
+        ``newSession()`` of the engine's session (shared SparkContext and
+        cache manager, own SQL conf), tuned, then given
+        :data:`~kenshin_backup_spark.session.RENDER_CONFS`, which
+        :func:`tune` would reset. Two threads that race here make two
+        equivalent sessions; each request still records one in its memo."""
+        if self._render_spark is None:
+            small = tune(self.spark.newSession())
+            for k, v in RENDER_CONFS.items():
+                small.conf.set(k, v)
+            self._render_spark = small
+        return self._render_spark
+
+    def _request_session(
+        self,
+        memo: dict,
+        from_ts: int | str,
+        until_ts: int | str,
+        now_ts: int | None,
+    ) -> SparkSession:
+        """The session every frame of one render request is built on,
+        recorded in the request's ``memo`` by the first render that sees
+        it. It is the render session when the request's input is
+        dashboard-sized: the parquet bytes a fetch of the window could
+        read (:func:`window_bytes`, a file listing), summed over the
+        written ladders, fit in one scan partition of the engine's
+        session (its ``spark.sql.files.maxPartitionBytes``). Otherwise
+        it is the engine's own session."""
+        spark = memo.get(_SESSION)
+        if spark is None:
+            f, u = self._resolve_window(from_ts, until_ts, now_ts)
+            now = now_ts if now_ts is not None else u
+            size = sum(
+                window_bytes(lad, from_ts=f, until_ts=u, now_ts=now)
+                for _, lad in self._written_ladders()
+            )
+            small = size <= self.spark._jconf.filesMaxPartitionBytes()
+            spark = memo[_SESSION] = (
+                self._render_session() if small else self.spark
+            )
+        return spark
 
     def render_many(
         self,
@@ -427,16 +485,19 @@ class Engine:
         response entries).
 
         Cost: the union is ONE lazy plan, but it does not run as one
-        Spark job — each persisted frame, range-exchange sample and
-        broadcast adds jobs. On a 3-level single-policy store a plain
-        glob request runs 6 jobs and the 3-target
-        ``limit(group(sortBy(a.*,'max'), b), 3)`` request 43
-        (``tests/test_api.py`` pins upper bounds). Two mechanisms keep
-        every subtree computed once per request: the leaf memo (targets
-        referencing the same (glob, window) leaf share ONE fetch plan +
-        persist) and the persisted intermediate frames of nested calls
-        (:func:`kenshin_backup_spark.render.render`). Both live for this
-        request only and are released by ``clear_tracked()``."""
+        Spark job — each persisted frame, leaf schema read and sort
+        sample adds jobs. Every target is built on one session, the
+        engine's render session for a dashboard-sized input (see
+        :meth:`render`). There, on a 3-level single-policy store, a plain
+        glob request runs 4 jobs and the 3-target
+        ``limit(group(sortBy(a.*,'max'), b), 3)`` request 15
+        (``tests/test_api.py`` pins both; on the engine's own session,
+        with adaptive execution on, they run 6 and 43). Two mechanisms
+        keep every subtree computed once per request: the leaf memo
+        (targets referencing the same (glob, window) leaf share ONE fetch
+        plan + persist) and the persisted intermediate frames of nested
+        calls (:func:`kenshin_backup_spark.render.render`). Both live for
+        this request only and are released by ``clear_tracked()``."""
         if not targets:
             raise ValueError("render_many: need at least one target")
         memo: dict = {}
@@ -494,7 +555,8 @@ class Engine:
         ``target=name:value`` slices — views.py treats ANY pie target
         containing ``:`` as a literal, splitting on the FIRST colon and
         raising on a non-numeric value; mirrored here (the row is a
-        1-row plan that never touches the store).
+        1-row plan on the request's session that never touches the
+        store).
 
         Scale: the reduction is one gap-ignoring aggregate per series
         keyed on the series name — a map-side-combined groupBy stacked
@@ -513,7 +575,10 @@ class Engine:
                     f"render_pie: invalid literal pie target {target!r} "
                     "(expected name:value)"
                 ) from None
-            return self.spark.range(1).select(
+            spark = self._request_session(
+                {} if memo is None else memo, from_ts, until_ts, now_ts
+            )
+            return spark.range(1).select(
                 F.lit(name).alias("metric"),
                 F.lit(value).cast("double").alias("value"),
             )
@@ -549,7 +614,7 @@ class Engine:
         slices mix freely and duplicate slice names are kept (graphite's
         pie data is a list, not a dict). Returns the union of the
         per-target ``(metric, value)`` frames — one lazy plan sharing the
-        request-scoped leaf memo, like :meth:`render_many`.
+        request-scoped leaf memo and session, like :meth:`render_many`.
 
         NULL slices: unions AMPLIFY the all-gap case — one all-gap
         series in ANY target nulls a plain ``SUM(value)`` over the

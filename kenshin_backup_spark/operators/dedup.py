@@ -102,13 +102,6 @@ def with_shingles(
     )
 
 
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Inline shingle expression — ONLY for tiny inputs/tests; hot paths
-    must use :func:`with_shingles` (materialization, see above)."""
-    words = F.split(normalize_text(col), " ")
-    return shingles_from_words(words, n)
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     *,
@@ -286,16 +279,6 @@ def with_simhash(
     return d.withColumn(
         out_col, simhash_from_hashes(F.col("__hashes"), bits=bits)
     ).drop("__sh", "__hashes")
-
-
-def simhash64(col: Column | str, *, ngram: int = 2) -> Column:
-    """Inline SimHash expression — ONLY for tiny inputs/tests; hot paths
-    must use :func:`with_simhash` (the inline words expression is re-run
-    per element inside the lambdas — see :func:`shingles_from_words`)."""
-    words = F.split(normalize_text(col), " ")
-    grams = shingles_from_words(words, ngram)
-    hashes = F.transform(grams, lambda g: F.xxhash64(g))
-    return simhash_from_hashes(hashes)
 
 
 def simhash_near_pairs(

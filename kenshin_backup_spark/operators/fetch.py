@@ -84,24 +84,6 @@ def gap_fill(
     return full.join(series, on=[*key_cols, "bucket_ts"], how="left")
 
 
-def merge_hot(disk: DataFrame, hot: DataFrame, *, key_cols: list[str]) -> DataFrame:
-    """Reference cache-query merge (SURVEY §2.1 S7): union the not-yet-
-    flushed streaming partials ("hot", e.g. the latest micro-batch memory
-    table) with the materialized disk level and re-merge per bucket.
-
-    Precondition: hot and disk partials come from DISJOINT point sets
-    (exactly the reference's cache-vs-flushed split); because all partial
-    state is associative, the merged bucket equals a rollup over the union
-    of the points — no last-write-wins heuristics needed.
-    """
-    from kenshin_backup_spark.operators.rollup import merge_partials
-
-    cols = [*key_cols, "bucket_ts", "cnt", "sum_q", "min_v", "max_v", "last_ts", "last_v"]
-    return merge_partials(
-        disk.select(cols).unionByName(hot.select(cols)), key_cols=key_cols
-    )
-
-
 def metric_filter(df: DataFrame, metric_col: str, glob: str | None) -> DataFrame:
     """Graphite glob browse (``a.*.c``) → regex filter (SURVEY §2.2 P2).
 

@@ -100,61 +100,6 @@ def asof_join(
     )
 
 
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    value_col: str,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """As-of join via per-group ``pd.merge_asof`` under ``applyInPandas`` —
-    the §2.8 Pandas-UDF rendering of :func:`asof_join`. Semantically
-    identical (backward, inclusive); equivalence is unit-tested.
-
-    Scale trade-off: one cogroup shuffle (same as the window idiom), but
-    per-group data must fit a pandas frame — prefer :func:`asof_join` for
-    unbounded keys; this variant exists to demonstrate (and test) the
-    grouped-pandas operator surface on a real operator.
-    """
-    import pandas as pd
-
-    out_val = f"{value_col}{suffix}"
-    out_ts = f"{right_ts}{suffix}_ts"
-    l_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in left.schema)
-    vt = dict((f.name, f.dataType.simpleString()) for f in right.schema)[value_col]
-    schema = f"{l_fields}, {out_val} {vt}, {out_ts} bigint"
-
-    left_names = list(left.columns)
-
-    def _merge(key, lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
-        lpdf = lpdf.sort_values("__lt")
-        if rpdf.empty:
-            out = lpdf[left_names].copy()
-            out[out_val] = None
-            out[out_ts] = None
-            return out
-        rpdf = rpdf.sort_values("__rt")[["__rt", value_col]].rename(
-            columns={value_col: "__rv"}
-        )
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on="__lt", right_on="__rt", direction="backward"
-        )
-        merged[out_val] = merged["__rv"]
-        merged[out_ts] = merged["__rt"]
-        return merged[[*left_names, out_val, out_ts]]
-
-    l2 = left.withColumn("__lt", F.unix_timestamp(F.col(left_ts)).cast("long"))
-    r2 = right.withColumn("__rt", F.unix_timestamp(F.col(right_ts)).cast("long"))
-    return (
-        l2.groupBy(on)
-        .cogroup(r2.groupBy(on))
-        .applyInPandas(_merge, schema)
-    )
-
-
 def range_join_bucketed(
     left: DataFrame,
     right: DataFrame,

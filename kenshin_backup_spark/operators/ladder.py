@@ -528,6 +528,38 @@ def load_levels(spark: SparkSession, ladder: Ladder) -> dict[int, DataFrame]:
     }
 
 
+def window_bytes(
+    ladder: Ladder, *, from_ts: int, until_ts: int, now_ts: int
+) -> int:
+    """Parquet bytes that a fetch of the window could read: the files in
+    the ``date=`` partitions of the level :func:`fetch_from_ladder`
+    routes to that overlap the clamped window, from a file listing (no
+    Spark job). 0 when the window clamps to nothing."""
+    import datetime as dt
+
+    try:
+        archive, lo, hi = route(list(ladder.archives), from_ts, until_ts, now_ts)
+    except ValueError:
+        return 0
+    step = archive.step_seconds
+
+    def day(ts: int) -> str:
+        aligned = dt.datetime.fromtimestamp(ts - ts % step, dt.timezone.utc)
+        return aligned.date().isoformat()
+
+    first, last = day(lo), day(hi)
+    total = 0
+    for root, _, files in os.walk(ladder.level_path(step)):
+        part = os.path.basename(root)
+        if part.startswith("date=") and first <= part[len("date="):] <= last:
+            total += sum(
+                os.path.getsize(os.path.join(root, f))
+                for f in files
+                if f.endswith(".parquet")
+            )
+    return total
+
+
 def fetch_from_ladder(
     spark: SparkSession,
     ladder: Ladder,

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.functions.deterministic import QUANT, qfloor
@@ -2887,16 +2887,15 @@ def combine_series_lists(
 # one from the REQUEST WINDOW (from/until/step), which graphite carries in
 # requestContext. The render evaluator threads the same window through
 # ``render(..., from_ts=, until_ts=, step=)``; calling a generator without
-# a window raises. Frames are built with ``spark.range`` (distributed,
-# bounded by the window — never a driver loop).
+# a window raises. Each generator takes the request's session as its first
+# argument, so its frame joins the request's other frames on one session.
+# Frames are built with ``spark.range`` (distributed, bounded by the
+# window — never a driver loop).
 
 
-def _gen_grid(from_ts: int, until_ts: int, step: int) -> DataFrame:
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for a generator function")
+def _gen_grid(
+    spark: SparkSession, from_ts: int, until_ts: int, step: int
+) -> DataFrame:
     if step <= 0 or until_ts <= from_ts:
         raise ValueError("generator window needs from < until and step > 0")
     return spark.range(int(from_ts), int(until_ts), int(step)).select(
@@ -2905,11 +2904,11 @@ def _gen_grid(from_ts: int, until_ts: int, step: int) -> DataFrame:
 
 
 def time_function(
-    name: str, from_ts: int, until_ts: int, step: int = 60
+    spark: SparkSession, name: str, from_ts: int, until_ts: int, step: int = 60
 ) -> DataFrame:
     """graphite ``timeFunction(name, step)`` / ``time()``: each point's
     value is its own epoch timestamp."""
-    return _gen_grid(from_ts, until_ts, step).select(
+    return _gen_grid(spark, from_ts, until_ts, step).select(
         F.lit(name).alias("metric"),
         "bucket_ts",
         F.col("bucket_ts").cast("double").alias("value"),
@@ -2917,20 +2916,20 @@ def time_function(
 
 
 def identity_function(
-    name: str, from_ts: int, until_ts: int
+    spark: SparkSession, name: str, from_ts: int, until_ts: int
 ) -> DataFrame:
     """graphite ``identity(name)``: timeFunction at the default 60 s
     step (value == timestamp)."""
-    return time_function(name, from_ts, until_ts, 60)
+    return time_function(spark, name, from_ts, until_ts, 60)
 
 
 def sin_function(
-    name: str, from_ts: int, until_ts: int,
+    spark: SparkSession, name: str, from_ts: int, until_ts: int,
     amplitude: float = 1.0, step: int = 60,
 ) -> DataFrame:
     """graphite ``sinFunction(name, amplitude, step)`` / ``sin()``:
     ``amplitude · sin(t)`` over the request grid."""
-    return _gen_grid(from_ts, until_ts, step).select(
+    return _gen_grid(spark, from_ts, until_ts, step).select(
         F.lit(name).alias("metric"),
         "bucket_ts",
         (F.lit(float(amplitude)) * F.sin(F.col("bucket_ts").cast("double")))
@@ -2939,7 +2938,7 @@ def sin_function(
 
 
 def random_walk_function(
-    name: str, from_ts: int, until_ts: int, step: int = 60
+    spark: SparkSession, name: str, from_ts: int, until_ts: int, step: int = 60
 ) -> DataFrame:
     """graphite ``randomWalkFunction(name, step)`` / ``randomWalk()``:
     starts at 0 and adds a uniform(−0.5, 0.5) increment per point.
@@ -2949,7 +2948,7 @@ def random_walk_function(
     (name, timestamp). The prefix sum is one window over the generated
     grid — bounded by the REQUEST window's point count, never by stored
     data (the only data-proportional thing here is the grid itself)."""
-    grid = _gen_grid(from_ts, until_ts, step).select(
+    grid = _gen_grid(spark, from_ts, until_ts, step).select(
         F.lit(name).alias("metric"), "bucket_ts"
     )
     u = (
@@ -2969,16 +2968,11 @@ def random_walk_function(
 
 
 def constant_line(
-    value: float, from_ts: int, until_ts: int
+    spark: SparkSession, value: float, from_ts: int, until_ts: int
 ) -> DataFrame:
     """graphite ``constantLine(value)``: three points (start, midpoint,
     end) at the value; the series name is the value's text exactly as
     graphite renders it (``str(float)``-like: 3.0 → '3.0')."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for a generator function")
     v = float(value)
     name = repr(v) if not v.is_integer() else f"{v:.1f}"
     start, end = int(from_ts), int(until_ts)
@@ -2991,23 +2985,18 @@ def constant_line(
 
 
 def vertical_line(
-    ts: int, label: str, from_ts: int, until_ts: int
+    spark: SparkSession, ts: int, label: str, from_ts: int, until_ts: int
 ) -> DataFrame:
     """graphite ``verticalLine(ts, label)``: a marker at ``ts`` inside
     the request window; graphite raises when the timestamp falls outside
     it. Emits ONE point (value 1.0) at ``ts`` — graphite's TimeSeries
     carries two 1.0 values over ``[ts, ts+1)``; one grid slot is the
     same drawn line (documented deviation)."""
-    from pyspark.sql import SparkSession
-
     ts, lo, hi = int(ts), int(from_ts), int(until_ts)
     if ts < lo:
         raise ValueError("verticalLine timestamp is before start of range")
     if ts > hi:
         raise ValueError("verticalLine timestamp is after end of range")
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for a generator function")
     return spark.createDataFrame(
         [(str(label), ts, 1.0)],
         "metric string, bucket_ts long, value double",
@@ -3015,11 +3004,15 @@ def vertical_line(
 
 
 def threshold_series(
-    value: float, from_ts: int, until_ts: int, label: str | None = None
+    spark: SparkSession,
+    value: float,
+    from_ts: int,
+    until_ts: int,
+    label: str | None = None,
 ) -> DataFrame:
     """graphite ``threshold(value, label, color)``: a constantLine,
     renamed to the label when one is given (color is display-only)."""
-    line = constant_line(value, from_ts, until_ts)
+    line = constant_line(spark, value, from_ts, until_ts)
     if label:
         line = line.withColumn("metric", F.lit(str(label)))
     return line
@@ -3375,7 +3368,11 @@ def reduce_series(
 
 
 def events_series(
-    events_when: DataFrame, name: str, from_ts: int, until_ts: int
+    spark: SparkSession,
+    events_when: DataFrame,
+    name: str,
+    from_ts: int,
+    until_ts: int,
 ) -> DataFrame:
     """graphite ``events(*tags)`` series shape: a DENSE per-second grid
     over the request window (graphite hardcodes step=1) whose value at
@@ -3388,11 +3385,6 @@ def events_series(
     window — a 30-day window is ~2.6 M rows, proportional to the window
     the user asked for, never to stored data) left-joined with the
     per-second event counts (a tiny aggregate — broadcast)."""
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession for events()")
     if until_ts <= from_ts:
         raise ValueError("events window needs from < until")
     counts = (

@@ -33,7 +33,7 @@ import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from kenshin_backup_spark.attime import _unit_seconds
 from kenshin_backup_spark.cache import persist_tracked
@@ -1091,6 +1091,7 @@ def render(
     max_data_points: int | None = None,
     refetch_fn: Callable[[str | None, int, int], DataFrame] | None = None,
     x_files_factor: float | None = None,
+    spark: SparkSession | None = None,
 ) -> DataFrame:
     """Parse and evaluate one render target; leaves resolve via
     ``fetch_fn(glob)`` → canonical series frame. ``fetch_fn(None)`` must
@@ -1118,7 +1119,11 @@ def render(
     ``x_files_factor`` is graphite's request-level ``&xFilesFactor=``
     default (requestContext['xFilesFactor']): any catalog function with
     an ``xFilesFactor`` parameter left unset inherits it — an explicit
-    per-call value always wins (r10)."""
+    per-call value always wins (r10).
+    ``spark`` is the session the generator and ``events()`` frames are
+    built on — the session of the leaf frames, so that one request never
+    mixes frames of two sessions (Engine.render passes its request
+    session); it defaults to the active session."""
     reg = _registry()
     for alias, target_name in _ALIASES.items():
         reg[alias] = reg[target_name]
@@ -1156,32 +1161,39 @@ def render(
             hints[id(result)] = parent
         return result
 
+    def session() -> SparkSession:
+        s = spark if spark is not None else SparkSession.getActiveSession()
+        if s is None:
+            raise RuntimeError("no active SparkSession for a generator function")
+        return s
+
     def gen(name: str, scalars: list, wfrom, wuntil) -> DataFrame:
         if wfrom is None or wuntil is None:
             raise ValueError(
                 f"{name} is a generator function and needs the request "
                 "window: render(..., from_ts=, until_ts=)"
             )
+        s = session()
         if name in ("time", "timeFunction"):
             return sf.time_function(
-                str(scalars[0]), wfrom, wuntil,
+                s, str(scalars[0]), wfrom, wuntil,
                 int(scalars[1]) if len(scalars) > 1 else 60,
             )
         if name == "identity":
-            return sf.identity_function(str(scalars[0]), wfrom, wuntil)
+            return sf.identity_function(s, str(scalars[0]), wfrom, wuntil)
         if name in ("sin", "sinFunction"):
             return sf.sin_function(
-                str(scalars[0]), wfrom, wuntil,
+                s, str(scalars[0]), wfrom, wuntil,
                 float(scalars[1]) if len(scalars) > 1 else 1.0,
                 int(scalars[2]) if len(scalars) > 2 else 60,
             )
         if name in ("randomWalk", "randomWalkFunction"):
             return sf.random_walk_function(
-                str(scalars[0]), wfrom, wuntil,
+                s, str(scalars[0]), wfrom, wuntil,
                 int(scalars[1]) if len(scalars) > 1 else 60,
             )
         if name == "constantLine":
-            return sf.constant_line(float(scalars[0]), wfrom, wuntil)
+            return sf.constant_line(s, float(scalars[0]), wfrom, wuntil)
         if name == "verticalLine":
             # the timestamp is a graphite at-time string resolved against
             # the window end (the injected "now" of the request)
@@ -1189,12 +1201,12 @@ def render(
 
             ts = parse_at_time(scalars[0], now_ts=wuntil)
             label = str(scalars[1]) if len(scalars) > 1 else "verticalLine"
-            return sf.vertical_line(ts, label, wfrom, wuntil)
+            return sf.vertical_line(s, ts, label, wfrom, wuntil)
         # label may arrive as a padded None when only color= is given
         # as a keyword — guard, don't stringify it
         label = scalars[1] if len(scalars) > 1 else None
         return sf.threshold_series(
-            float(scalars[0]), wfrom, wuntil,
+            s, float(scalars[0]), wfrom, wuntil,
             str(label) if label is not None else None,
         )
 
@@ -1495,7 +1507,7 @@ def render(
             tags = [str(s) for s in scalars if str(s) != "*"]
             label = ", ".join(str(s) for s in scalars)
             return sf.events_series(
-                events_fn(tags), f"events({label})", wfrom, wuntil
+                session(), events_fn(tags), f"events({label})", wfrom, wuntil
             )
         if name in _GENERATORS:
             if dfs or not scalars:

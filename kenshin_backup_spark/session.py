@@ -17,6 +17,20 @@ Scale notes (100 TB): these local settings mirror what a 1000-executor
 cluster deployment would set per-job — AQE on (runtime shuffle coalescing +
 skew-join splitting), shuffle partitions sized to ~2-3× total cores,
 broadcast threshold sized to the dimension tables.
+
+The render session: a dashboard-sized render request pays Spark's fixed
+cost per job, not its data volume, and most of its jobs are adaptive
+query stages over a few KB of shuffle. So ``Engine`` renders such a
+request in a session of its own, made once per engine with
+``spark.newSession()`` (own SQL conf; shared SparkContext and cache
+manager), tuned, then given :data:`RENDER_CONFS` (AQE off, one shuffle
+partition). The gate is a file listing, not a job: the parquet bytes of
+the routed level's ``date=`` partitions that overlap the request window,
+summed over the written ladders, must fit in one scan partition of the
+caller's session (its ``spark.sql.files.maxPartitionBytes``). A larger
+request renders on the caller's session as before. The caller's confs
+are never changed, and a rendered frame belongs to the session it was
+rendered on (``df.sparkSession``).
 """
 
 from __future__ import annotations
@@ -54,6 +68,15 @@ RUNTIME_CONFS: dict[str, str] = {
     # sources.tables.normalize_event_time converts whichever encoding
     # appears to TimestampType at load.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+#: Confs of the engine's render session, set after :func:`tune` (which
+#: resets both). No adaptive query stage runs as a job of its own, and a
+#: shuffle of a dashboard-sized input is one task.
+RENDER_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.shuffle.partitions": "1",
 }
 
 

@@ -653,29 +653,97 @@ def _count_jobs(spark, action) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+_GROUP_ORDER = [
+    "limit(group(sortBy(svc.h0.*, 'max'), svc.h1.m2), 3)",
+    "svc.h1.m2",
+    "svc.h0.m1",
+]
+
+
+def _render_rows(eng, now, targets):
+    return sorted(
+        map(tuple, eng.render_many(targets, now - 86400, now, now_ts=now).collect())
+    )
+
+
+def _above_gate_session(spark):
+    """A new session of ``spark`` whose scan partition (1 KB) is smaller
+    than any svc store window, so its engine renders every request on
+    this session rather than in its render session."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    return caller
+
+
 def test_render_many_job_counts(spark, tmp_path):
-    """A render request's plan grows linearly with nesting: nested calls
-    persist their intermediate frames, and a leaf fetch opens only the
-    routed ladder level. Both counts repeat exactly from run to run
-    (without those two cuts the same requests ran 97 and 8 jobs)."""
+    """A dashboard-sized request renders in the engine's render session
+    (no adaptive query stages, one shuffle partition): the group_order
+    request runs 15 jobs and a plain glob 4 (43 and 6 on the caller's
+    session, with adaptive execution). Both counts repeat exactly from
+    run to run."""
     eng, now = _svc_engine(spark, tmp_path)
-    group_order = [
-        "limit(group(sortBy(svc.h0.*, 'max'), svc.h1.m2), 3)",
-        "svc.h1.m2",
-        "svc.h0.m1",
-    ]
 
     def run(targets):
-        return lambda: eng.render_many(
-            targets, now - 86400, now, now_ts=now
-        ).collect()
+        return lambda: _render_rows(eng, now, targets)
 
-    counts = [_count_jobs(spark, run(group_order)) for _ in range(2)]
+    counts = [_count_jobs(spark, run(_GROUP_ORDER)) for _ in range(2)]
     assert counts[0] == counts[1]
-    assert counts[0] <= 45
+    assert counts[0] <= 15
     glob = [_count_jobs(spark, run(["svc.h0.*"])) for _ in range(2)]
     assert glob[0] == glob[1]
-    assert glob[0] <= 6
+    assert glob[0] <= 4
+
+
+def test_render_keeps_the_caller_session_confs(spark, tmp_path):
+    """The render session has confs of its own; a render changes none of
+    the caller's, including one the caller set itself."""
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.caseSensitive", "true")
+    eng, now = _svc_engine(caller, tmp_path)
+    keys = (
+        "spark.sql.adaptive.enabled",
+        "spark.sql.shuffle.partitions",
+        "spark.sql.caseSensitive",
+    )
+    before = {k: caller.conf.get(k) for k in keys}
+    df = eng.render_many(_GROUP_ORDER, now - 86400, now, now_ts=now)
+    df.collect()
+    assert df.sparkSession is not caller
+    assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert {k: caller.conf.get(k) for k in keys} == before
+    assert before["spark.sql.adaptive.enabled"] == "true"
+
+
+def test_render_above_the_gate_runs_on_the_caller_session(spark, tmp_path):
+    """A request whose window reads more parquet bytes than one scan
+    partition of the caller's session renders on that session, and
+    returns the rows the render session returns below the gate."""
+    below, now = _svc_engine(spark, tmp_path / "below")
+    caller = _above_gate_session(spark)
+    above, _ = _svc_engine(caller, tmp_path / "above")
+    for targets in (_GROUP_ORDER, ["svc.h0.*"]):
+        df = above.render_many(targets, now - 86400, now, now_ts=now)
+        assert df.sparkSession is caller
+        assert _render_rows(above, now, targets) == _render_rows(
+            below, now, targets
+        )
+
+
+def test_generator_frames_join_the_request_session(spark, tmp_path):
+    """A generator in a target is built on the request's session, so
+    ``group(svc.h0.*, constantLine(5))`` joins frames of one session: the
+    render session below the gate, with the rows of a render on the
+    caller's session above it."""
+    eng, now = _svc_engine(spark, tmp_path / "below")
+    above, _ = _svc_engine(_above_gate_session(spark), tmp_path / "above")
+    target = "group(svc.h0.*, constantLine(5))"
+    df = eng.render(target, now - 86400, now, now_ts=now)
+    assert df.sparkSession is eng._render_session()
+    ref = above.render(target, now - 86400, now, now_ts=now)
+    assert ref.sparkSession is above.spark
+    rows = sorted(map(tuple, df.collect()))
+    assert rows == sorted(map(tuple, ref.collect()))
+    assert {r[0] for r in rows} >= {"5.0", "svc.h0.m0"}
 
 
 def test_compact_and_fetch_after_expire_empties_a_level(spark, tmp_path):

@@ -4,14 +4,35 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pyspark.sql import Column
+
 from kenshin_backup_spark.operators.dedup import (
     exact_dedup,
     ngram_jaccard_pairs,
-    simhash64,
+    normalize_text,
+    shingles_from_words,
+    simhash_from_hashes,
     simhash_near_pairs,
-    word_shingles,
 )
 from kenshin_backup_spark.operators.similarity import cosine_topk, knn_label_vote
+
+
+def word_shingles(col: Column | str, n: int = 3) -> Column:
+    """Inline shingle expression, the oracle for the shingle step of
+    ``with_shingles`` on tiny inputs (hot paths materialize the words
+    first, see ``shingles_from_words``)."""
+    words = F.split(normalize_text(col), " ")
+    return shingles_from_words(words, n)
+
+
+def simhash64(col: Column | str, *, ngram: int = 2) -> Column:
+    """Inline SimHash expression, the oracle for ``with_simhash``'s
+    signature on tiny inputs (the inline words expression is re-run per
+    element inside the lambdas)."""
+    words = F.split(normalize_text(col), " ")
+    grams = shingles_from_words(words, ngram)
+    hashes = F.transform(grams, lambda g: F.xxhash64(g))
+    return simhash_from_hashes(hashes)
 
 
 def _docs(spark, texts):

@@ -6,10 +6,10 @@ from __future__ import annotations
 import datetime as dt
 import random
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from kenshin_backup_spark.operators.fetch import merge_hot
-from kenshin_backup_spark.operators.joins import asof_join, asof_join_pandas
+from kenshin_backup_spark.operators.joins import asof_join
 from kenshin_backup_spark.operators.rollup import (
     finalize,
     merge_partials,
@@ -18,6 +18,70 @@ from kenshin_backup_spark.operators.rollup import (
 )
 
 UTC = dt.timezone.utc
+
+
+def merge_hot(
+    disk: DataFrame, hot: DataFrame, *, key_cols: list[str]
+) -> DataFrame:
+    """Reference cache-query merge (SURVEY §2.1 S7): union the not-yet-
+    flushed streaming partials ("hot") with the materialized disk level
+    and re-merge per bucket. Hot and disk partials come from DISJOINT
+    point sets, so, as all partial state is associative, the merged
+    bucket equals a rollup over the union of the points."""
+    cols = [*key_cols, "bucket_ts", "cnt", "sum_q", "min_v", "max_v", "last_ts", "last_v"]
+    return merge_partials(
+        disk.select(cols).unionByName(hot.select(cols)), key_cols=key_cols
+    )
+
+
+def asof_join_pandas(
+    left: DataFrame,
+    right: DataFrame,
+    *,
+    on: str,
+    left_ts: str = "ts",
+    right_ts: str = "ts",
+    value_col: str,
+    suffix: str = "_asof",
+) -> DataFrame:
+    """As-of join via per-group ``pd.merge_asof`` under ``applyInPandas``
+    (backward, inclusive): the oracle ``asof_join``'s union-and-window
+    plan is checked against."""
+    import pandas as pd
+
+    out_val = f"{value_col}{suffix}"
+    out_ts = f"{right_ts}{suffix}_ts"
+    l_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in left.schema)
+    vt = dict((f.name, f.dataType.simpleString()) for f in right.schema)[value_col]
+    schema = f"{l_fields}, {out_val} {vt}, {out_ts} bigint"
+
+    left_names = list(left.columns)
+
+    def _merge(key, lpdf: "pd.DataFrame", rpdf: "pd.DataFrame") -> "pd.DataFrame":
+        lpdf = lpdf.sort_values("__lt")
+        if rpdf.empty:
+            out = lpdf[left_names].copy()
+            out[out_val] = None
+            out[out_ts] = None
+            return out
+        rpdf = rpdf.sort_values("__rt")[["__rt", value_col]].rename(
+            columns={value_col: "__rv"}
+        )
+        merged = pd.merge_asof(
+            lpdf, rpdf, left_on="__lt", right_on="__rt", direction="backward"
+        )
+        merged[out_val] = merged["__rv"]
+        merged[out_ts] = merged["__rt"]
+        return merged[[*left_names, out_val, out_ts]]
+
+    l2 = left.withColumn("__lt", F.unix_timestamp(F.col(left_ts)).cast("long"))
+    r2 = right.withColumn("__rt", F.unix_timestamp(F.col(right_ts)).cast("long"))
+    return (
+        l2.groupBy(on)
+        .cogroup(r2.groupBy(on))
+        .applyInPandas(_merge, schema)
+    )
+
 
 _PARTIAL_COLS = ["metric", "bucket_ts", "cnt", "sum_q", "min_v", "max_v",
                  "last_ts", "last_v"]

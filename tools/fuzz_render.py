@@ -29,6 +29,15 @@ Two generation dimensions:
    graphite-1.1 names and the empty series set, the two combinations
    the r12-judge fresh seed drew that the r12 grid did not construct.
 
+Differential check: every target that renders is rendered again on a
+second ``Engine`` over the same store, whose session has a scan
+partition (``spark.sql.files.maxPartitionBytes``) smaller than any
+window of the store. The first engine renders in its render session
+(adaptive execution off, one shuffle partition); the second is above
+that gate and renders on its own session with the package's confs. A
+difference in the row set is a failure: the render session's confs may
+change the plan, never the rows.
+
 Acceptable failure count: ZERO. The only tolerated outcomes are the
 documented graphite-parity LOUD errors listed in ``EXPECTED_ERRORS``
 (graphite itself raises there — a loud match is parity, not a bug).
@@ -44,6 +53,7 @@ with the exact target string for reproduction.
 from __future__ import annotations
 
 import argparse
+import math
 import os
 import random
 import re
@@ -51,6 +61,7 @@ import sys
 import tempfile
 import time
 import traceback
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -394,7 +405,20 @@ def is_expected(target: str, err: BaseException) -> bool:
     return False
 
 
+def _row_set(df) -> Counter:
+    """The rows of ``df`` as a multiset, NaN made comparable."""
+    return Counter(
+        tuple("NaN" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in df.collect()
+    )
+
+
 def build_engine(spark, root: str):
+    """``(engine, above, now)``: a store under ``root`` written through
+    ``engine``, and ``above``, an engine over the same store on a new
+    session whose 1 KB scan partition puts every non-empty request
+    window above the render-session gate. Each engine writes the same
+    points, so each knows the store's policies as written."""
     from pyspark.sql import functions as F
 
     from kenshin_backup_spark.api import Engine
@@ -424,6 +448,10 @@ def build_engine(spark, root: str):
     pts = spark.createDataFrame(
         rows, "metric string, ts long, value double"
     ).select("metric", F.col("ts").cast("timestamp").alias("ts"), "value")
+    above_session = spark.newSession()
+    above_session.conf.set("spark.sql.files.maxPartitionBytes", "1024")
+    above = Engine(above_session, root, policies=eng.policies)
+    above.write(pts)
     eng.write(pts)
     ev = spark.createDataFrame(
         [(now - 3600, "deploy web", ["deploy"]),
@@ -431,7 +459,7 @@ def build_engine(spark, root: str):
         "when long, what string, tags array<string>",
     )
     eng.write_events(ev)
-    return eng, now
+    return eng, above, now
 
 
 def main() -> int:
@@ -456,7 +484,7 @@ def main() -> int:
 
     spark = get_spark("fuzz-render")
     tmp = tempfile.mkdtemp(prefix="fuzz_render_store_")
-    eng, now = build_engine(spark, tmp)
+    eng, above, now = build_engine(spark, tmp)
     from_ts, until_ts = now - 86400, now
 
     templates = general_templates()
@@ -518,8 +546,39 @@ def main() -> int:
         else:
             cases.append(("render", (target,), mdp, xff, fw, uw))
 
+    def request(e, kind, targets, f_req, u_req, mdp, xff, pie_mode):
+        if kind == "render":
+            return e.render(
+                targets[0], f_req, u_req, now_ts=now,
+                max_data_points=mdp, x_files_factor=xff,
+            )
+        if kind == "many":
+            # r15 (ADVICE r14): render_many runs the DRAWN window —
+            # it used to draw one and then always pass epoch ints
+            return e.render_many(
+                list(targets), f_req, u_req, now_ts=now,
+                max_data_points=mdp, x_files_factor=xff,
+            )
+        if kind == "pie":
+            return e.render_pie(
+                targets[0], f_req, u_req, now_ts=now,
+                pie_mode=pie_mode, x_files_factor=xff,
+            )
+        # pie_many — mixes an expression with a literal slice
+        return e.render_pie_many(
+            list(targets), f_req, u_req, now_ts=now,
+            x_files_factor=xff, include_empty=False,
+        )
+
+    want_cols = {
+        "render": {"metric", "bucket_ts", "value"},
+        "many": {"target", "metric", "bucket_ts", "value"},
+        "pie": {"metric", "value"},
+        "pie_many": {"metric", "value"},
+    }
     failures = 0
     expected = 0
+    mismatches = 0
     t0 = time.time()
     for i, (kind, targets, mdp, xff, fw, uw) in enumerate(cases):
         # each case is one request: release the previous case's persisted
@@ -528,38 +587,22 @@ def main() -> int:
         target = "; ".join(targets)
         f_req = fw if fw is not None else from_ts
         u_req = uw if uw is not None else until_ts
+        pie_mode = (rng.choice(("average", "maximum", "minimum"))
+                    if kind == "pie" else None)
+        # r15 (ADVICE r14): include the drawn at-time window so
+        # window-dependent failures reproduce straight from the log
+        req = "".join([
+            f" (maxDataPoints={mdp}, xff={xff})" if (mdp or xff) else "",
+            f" [window {fw!r}..{uw!r}]" if (fw is not None
+                                            or uw is not None) else "",
+        ])
         try:
-            if kind == "render":
-                df = eng.render(
-                    targets[0], f_req, u_req, now_ts=now,
-                    max_data_points=mdp, x_files_factor=xff,
-                )
-                want = {"metric", "bucket_ts", "value"}
-            elif kind == "many":
-                # r15 (ADVICE r14): render_many runs the DRAWN window —
-                # it used to draw one and then always pass epoch ints
-                df = eng.render_many(
-                    list(targets), f_req, u_req, now_ts=now,
-                    max_data_points=mdp, x_files_factor=xff,
-                )
-                want = {"target", "metric", "bucket_ts", "value"}
-            elif kind == "pie":
-                df = eng.render_pie(
-                    targets[0], f_req, u_req, now_ts=now,
-                    pie_mode=rng.choice(("average", "maximum", "minimum")),
-                    x_files_factor=xff,
-                )
-                want = {"metric", "value"}
-            else:  # pie_many — mixes an expression with a literal slice
-                df = eng.render_pie_many(
-                    list(targets), f_req, u_req, now_ts=now,
-                    x_files_factor=xff, include_empty=False,
-                )
-                want = {"metric", "value"}
+            df = request(eng, kind, targets, f_req, u_req, mdp, xff, pie_mode)
+            want = want_cols[kind]
             cols = set(df.columns)
             assert cols == want, cols
             _t_case = time.time()
-            df.collect()
+            got = _row_set(df)
             # Pathological-but-correct compositions exist (r14 deep run:
             # a '-1w' request window puts events()' per-second grid at
             # 600k slots, and a '2h' moving window over THAT is O(n·w)
@@ -577,21 +620,37 @@ def main() -> int:
             if is_expected(target, e):
                 expected += 1
                 continue
+            got = None
             failures += 1
-            # r15 (ADVICE r14): include the drawn at-time window so
-            # window-dependent failures reproduce straight from the log
-            req = "".join([
-                f" (maxDataPoints={mdp}, xff={xff})" if (mdp or xff) else "",
-                f" [window {fw!r}..{uw!r}]" if (fw is not None
-                                                or uw is not None) else "",
-            ])
             print(f"FAIL [{i}] {kind}: {target}{req}")
             print("  " + traceback.format_exception_only(type(e), e)[-1].strip())
+        if got is not None:
+            clear_tracked()
+            try:
+                ref = _row_set(request(
+                    above, kind, targets, f_req, u_req, mdp, xff, pie_mode
+                ))
+            except KeyboardInterrupt:
+                raise
+            except Exception as e:  # noqa: BLE001 — reported below
+                ref = e
+            if ref != got:
+                mismatches += 1
+                failures += 1
+                print(f"MISMATCH [{i}] {kind}: {target}{req}")
+                if isinstance(ref, BaseException):
+                    print("  above the gate: " + traceback.format_exception_only(
+                        type(ref), ref)[-1].strip())
+                else:
+                    print(f"  only below the gate: {list((got - ref).elements())[:3]}")
+                    print(f"  only above the gate: {list((ref - got).elements())[:3]}")
         if (i + 1) % 50 == 0:
             print(f"  ... {i + 1}/{len(cases)} "
-                  f"({failures} fail, {expected} expected-loud, "
+                  f"({failures} fail, {mismatches} mismatched, "
+                  f"{expected} expected-loud, "
                   f"{time.time() - t0:.0f}s)")
-    print(f"fuzz_render: {len(cases)} cases, {failures} failures, "
+    print(f"fuzz_render: {len(cases)} cases, {failures} failures "
+          f"({mismatches} differential mismatches), "
           f"{expected} expected-loud errors, {time.time() - t0:.0f}s")
     return 1 if failures else 0
 
