@@ -379,7 +379,9 @@ class Engine:
         # persists.
         if memo is None:
             memo = {}
-        spark = self._request_session(memo, from_ts, until_ts, now_ts)
+        spark = self._request_session(
+            memo, [target], from_ts, until_ts, now_ts, x_files_factor
+        )
 
         def _fetch_cached(glob: str | None, f: int, u: int, now: int | None) -> DataFrame:
             # the key includes the fetch's effective now, so a refetch
@@ -425,12 +427,20 @@ class Engine:
     def _render_session(self) -> SparkSession:
         """The engine's render session, made on first use: a
         ``newSession()`` of the engine's session (shared SparkContext and
-        cache manager, own SQL conf), tuned, then given
-        :data:`~kenshin_backup_spark.session.RENDER_CONFS`, which
-        :func:`tune` would reset. Two threads that race here make two
-        equivalent sessions; each request still records one in its memo."""
+        cache manager), tuned, given every SQL conf the engine's session
+        holds with another value (so a conf the caller set, such as
+        ``spark.sql.caseSensitive``, means the same on both sides of the
+        gate), then :data:`~kenshin_backup_spark.session.RENDER_CONFS`,
+        which :func:`tune` would reset. The confs are copied once: a conf
+        the caller changes later reaches only its own session. Two
+        threads that race here make two equivalent sessions; each
+        request still records one in its memo."""
         if self._render_spark is None:
             small = tune(self.spark.newSession())
+            own = small.conf.getAll
+            for k, v in self.spark.conf.getAll.items():
+                if own.get(k) != v:
+                    small.conf.set(k, v)
             for k, v in RENDER_CONFS.items():
                 small.conf.set(k, v)
             self._render_spark = small
@@ -439,24 +449,47 @@ class Engine:
     def _request_session(
         self,
         memo: dict,
+        targets: list[str],
         from_ts: int | str,
         until_ts: int | str,
         now_ts: int | None,
+        x_files_factor: float | None,
     ) -> SparkSession:
         """The session every frame of one render request is built on,
-        recorded in the request's ``memo`` by the first render that sees
+        recorded in the request's ``memo`` by the first call that sees
         it. It is the render session when the request's input is
-        dashboard-sized: the parquet bytes a fetch of the window could
-        read (:func:`window_bytes`, a file listing), summed over the
-        written ladders, fit in one scan partition of the engine's
-        session (its ``spark.sql.files.maxPartitionBytes``). Otherwise
-        it is the engine's own session."""
+        dashboard-sized: the parquet bytes that the fetches of
+        ``targets`` could read, summed over the written ladders, fit in
+        one scan partition of the engine's session (its
+        ``spark.sql.files.maxPartitionBytes``, 128 MB by default). The
+        windows are the request window and every window a refetching
+        call reads (:func:`~kenshin_backup_spark.render.read_windows`:
+        timeShift, timeStack, linearRegression's source window, the
+        holtWinters bootstrap …); the bytes come from a file listing
+        (:func:`window_bytes`). Otherwise it is the engine's own session.
+        :meth:`render_many` and :meth:`render_pie_many` size all their
+        targets here before the first is built; a caller that shares one
+        memo across :meth:`render` calls gets the session its first call
+        sized for.
+
+        The bound is read through ``SQLConf.filesMaxPartitionBytes``,
+        the typed accessor the file scan itself splits by: PySpark's
+        public ``conf.get`` returns the unparsed byte string
+        (``'128MB'``). On 4 cores, the dashboard request mix renders
+        faster in the render session up to 68 MB of window bytes and
+        slower at 188 MB (CHANGES.md), so the default bound lies inside
+        the measured crossover; requests over a wide glob cross earlier."""
         spark = memo.get(_SESSION)
         if spark is None:
+            from kenshin_backup_spark.render import read_windows
+
             f, u = self._resolve_window(from_ts, until_ts, now_ts)
+            windows = {(f, u)}
+            for t in targets:
+                windows |= read_windows(t, f, u, x_files_factor)
             now = now_ts if now_ts is not None else u
             size = sum(
-                window_bytes(lad, from_ts=f, until_ts=u, now_ts=now)
+                window_bytes(lad, windows, now_ts=now)
                 for _, lad in self._written_ladders()
             )
             small = size <= self.spark._jconf.filesMaxPartitionBytes()
@@ -501,6 +534,9 @@ class Engine:
         if not targets:
             raise ValueError("render_many: need at least one target")
         memo: dict = {}
+        self._request_session(
+            memo, list(targets), from_ts, until_ts, now_ts, x_files_factor
+        )
         out: DataFrame | None = None
         for t in targets:
             part = self.render(
@@ -536,7 +572,8 @@ class Engine:
 
         Kernels (gaps are the frame's NULL slots):
 
-        - ``average`` — graphite's ``safeDiv(safeSum, safeLen)``: gaps
+        - ``average`` — graphite's ``safeDiv(safeSum, safeLen)``, the
+          sum added in time order (``seriesfns.ordered_sum``): gaps
           ignored; an all-gap series yields a NULL slice (graphite emits
           ``None`` and the pie renderer skips it — the row is kept here
           by default so the caller sees the series existed; pass
@@ -576,7 +613,8 @@ class Engine:
                     "(expected name:value)"
                 ) from None
             spark = self._request_session(
-                {} if memo is None else memo, from_ts, until_ts, now_ts
+                {} if memo is None else memo, [], from_ts, until_ts,
+                now_ts, x_files_factor,
             )
             return spark.range(1).select(
                 F.lit(name).alias("metric"),
@@ -586,11 +624,15 @@ class Engine:
             target, from_ts, until_ts,
             now_ts=now_ts, x_files_factor=x_files_factor, memo=memo,
         )
-        kernel = {"average": F.avg, "maximum": F.max, "minimum": F.min}[
-            pie_mode
-        ]
+        from kenshin_backup_spark.operators.seriesfns import ordered_sum
+
+        kernel = {
+            "average": ordered_sum() / F.count("value"),
+            "maximum": F.max("value"),
+            "minimum": F.min("value"),
+        }[pie_mode]
         slices = frame.groupBy("metric").agg(
-            kernel("value").cast("double").alias("value")
+            kernel.cast("double").alias("value")
         )
         if not include_empty:
             slices = slices.where(F.col("value").isNotNull())
@@ -624,6 +666,11 @@ class Engine:
         if not targets:
             raise ValueError("render_pie_many: need at least one target")
         memo: dict = {}
+        # literal name:value slices read nothing
+        self._request_session(
+            memo, [t for t in targets if ":" not in t], from_ts, until_ts,
+            now_ts, x_files_factor,
+        )
         out: DataFrame | None = None
         for t in targets:
             part = self.render_pie(

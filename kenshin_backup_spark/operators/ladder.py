@@ -32,7 +32,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -529,34 +529,49 @@ def load_levels(spark: SparkSession, ladder: Ladder) -> dict[int, DataFrame]:
 
 
 def window_bytes(
-    ladder: Ladder, *, from_ts: int, until_ts: int, now_ts: int
+    ladder: Ladder, windows: Iterable[tuple[int, int]], *, now_ts: int
 ) -> int:
-    """Parquet bytes that a fetch of the window could read: the files in
-    the ``date=`` partitions of the level :func:`fetch_from_ladder`
-    routes to that overlap the clamped window, from a file listing (no
-    Spark job). 0 when the window clamps to nothing."""
+    """Parquet bytes that fetches of ``windows`` ((from, until) pairs of
+    one request, whose clock is ``now_ts``) could read: per window, the
+    files in the ``date=`` partitions of the level
+    :func:`fetch_from_ladder` routes it to that overlap the clamped
+    window. One file listing per routed level, no Spark job. A window
+    that clamps to nothing adds 0; a day two windows share counts once
+    per window, as each fetch reads it."""
     import datetime as dt
 
-    try:
-        archive, lo, hi = route(list(ladder.archives), from_ts, until_ts, now_ts)
-    except ValueError:
-        return 0
-    step = archive.step_seconds
-
-    def day(ts: int) -> str:
+    def day(ts: int, step: int) -> str:
         aligned = dt.datetime.fromtimestamp(ts - ts % step, dt.timezone.utc)
         return aligned.date().isoformat()
 
-    first, last = day(lo), day(hi)
-    total = 0
-    for root, _, files in os.walk(ladder.level_path(step)):
-        part = os.path.basename(root)
-        if part.startswith("date=") and first <= part[len("date="):] <= last:
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files
-                if f.endswith(".parquet")
+    spans: dict[int, list[tuple[str, str]]] = {}
+    for from_ts, until_ts in windows:
+        try:
+            archive, lo, hi = route(
+                list(ladder.archives), from_ts, until_ts, now_ts
             )
+        except ValueError:
+            continue
+        step = archive.step_seconds
+        spans.setdefault(step, []).append((day(lo, step), day(hi, step)))
+    total = 0
+    for step, days in spans.items():
+        sizes: dict[str, int] = {}
+        for root, _, files in os.walk(ladder.level_path(step)):
+            part = os.path.basename(root)
+            if part.startswith("date="):
+                d = part[len("date="):]
+                sizes[d] = sizes.get(d, 0) + sum(
+                    os.path.getsize(os.path.join(root, f))
+                    for f in files
+                    if f.endswith(".parquet")
+                )
+        total += sum(
+            size
+            for d, size in sizes.items()
+            for first, last in days
+            if first <= d <= last
+        )
     return total
 
 

@@ -66,6 +66,26 @@ def _qsum(q) -> Column:
     return F.sum(q.cast("decimal(38,0)"))
 
 
+def ordered_sum() -> Column:
+    """Aggregate: the group's non-gap ``value`` doubles added in
+    ``bucket_ts`` order, as graphite's python ``sum()`` adds a series'
+    values. Unlike a plain double SUM it does not depend on the order
+    rows reach the aggregate (shuffle partition count, adaptive stages);
+    unlike :func:`_kernel`'s quantized sum it keeps the doubles
+    unrounded. NULL for an all-gap group. Its state is the group's
+    values, so it suits bounded groups: a consolidation band, one
+    rendered series."""
+    vals = F.array_sort(
+        F.collect_list(
+            F.when(F.col("value").isNotNull(), F.struct("bucket_ts", "value"))
+        )
+    )
+    return F.when(
+        F.size(vals) > 0,
+        F.aggregate(vals, F.lit(0.0), lambda acc, x: acc + x["value"]),
+    )
+
+
 #: Quantization for second-moment sums: value·1e3 keeps Σq² far below 2^63
 #: even for million-point series (see Bollinger-band precedent).
 _STDEV_QUANT = 1_000
@@ -2215,10 +2235,11 @@ def consolidate_points(
       documented deviation: graphite's del-loop yields a differently
       phased single point in this corner).
     - kernels: ``average`` (default) / ``sum`` / ``min`` / ``max`` /
-      ``first`` / ``last``, applied over the band's non-gap values;
-      an all-gap band stays a gap. No dangling trailing gap point is
-      synthesized (graphite's generator emits one when the point count
-      divides evenly — documented deviation).
+      ``first`` / ``last``, applied over the band's non-gap values
+      (``sum`` and ``average`` add them in time order, as graphite's
+      ``sum(usable)`` does); an all-gap band stays a gap. No dangling
+      trailing gap point is synthesized (graphite's generator emits one
+      when the point count divides evenly — documented deviation).
     - ``x_files_factor`` (the render-time ``xFilesFactor()`` hint,
       threaded by the evaluator like ``func_hint``): a band whose
       non-gap count is below ``xff · band_slots`` becomes a gap —
@@ -2242,7 +2263,8 @@ def consolidate_points(
     Scale: one shuffle total — the per-series (n, start, end) windows
     hash-partition on ``metric`` and the band aggregation groups on
     (metric, band), which the metric partitioning already clusters, so
-    Catalyst inserts no second Exchange. Band state is O(1) per group;
+    Catalyst inserts no second Exchange. Band state is the band's
+    non-gap values (:func:`ordered_sum`), at most ``valuesPerPoint``;
     nothing collects to the driver."""
     if max_data_points < 1:
         raise ValueError(f"maxDataPoints must be >= 1, got {max_data_points}")
@@ -2293,8 +2315,7 @@ def consolidate_points(
     nn_ts = F.when(F.col("value").isNotNull(), F.col("bucket_ts"))
     out = banded.groupBy("metric", "__band_ts").agg(
         F.first("__func").alias("__f"),
-        F.avg("value").alias("__avg"),
-        F.sum("value").alias("__sum"),
+        ordered_sum().alias("__sum"),
         F.min("value").alias("__min"),
         F.max("value").alias("__max"),
         F.min_by("value", nn_ts).alias("__first"),
@@ -2308,7 +2329,7 @@ def consolidate_points(
         .when(F.col("__f") == "max", F.col("__max"))
         .when(F.col("__f") == "first", F.col("__first"))
         .when(F.col("__f") == "last", F.col("__last"))
-        .otherwise(F.col("__avg"))
+        .otherwise(F.col("__sum") / F.col("__nn"))
     )
     if x_files_factor is not None:
         xff = _check_xff(x_files_factor)

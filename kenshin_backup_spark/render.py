@@ -757,6 +757,50 @@ def _time_stack_label(txt) -> str:
     return t if t[:1] in "+-" else "-" + t
 
 
+def _time_stack_range(scalars) -> tuple[int, int, int]:
+    """timeStack's (interval, start, end): copy ``i`` for ``i`` in
+    ``range(start, end)`` is the series ``i·interval`` seconds back (a
+    negative interval stacks into the future); defaults '1d', 0, 7."""
+    interval = (
+        _time_shift_frame_delta(scalars[0])
+        if len(scalars) > 0 and scalars[0] is not None else 86400
+    )
+    t_start = (
+        int(scalars[1]) if len(scalars) > 1 and scalars[1] is not None else 0
+    )
+    t_end = (
+        int(scalars[2]) if len(scalars) > 2 and scalars[2] is not None else 7
+    )
+    return interval, t_start, t_end
+
+
+def _linreg_source(scalars, wfrom: int, wuntil: int) -> tuple[int, int]:
+    """linearRegression's source window: startSourceAt/endSourceAt
+    at-time strings resolved against the request end, each defaulting
+    to the request's own bound."""
+    from kenshin_backup_spark.attime import parse_at_time
+
+    src_from = (
+        parse_at_time(scalars[0], now_ts=wuntil)
+        if len(scalars) > 0 and scalars[0] is not None else wfrom
+    )
+    src_until = (
+        parse_at_time(scalars[1], now_ts=wuntil)
+        if len(scalars) > 1 and scalars[1] is not None else wuntil
+    )
+    return src_from, src_until
+
+
+def _hw_bootstrap(name: str, scalars) -> int:
+    """holtWinters' bootstrapInterval in seconds (graphite default '7d');
+    it is the first scalar of holtWintersForecast, the second of the
+    others (after delta)."""
+    i = 0 if name == "holtWintersForecast" else 1
+    if len(scalars) > i and scalars[i] is not None:
+        return parse_interval(scalars[i])
+    return parse_interval("7d")
+
+
 def _union(d: list) -> "DataFrame":
     """graphite's *seriesLists: several series expressions union before
     a combine function; a single argument passes through untouched (so
@@ -1046,6 +1090,151 @@ def _resolve_kwargs(
     return full
 
 
+def _call_args(
+    name: str, args: list, x_files_factor: float | None
+) -> tuple[list, list]:
+    """Split a parsed call's arguments into its series nodes and its
+    scalar list, keywords folded in (:func:`_resolve_kwargs`) and the
+    request-level ``x_files_factor`` default applied."""
+    series_nodes, scalars, kwargs = [], [], {}
+    for a in args:
+        if a[0] == "kw":
+            if a[2][0] in ("leaf", "call"):
+                raise ValueError(
+                    f"{name}: keyword argument {a[1]}= must be a "
+                    "scalar (series-valued keywords are not "
+                    "supported — pass the series positionally)"
+                )
+            if a[1] in kwargs:
+                raise ValueError(f"{name}: duplicate keyword {a[1]!r}")
+            kwargs[a[1]] = a[2][1]
+        elif a[0] in ("leaf", "call"):
+            if kwargs:
+                raise ValueError(
+                    f"{name}: positional argument after a keyword"
+                )
+            series_nodes.append(a)
+        else:
+            if kwargs:
+                raise ValueError(
+                    f"{name}: positional argument after a keyword"
+                )
+            scalars.append(a[1])
+    scalars = _resolve_kwargs(name, scalars, kwargs)
+    # request-level xFilesFactor default (graphite's &xFilesFactor=):
+    # fills any OPTIONAL xFilesFactor parameter (spec default None)
+    # the call left unset; explicit values — including explicit
+    # None — at that position are never overridden by padding an
+    # earlier-required gap (those fail later with their own error)
+    if x_files_factor is not None and name in _KW_PARAMS:
+        params = _KW_PARAMS[name]
+        for idx, (pname, pdefault) in enumerate(params):
+            if pname != "xFilesFactor" or pdefault is not None:
+                continue
+            if idx < len(scalars):
+                if scalars[idx] is None:
+                    scalars[idx] = x_files_factor
+            else:
+                pad, ok = [], True
+                for j in range(len(scalars), idx):
+                    dj = params[j][1]
+                    if dj is _Required or dj is _Variadic:
+                        ok = False
+                        break
+                    pad.append(dj)
+                if ok:
+                    scalars = scalars + pad + [x_files_factor]
+            break
+    return series_nodes, scalars
+
+
+def _refetch_windows(
+    name: str, scalars: list, wfrom: int, wuntil: int
+) -> list[tuple[int, int]] | None:
+    """The windows a request-refetching call evaluates its series
+    argument under when :func:`render` has a ``refetch_fn``, from the
+    helpers its evaluator uses; None for any other call, whose series
+    arguments see the window it is called under."""
+    if name == "hitcount":
+        if (
+            len(scalars) > 1
+            and scalars[1] is not None
+            and _to_bool(scalars[1])
+        ):
+            aligned = _align_request_start(wfrom, parse_interval(scalars[0]))
+            return [(aligned, wuntil)]
+        return None
+    if name == "linearRegression":
+        if any(s is not None for s in scalars):
+            return [(wfrom, wuntil), _linreg_source(scalars, wfrom, wuntil)]
+        return None
+    if name == "smartSummarize":
+        if len(scalars) > 2 and scalars[2] is not None:
+            aligned = _align_to_calendar_unit(wfrom, str(scalars[2]))
+            return [(aligned, wuntil)]
+        return None
+    if name == "timeShift":
+        delta = -_time_shift_frame_delta(scalars[0])
+        return [(wfrom + delta, wuntil + delta)]
+    if name == "timeStack":
+        interval, t_start, t_end = _time_stack_range(scalars)
+        return [
+            (wfrom - i * interval, wuntil - i * interval)
+            for i in range(t_start, t_end)
+        ] or None
+    if name in _HW_FAMILY:
+        return [(wfrom - _hw_bootstrap(name, scalars), wuntil)]
+    return None
+
+
+def read_windows(
+    target: str,
+    from_ts: int,
+    until_ts: int,
+    x_files_factor: float | None = None,
+) -> set[tuple[int, int]]:
+    """The (from, until) windows whose store fetches ``Engine.render``
+    makes for ``target`` over the request window: the request window of
+    every leaf and tag query, and the adjusted windows of the
+    refetching calls (hitcount's alignToInterval, linearRegression's
+    source window, smartSummarize's alignTo, timeShift, every timeStack
+    copy, the holtWinters bootstrap), composed through nested calls and
+    applyByNode templates. No Spark: the engine sizes a request with it
+    before it picks the request's session. A call whose arguments do not
+    parse is walked under its own window; the evaluator reports it. The
+    targets aliasQuery builds from series names at evaluation time are
+    not known here; they read the window aliasQuery is called under."""
+    out: set[tuple[int, int]] = set()
+
+    def walk(node, wfrom: int, wuntil: int) -> None:
+        if node[0] == "leaf":
+            out.add((wfrom, wuntil))
+            return
+        _, name, args = node
+        try:
+            series, scalars = _call_args(name, args, x_files_factor)
+            subs = _refetch_windows(name, scalars, wfrom, wuntil)
+        except (ValueError, TypeError, IndexError):
+            series = [a for a in args if a[0] in ("leaf", "call")]
+            scalars, subs = [], None
+        if name == "seriesByTag":
+            out.add((wfrom, wuntil))
+        if subs is not None and series:
+            for f, u in subs:
+                walk(series[0], f, u)
+            return
+        for sn in series:
+            walk(sn, wfrom, wuntil)
+        if name == "applyByNode" and len(scalars) > 1:
+            template = str(scalars[1]).replace("%", "x")
+            try:
+                walk(_Parser(_tokenize(template)).parse(), wfrom, wuntil)
+            except ValueError:
+                pass
+
+    walk(_Parser(_tokenize(target)).parse(), from_ts, until_ts)
+    return out
+
 #: holtWinters family — bootstrapInterval re-fetches on the r10 rail.
 _HW_FAMILY = frozenset({
     "holtWintersForecast", "holtWintersConfidenceBands",
@@ -1229,55 +1418,7 @@ def render(
                 f"unsupported function {name!r}; supported: "
                 f"{', '.join(SUPPORTED_FUNCTIONS)}"
             )
-        series_nodes, scalars, kwargs = [], [], {}
-        for a in args:
-            if a[0] == "kw":
-                if a[2][0] in ("leaf", "call"):
-                    raise ValueError(
-                        f"{name}: keyword argument {a[1]}= must be a "
-                        "scalar (series-valued keywords are not "
-                        "supported — pass the series positionally)"
-                    )
-                if a[1] in kwargs:
-                    raise ValueError(f"{name}: duplicate keyword {a[1]!r}")
-                kwargs[a[1]] = a[2][1]
-            elif a[0] in ("leaf", "call"):
-                if kwargs:
-                    raise ValueError(
-                        f"{name}: positional argument after a keyword"
-                    )
-                series_nodes.append(a)
-            else:
-                if kwargs:
-                    raise ValueError(
-                        f"{name}: positional argument after a keyword"
-                    )
-                scalars.append(a[1])
-        scalars = _resolve_kwargs(name, scalars, kwargs)
-        # request-level xFilesFactor default (graphite's &xFilesFactor=):
-        # fills any OPTIONAL xFilesFactor parameter (spec default None)
-        # the call left unset; explicit values — including explicit
-        # None — at that position are never overridden by padding an
-        # earlier-required gap (those fail later with their own error)
-        if x_files_factor is not None and name in _KW_PARAMS:
-            params = _KW_PARAMS[name]
-            for idx, (pname, pdefault) in enumerate(params):
-                if pname != "xFilesFactor" or pdefault is not None:
-                    continue
-                if idx < len(scalars):
-                    if scalars[idx] is None:
-                        scalars[idx] = x_files_factor
-                else:
-                    pad, ok = [], True
-                    for j in range(len(scalars), idx):
-                        dj = params[j][1]
-                        if dj is _Required or dj is _Variadic:
-                            ok = False
-                            break
-                        pad.append(dj)
-                    if ok:
-                        scalars = scalars + pad + [x_files_factor]
-                break
+        series_nodes, scalars = _call_args(name, args, x_files_factor)
 
         def sub_window(new_from, new_until):
             if refetch_fn is None:
@@ -1325,17 +1466,7 @@ def render(
                     "request window: render(..., from_ts=, until_ts=)"
                 )
             _need(series_nodes, 1, 1, name)
-            from kenshin_backup_spark.attime import parse_at_time
-
-            src_from = (
-                parse_at_time(scalars[0], now_ts=wuntil)
-                if scalars[0] is not None else wfrom
-            )
-            src_until = (
-                parse_at_time(scalars[1], now_ts=wuntil)
-                if len(scalars) > 1 and scalars[1] is not None
-                else wuntil
-            )
+            src_from, src_until = _linreg_source(scalars, wfrom, wuntil)
             base = ev(series_nodes[0], w)
             source = ev(series_nodes[0], sub_window(src_from, src_until))
             return sf.linear_regression(base, source_df=source)
@@ -1378,13 +1509,7 @@ def render(
             # in-frame shift stands (the period-over-period composition
             # form — documented).
             _need(series_nodes, 1, 1, name)
-            txt = str(scalars[0]).strip()
-            if txt.startswith("+"):
-                delta = parse_interval(txt[1:])
-            elif txt[:1].isdigit():
-                delta = -parse_interval(txt)
-            else:
-                delta = parse_interval(txt)
+            delta = -_time_shift_frame_delta(scalars[0])
             reset_end = (
                 _to_bool(scalars[1])
                 if len(scalars) > 1 and scalars[1] is not None
@@ -1413,21 +1538,10 @@ def render(
             # with the fallback via _time_shift_frame_delta: '1d' and
             # '-1d' both mean the past, '+1d' the future (ADVICE r10).
             _need(series_nodes, 1, 1, name)
-            interval = (
-                _time_shift_frame_delta(scalars[0])
-                if len(scalars) > 0 and scalars[0] is not None else 86400
-            )
+            interval, t_start, t_end = _time_stack_range(scalars)
             unit = (
                 _time_stack_label(scalars[0])
                 if len(scalars) > 0 and scalars[0] is not None else "-1d"
-            )
-            t_start = (
-                int(scalars[1])
-                if len(scalars) > 1 and scalars[1] is not None else 0
-            )
-            t_end = (
-                int(scalars[2])
-                if len(scalars) > 2 and scalars[2] is not None else 7
             )
             if t_end <= t_start:
                 # graphite: range(start, end) is empty → the empty list
@@ -1454,19 +1568,15 @@ def render(
             # deviation).
             _need(series_nodes, 1, 1, name)
             if name == "holtWintersForecast":
-                boot_i, season_i, delta = 0, 1, None
+                season_i, delta = 1, None
             else:
-                boot_i, season_i = 1, 2
+                season_i = 2
                 delta = (
                     float(scalars[0])
                     if len(scalars) > 0 and scalars[0] is not None
                     else 3.0
                 )
-            boot = (
-                parse_interval(scalars[boot_i])
-                if len(scalars) > boot_i and scalars[boot_i] is not None
-                else parse_interval("7d")
-            )
+            boot = _hw_bootstrap(name, scalars)
             season = _hw_season(scalars, season_i)
             sub = ev(series_nodes[0], sub_window(wfrom - boot, wuntil))
             if name == "holtWintersForecast":

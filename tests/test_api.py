@@ -696,7 +696,8 @@ def test_render_many_job_counts(spark, tmp_path):
 
 def test_render_keeps_the_caller_session_confs(spark, tmp_path):
     """The render session has confs of its own; a render changes none of
-    the caller's, including one the caller set itself."""
+    the caller's, including one the caller set itself, and the render
+    session carries that one too."""
     caller = spark.newSession()
     caller.conf.set("spark.sql.caseSensitive", "true")
     eng, now = _svc_engine(caller, tmp_path)
@@ -710,6 +711,7 @@ def test_render_keeps_the_caller_session_confs(spark, tmp_path):
     df.collect()
     assert df.sparkSession is not caller
     assert df.sparkSession.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert df.sparkSession.conf.get("spark.sql.caseSensitive") == "true"
     assert {k: caller.conf.get(k) for k in keys} == before
     assert before["spark.sql.adaptive.enabled"] == "true"
 
@@ -728,6 +730,31 @@ def test_render_above_the_gate_runs_on_the_caller_session(spark, tmp_path):
             below, now, targets
         )
 
+
+
+def test_render_gate_sizes_the_refetched_windows(spark, tmp_path):
+    """The gate counts every window a target reads. With a scan
+    partition exactly the size of the request window, a plain target
+    renders in the render session, while timeStack, which also reads the
+    two days before, and a render_many holding it render on the caller's
+    session."""
+    from kenshin_backup_spark.operators.ladder import window_bytes
+
+    caller = spark.newSession()
+    eng, now = _svc_engine(caller, tmp_path)
+    (_, lad), = eng._written_ladders()
+    window = window_bytes(lad, [(now - 86400, now)], now_ts=now)
+    caller.conf.set("spark.sql.files.maxPartitionBytes", str(window))
+    stack = "timeStack(svc.h0.m1, '1d', 0, 3)"
+
+    def session(targets):
+        return eng.render_many(
+            targets, now - 86400, now, now_ts=now
+        ).sparkSession
+
+    assert session(["svc.h0.m1"]) is eng._render_session()
+    assert session([stack]) is caller
+    assert session(["svc.h0.m1", stack]) is caller
 
 def test_generator_frames_join_the_request_session(spark, tmp_path):
     """A generator in a target is built on the request's session, so

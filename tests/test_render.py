@@ -13,6 +13,7 @@ from kenshin_backup_spark.render import (
     _Parser,
     _tokenize,
     parse_interval,
+    read_windows,
     render,
 )
 
@@ -1201,6 +1202,52 @@ def test_hitcount_align_to_interval(spark):
     with pytest.raises(ValueError, match="request"):
         render("hitcount(c.m, '2h', true)", fetch, refetch_fn=refetch)
 
+
+
+def test_read_windows_match_the_evaluator(spark):
+    """read_windows names exactly the windows the evaluator fetches
+    under: the request window for leaves, and every adjusted window of
+    a refetching call, nested ones and applyByNode templates included
+    (the engine sizes a request with it before choosing its session)."""
+    day = 86400
+    base = spark.createDataFrame(
+        [("c.m", t, 1.0) for t in range(0, 40 * day, 3600)],
+        "metric string, bucket_ts long, value double",
+    )
+    lo, hi = 30 * day + 5000, 31 * day + 5000
+    seen: set = set()
+
+    def fetch(glob):
+        seen.add((lo, hi))
+        return base
+
+    def refetch(glob, a, b):
+        seen.add((a, b))
+        return base
+
+    for target in (
+        "c.m",
+        "group(c.m, constantLine(1))",
+        "seriesByTag('name=c.m')",
+        "timeShift(c.m, '1d')",
+        "timeShift(c.m, '+2h', false)",
+        "timeStack(c.m, '1d', 0, 3)",
+        "timeStack(c.m, '+1h', 1, 3)",
+        "timeStack(c.m, '1d', 2, 2)",
+        "linearRegression(c.m, '-3d')",
+        "linearRegression(c.m, '-3d', '-1d')",
+        "holtWintersForecast(c.m)",
+        "holtWintersConfidenceBands(c.m, 2, '3d')",
+        "hitcount(c.m, '1d', true)",
+        "smartSummarize(c.m, '1d', 'sum', 'days')",
+        "timeShift(timeStack(c.m, '1d', 0, 2), '2d')",
+        "sumSeries(c.m, timeShift(c.m, '1h'))",
+        "holtWintersAberration(timeShift(c.m, '1d'), 3, '2d')",
+        "applyByNode(c.*, 0, 'timeShift(%.m, \"1d\")')",
+    ):
+        seen.clear()
+        render(target, fetch, from_ts=lo, until_ts=hi, refetch_fn=refetch)
+        assert read_windows(target, lo, hi) == seen, target
 
 def test_align_request_start_units():
     from kenshin_backup_spark.render import _align_request_start

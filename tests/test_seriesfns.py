@@ -1052,6 +1052,27 @@ def test_consolidate_points_tiny_budget_clamp(spark):
         S.consolidate_points(df, 2, func_hint="median")
 
 
+
+def test_consolidate_points_adds_in_time_order(spark):
+    """sum and average add a band's values in time order, as graphite's
+    sum(usable) does, whatever order the rows reach the aggregate: the
+    band of 0.1, 0.2, 0.3 is (0.1 + 0.2) + 0.3, one ULP above
+    0.1 + (0.2 + 0.3), fed forwards, backwards or spread over
+    partitions."""
+    rows = [
+        ("m", 60 * i, v) for i, v in enumerate([1.0, 1.0, 1.0, 0.1, 0.2, 0.3])
+    ]
+    band = (0.1 + 0.2) + 0.3
+    assert band != 0.3 + 0.2 + 0.1
+    for order in (rows, rows[::-1]):
+        for parts in (1, 3):
+            df = _series(spark, order).coalesce(1).repartition(parts)
+            # mdp=2: vpp=3, bands nudge to 180 → slots 180, 240, 300
+            got = S.consolidate_points(df, 2).collect()
+            assert [(r.bucket_ts, r.value) for r in got] == [(180, band / 3)]
+            got = S.consolidate_points(df, 2, func_hint="sum").collect()
+            assert [(r.bucket_ts, r.value) for r in got] == [(180, band)]
+
 def test_moving_family_xfilesfactor_gate(spark):
     """graphite 1.1 moving*(…, xFilesFactor): windows whose non-gap
     count is below xff·windowSize become gaps (float compare; gap slots
