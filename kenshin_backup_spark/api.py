@@ -36,12 +36,14 @@ from pyspark.sql import functions as F
 from kenshin_backup_spark.functions.deterministic import glob_to_regex
 from kenshin_backup_spark.operators.fetch import Archive, metric_filter
 from kenshin_backup_spark.operators.ladder import (
+    LADDER_COL,
     Ladder,
-    build_ladder,
+    build_ladders,
     compact_level,
     delete_metrics,
     expire_retention,
     fetch_from_ladder,
+    read_level,
     window_bytes,
 )
 from kenshin_backup_spark.operators.policies import (
@@ -95,11 +97,13 @@ class Engine:
         """The policy :meth:`write` routes one metric name to: the first
         whose pattern matches (carbon semantics), else the policy named
         ``default``. Raises ``ValueError`` for a metric that routes to
-        neither, as ``write`` stores none of its points."""
-        import re
-
+        neither, as ``write`` stores none of its points. Patterns match
+        with ``java.util.regex`` ``find()``, exactly as ``write``'s
+        ``rlike`` does (Python's ``re`` rejects some Java patterns, such
+        as ``\\p{Lower}``, and reads others differently)."""
+        pattern = self.spark._jvm.java.util.regex.Pattern
         for p in self.policies:
-            if re.search(p.pattern, metric):
+            if pattern.compile(p.pattern).matcher(metric).find():
                 return p
         for p in self.policies:
             if p.name == DEFAULT_POLICY.name:
@@ -123,9 +127,9 @@ class Engine:
         cat = None
         for _, lad in self._written_ladders():
             finest = min(a.step_seconds for a in lad.archives)
-            scan = self.spark.read.parquet(lad.level_path(finest)).select(
-                "metric"
-            )
+            scan = read_level(
+                self.spark, lad, lad.level_path(finest)
+            ).select("metric")
             cat = scan if cat is None else cat.unionByName(scan)
         return cat
 
@@ -142,30 +146,30 @@ class Engine:
     ) -> tuple[int, int] | None:
         """Materialize the retention ladder(s) for a long points frame.
 
-        One path for every engine: :func:`assign_policy` tags each point
-        with its metric's policy (first match, else ``default``; carbon
-        semantics), and each policy's rows, ``where(policy == name)``,
-        feed :func:`build_ladder`, which builds that policy's ladder
-        fine→coarse with cascaded aggregates (never re-reading raw) and
-        swaps each level in beside the old one. With one policy, Catalyst
-        folds the tag and the filter to that policy's own predicate.
-        Re-writing a policy's ladder replaces it (the batch equivalent of
-        the streaming update sink). Emptiness is read from the written
-        level: a policy no row routes to gets a fine-level write that
-        holds no parquet file, which ``build_ladder`` discards, so the
-        policy is not marked written and any ladder it had stays as it
-        was; no separate emptiness probe runs.
+        :func:`assign_policy` tags each point with its metric's policy
+        (first match, else ``default``; carbon semantics), and one
+        :func:`build_ladders` call builds every policy's ladder from the
+        tagged rows: one raw pass, then one exchange and one write per
+        level rank, each level cascaded from the one before (never
+        re-reading raw) and swapped in beside the old one. Re-writing a
+        policy's ladder replaces it (the batch equivalent of the
+        streaming update sink). A policy no row routes to stages
+        nothing: it costs no write, is not marked written, and any
+        ladder it had stays as it was.
 
         ``observe_bounds=True`` additionally returns the EXACT
         ``(min, max)`` epoch seconds of the written points' timestamps,
-        captured with ``DataFrame.observe`` on the ladder-build pass
+        captured with one ``DataFrame.observe`` on the build's raw pass
         itself — the store-backed render queries need the raw bounds to
         frame their request window, and a separate ``agg(min, max)``
         would be a second full pass over the raw input for two scalars
-        the build already reads (guide §1.1). With ``observe_bounds=True``
-        an input that writes nothing (empty, or no row matches a policy)
-        raises ``ValueError`` naming the store root — there are no bounds
-        to return. Without it the method returns ``None``."""
+        the build already reads (guide §1.1). The observation is read
+        only when something was written: under adaptive execution an
+        observation on an empty aggregated write is never delivered.
+        With ``observe_bounds=True`` an input that writes nothing
+        (empty, or no row matches a policy) raises ``ValueError`` naming
+        the store root — there are no bounds to return. Without it the
+        method returns ``None``."""
         from pyspark.sql import Observation
 
         pts = points.select(
@@ -173,40 +177,40 @@ class Engine:
             F.col(ts_col).alias("ts"),
             F.col(value_col).alias("value"),
         )
-        tagged = assign_policy(pts, self.policies)
-        lo: int | None = None
-        hi: int | None = None
-        for p in self.policies:
-            sub = tagged.where(F.col("policy") == p.name).drop("policy")
-            ob = None
-            if observe_bounds:
-                # The metrics come from the FIRST action on this plan —
-                # build_ladder's fine-level write, a full pass. Read them
-                # only when that write stored something: under adaptive
-                # execution an observation on an empty aggregated write
-                # is never delivered.
-                ob = Observation()
-                es = F.unix_timestamp(F.col("ts")).cast("long")
-                sub = sub.observe(
-                    ob, F.min(es).alias("lo"), F.max(es).alias("hi")
-                )
-            if not build_ladder(sub, self._ladder(p)):
-                continue
-            self._written.add(p.name)
-            if ob is not None:
-                got = ob.get
-                if got["lo"] is not None:
-                    lo = got["lo"] if lo is None else min(lo, got["lo"])
-                    hi = got["hi"] if hi is None else max(hi, got["hi"])
+        index = None
+        for i, p in enumerate(self.policies):
+            hit = F.col("policy") == p.name
+            index = F.when(hit, i) if index is None else index.when(hit, i)
+        # a row that matches no pattern is tagged 'default'; without a
+        # policy of that name it routes nowhere
+        routed = (
+            assign_policy(pts, self.policies)
+            .select("metric", "ts", "value", index.alias(LADDER_COL))
+            .where(F.col(LADDER_COL).isNotNull())
+        )
+        ob = None
         if observe_bounds:
-            if lo is None:
-                raise ValueError(
-                    f"Engine.write(observe_bounds=True) on {self.root}: "
-                    "nothing was written (empty input), so there are no "
-                    "bounds to return"
-                )
-            return int(lo), int(hi)
-        return None
+            ob = Observation()
+            es = F.unix_timestamp(F.col("ts")).cast("long")
+            routed = routed.observe(
+                ob, F.min(es).alias("lo"), F.max(es).alias("hi")
+            )
+        written = build_ladders(
+            routed, [self._ladder(p) for p in self.policies]
+        )
+        self._written.update(
+            p.name for p, w in zip(self.policies, written) if w
+        )
+        if ob is None:
+            return None
+        got = ob.get if any(written) else {"lo": None}
+        if got["lo"] is None:
+            raise ValueError(
+                f"Engine.write(observe_bounds=True) on {self.root}: "
+                "nothing was written (empty input), so there are no "
+                "bounds to return"
+            )
+        return int(got["lo"]), int(got["hi"])
 
     def write_events(
         self,
@@ -522,10 +526,10 @@ class Engine:
         sample adds jobs. Every target is built on one session, the
         engine's render session for a dashboard-sized input (see
         :meth:`render`). There, on a 3-level single-policy store, a plain
-        glob request runs 4 jobs and the 3-target
-        ``limit(group(sortBy(a.*,'max'), b), 3)`` request 15
+        glob request runs 3 jobs and the 3-target
+        ``limit(group(sortBy(a.*,'max'), b), 3)`` request 12
         (``tests/test_api.py`` pins both; on the engine's own session,
-        with adaptive execution on, they run 6 and 43). Two mechanisms
+        with adaptive execution on, they run 5 and 40). Two mechanisms
         keep every subtree computed once per request: the leaf memo
         (targets referencing the same (glob, window) leaf share ONE fetch
         plan + persist) and the persisted intermediate frames of nested
@@ -692,19 +696,28 @@ class Engine:
         is the dry-run). Atomic per level (rewrite-to-temp + swap, same
         discipline as compaction); returns
         ``{policy: {step_seconds: rows_deleted}}`` as the erasure
-        receipt."""
-        exact = not any(ch in glob for ch in "*?{[")
-        regex = glob_to_regex(glob)
+        receipt. An exact name can only be stored in the ladder of the
+        policy it routes to (:meth:`policy_for`), so only that ladder is
+        read and rewritten; every other written policy reports 0 rows per
+        level without a Spark job."""
         receipt: dict[str, dict[int, int]] = {}
-        for p, lad in self._written_ladders():
-            if exact:
-                # exact-name deletes take the bucket-pruned path on a
-                # bucketed ladder (and a plain isin rewrite on a flat one)
-                receipt[p.name] = delete_metrics(
-                    self.spark, lad, metrics=[glob]
-                )
-            else:
+        if any(ch in glob for ch in "*?{["):
+            regex = glob_to_regex(glob)
+            for p, lad in self._written_ladders():
                 receipt[p.name] = delete_metrics(self.spark, lad, regex)
+            return receipt
+        try:
+            home = self.policy_for(glob).name
+        except ValueError:
+            home = None
+        for p, lad in self._written_ladders():
+            # exact-name deletes take the bucket-pruned path on a
+            # bucketed ladder (and a plain isin rewrite on a flat one)
+            receipt[p.name] = (
+                delete_metrics(self.spark, lad, metrics=[glob])
+                if p.name == home
+                else {a.step_seconds: 0 for a in lad.archives}
+            )
         return receipt
 
     # -- header / catalog -----------------------------------------------------

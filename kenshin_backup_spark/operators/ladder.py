@@ -10,14 +10,16 @@ This module is the batch materializer; the streaming twin is
 ``streaming/ingest.py`` (same partial schema, so a streaming level-0 plus
 batch cascade compose exactly).
 
-Scale notes (100 TB): each level is ONE hash-aggregate shuffle keyed on
-(metric, bucket); the cascade keeps every level's input proportional to
-the *previous level's cardinality*, not raw row count. Every level's
-aggregate runs at ``spark.sql.shuffle.partitions`` and adaptive query
-execution coalesces the small shuffle partitions of the coarser levels;
-there is no explicit per-level repartition. Each level is written
-partitioned by ``date`` (``mbucket``/``date`` when bucketed) and sorted
-by metric within each write task.
+Scale notes (100 TB): the cascade keeps every level's input
+proportional to the *previous level's cardinality*, not raw row count.
+:func:`build_ladders` builds level *k* of every ladder in one pass: the
+round's input is repartitioned by (ladder, date of the new bucket), so
+the aggregate needs no further exchange and each round is one shuffle
+plus one write, with one task (one file) per (ladder, date), as
+compaction has. At 100 TB repartition on (ladder, date, metric-hash
+bucket) instead, so a day of raw points is not one task. Each level is
+written partitioned by ``date`` (``mbucket``/``date`` when bucketed) and
+sorted by metric within each write task.
 
 Every level write (a build, a compaction, a delete's rewrite) goes to a
 sibling temp directory that is then swapped in by :func:`_swap_in`, so a
@@ -29,17 +31,27 @@ finer levels new and that level and the coarser ones old.
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import shutil
 import uuid
-from collections.abc import Callable, Iterable
+from collections.abc import Callable, Iterable, Sequence
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from kenshin_backup_spark.operators.fetch import Archive, fetch, route
-from kenshin_backup_spark.operators.rollup import cascade, rollup_partials
+from kenshin_backup_spark.operators.rollup import (
+    align_epoch,
+    cascade,
+    rollup_partials,
+)
+
+#: Column of :func:`build_ladders`' input holding each row's ladder index.
+LADDER_COL = "ladder"
 
 
 @dataclass(frozen=True)
@@ -61,21 +73,28 @@ class Ladder:
     def manifest_path(self) -> str:
         return f"{self.root}/_kenshin_layout.json"
 
+    def _manifest(self) -> dict:
+        """The layout manifest's content (``{}`` when it is missing or
+        not a JSON object)."""
+        try:
+            with open(self.manifest_path()) as fh:
+                manifest = json.load(fh)
+        except (OSError, ValueError):
+            return {}
+        return manifest if isinstance(manifest, dict) else {}
+
     def on_disk_metric_buckets(self) -> int | None:
         """The bucket count the data was actually WRITTEN with.
 
-        Read from the layout manifest :func:`build_ladder` drops at the
+        Read from the layout manifest :func:`build_ladders` drops at the
         ladder root (the root is never swapped, so level rewrites can't
         lose it). For pre-manifest ladders, inferred from the directory
         shape: ``mbucket=`` entries under any level → bucketed with an
         unknowable N (``-1``); only ``date=`` entries → flat (``0``).
         ``None`` = nothing materialized yet."""
-        import json
-
         try:
-            with open(self.manifest_path()) as fh:
-                return int(json.load(fh)["metric_buckets"])
-        except (OSError, ValueError, KeyError, TypeError):
+            return int(self._manifest()["metric_buckets"])
+        except (KeyError, ValueError, TypeError):
             # TypeError: a manifest with "metric_buckets": null — corrupt
             # manifests of every shape fall through to directory-shape
             # inference rather than hard-failing the read path (ADVICE r8)
@@ -90,6 +109,16 @@ class Ladder:
                 if e.startswith("mbucket="):
                     return -1
         return 0 if seen_level else None
+
+    def level_schema(self) -> StructType | None:
+        """The schema every level was written with, partition columns
+        last, as the layout manifest records it; ``None`` when the
+        manifest records none (a ladder written before it did) or is
+        corrupt."""
+        try:
+            return StructType.fromJson(self._manifest()["schema"])
+        except (KeyError, ValueError, TypeError, AttributeError):
+            return None
 
     def verified_bucketed(self) -> bool:
         """True iff the bucket-pruned fast paths (exact-name fetch /
@@ -145,6 +174,167 @@ class Ladder:
         return ("mbucket", "date") if self.metric_buckets > 0 else ("date",)
 
 
+def build_ladders(
+    points: DataFrame,
+    ladders: Sequence[Ladder],
+    *,
+    ts_col: str = "ts",
+    value_col: str = "value",
+) -> list[bool]:
+    """Materialize every level of every ladder, building level *k* of all
+    of them in one pass. Each row of ``points`` routes to the ladder
+    whose index in ``ladders`` its :data:`LADDER_COL` column holds. The
+    ladders must share ``key_cols`` and ``metric_buckets``, and their
+    roots one filesystem.
+
+    Round 0 reads ``points`` once and runs :func:`rollup_partials` with a
+    per-ladder step (a ``CASE`` on the index); round *k* runs
+    :func:`cascade` over each ladder's level *k*-1 as just written, so no
+    level re-reads raw (reference O4). A level whose step is not a
+    multiple of the previous one (legal in the reference too) aggregates
+    raw instead. Each round's input is repartitioned by (ladder, date of
+    the new bucket), with ``date`` among the grouping keys, so a round is
+    one exchange and one write, and each (ladder, level, date) leaf one
+    file. The round writes ``partitionBy(ladder, …)`` into a staging
+    directory beside the ladders; each ladder's part is swapped in whole
+    (:func:`_swap_in`) and read back with the written frame's schema,
+    which the layout manifest also records, so no read infers a schema.
+
+    Returns, per ladder, whether every level was written. A ladder no
+    row routes to stages nothing in round 0: it costs no write, gets no
+    coarser level, and any prior ladder at its root stays as it was."""
+    if not ladders:
+        return []
+    first = ladders[0]
+    if any(
+        (lad.key_cols, lad.metric_buckets)
+        != (first.key_cols, first.metric_buckets)
+        for lad in ladders
+    ):
+        raise ValueError(
+            "build_ladders: every ladder must share key_cols and "
+            "metric_buckets"
+        )
+    keys = [LADDER_COL, "date", *first.key_cols]
+    parts = (LADDER_COL, *first.partition_cols)
+    order = "metric" if "metric" in first.key_cols else first.key_cols[0]
+    steps = [sorted(a.step_seconds for a in lad.archives) for lad in ladders]
+    stage = os.path.join(
+        os.path.commonpath([lad.root for lad in ladders]),
+        f"_staging_{uuid.uuid4().hex[:8]}",
+    )
+    live = list(range(len(ladders)))
+    done: list[int] = []
+    prev: dict[int, DataFrame] = {}
+    schema: StructType | None = None
+    k = 0
+    try:
+        while live:
+            aligned = [
+                i for i in live
+                if k > 0 and steps[i][k] % steps[i][k - 1] == 0
+            ]
+            from_raw = [i for i in live if i not in aligned]
+            frames = []
+            if aligned:
+                step = _per_ladder({i: steps[i][k] for i in aligned})
+                inp = functools.reduce(
+                    DataFrame.unionByName, [prev[i] for i in aligned]
+                )
+                bucket = F.col("bucket_ts") - F.col("bucket_ts") % step
+                frames.append(
+                    cascade(
+                        _by_ladder_date(inp, bucket, len(aligned)),
+                        key_cols=keys,
+                        step_seconds=step,
+                    )
+                )
+            if from_raw:
+                step = _per_ladder({i: steps[i][k] for i in from_raw})
+                inp = (
+                    points
+                    if len(from_raw) == len(ladders)
+                    else points.where(F.col(LADDER_COL).isin(from_raw))
+                )
+                frames.append(
+                    rollup_partials(
+                        _by_ladder_date(
+                            inp, align_epoch(ts_col, step), len(from_raw)
+                        ),
+                        key_cols=keys,
+                        ts_col=ts_col,
+                        value_col=value_col,
+                        step_seconds=step,
+                    )
+                )
+            level = functools.reduce(DataFrame.unionByName, frames)
+            if first.metric_buckets > 0:
+                level = level.withColumn("mbucket", first.bucket_expr())
+            # sort by metric within each date partition: parquet min/max
+            # row-group statistics then prune metric-filtered fetches
+            # (SURVEY §4.2 "bucket or Z-order by metric"); the partition
+            # columns lead, so the write adds no sort of its own
+            out = f"{stage}/{k}"
+            level.sortWithinPartitions(*parts, order).write.partitionBy(
+                *parts
+            ).parquet(out)
+            if schema is None:
+                # a parquet read types every column nullable
+                schema = StructType([
+                    StructField(f.name, f.dataType, True)
+                    for f in [f for f in level.schema if f.name not in parts]
+                    + [level.schema[c] for c in first.partition_cols]
+                ])
+            staged = []
+            for i in live:
+                leaf = f"{out}/{LADDER_COL}={i}"
+                if not os.path.isdir(leaf):
+                    continue
+                path = ladders[i].level_path(steps[i][k])
+                os.makedirs(ladders[i].root, exist_ok=True)
+                if _swap_in(
+                    path, lambda tmp, leaf=leaf: os.rename(leaf, tmp)
+                ):
+                    staged.append(i)
+                    prev[i] = (
+                        points.sparkSession.read.schema(schema)
+                        .parquet(path)
+                        .drop("date", "mbucket")
+                        .withColumn(LADDER_COL, F.lit(i))
+                    )
+            k += 1
+            done += [i for i in staged if len(steps[i]) == k]
+            live = [i for i in staged if len(steps[i]) > k]
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    for i in done:
+        _write_layout_manifest(ladders[i], schema)
+    return [i in done for i in range(len(ladders))]
+
+
+def _per_ladder(values: dict[int, int]) -> Column:
+    """``values[ladder index]`` as a column."""
+    out = None
+    for i, v in values.items():
+        hit = F.col(LADDER_COL) == i
+        out = F.when(hit, v) if out is None else out.when(hit, v)
+    return out
+
+
+def _by_ladder_date(df: DataFrame, bucket: Column, n_ladders: int) -> DataFrame:
+    """``df`` (rows of ``n_ladders`` ladders) with the ``date`` of each
+    row's new epoch ``bucket``, repartitioned by (ladder, date): an
+    aggregate grouped by both needs no further exchange, and the write
+    gets one task per leaf. Rows of one ladder repartition by date
+    alone: their ladder column may be a literal, which the optimizer
+    folds out of the grouping keys but not out of the partitioning, and
+    the aggregate would then need an exchange of its own."""
+    cols = [LADDER_COL, "date"] if n_ladders > 1 else ["date"]
+    return df.withColumn(
+        "date", F.to_date(F.timestamp_seconds(bucket))
+    ).repartition(*cols)
+
+
 def build_ladder(
     points: DataFrame,
     ladder: Ladder,
@@ -152,62 +342,32 @@ def build_ladder(
     ts_col: str = "ts",
     value_col: str = "value",
 ) -> bool:
-    """Materialize every archive level, fine→coarse, each cascaded from the
-    previous (never re-reading raw — reference O4 semantics), each written
-    beside the old level and swapped in (:func:`_swap_in`).
+    """Materialize one ladder: :func:`build_ladders` with every row
+    routed to it. Returns True when every level was written, False when
+    the input is empty: nothing is staged then, so nothing coarser is
+    built and a prior ladder at the same root stays readable as it
+    was."""
+    (written,) = build_ladders(
+        points.withColumn(LADDER_COL, F.lit(0)),
+        [ladder],
+        ts_col=ts_col,
+        value_col=value_col,
+    )
+    return written
 
-    Returns True when every level was written. Returns False when the
-    input is empty: the fine level's write then holds no parquet file, so
-    it is discarded, nothing coarser is built and a prior ladder at the
-    same root stays readable as it was."""
-    steps = sorted(a.step_seconds for a in ladder.archives)
-    prev: DataFrame | None = None
-    prev_step: int | None = None
-    for step in steps:
-        if prev is None or step % prev_step != 0:
-            # the fine level, and any level whose step is not a multiple
-            # of the previous one (cascade needs aligned buckets; such
-            # ladders are legal in the reference too), aggregate raw
-            level = rollup_partials(
-                points,
-                key_cols=list(ladder.key_cols),
-                ts_col=ts_col,
-                value_col=value_col,
-                step_seconds=step,
-            )
-        else:
-            level = cascade(
-                prev, key_cols=list(ladder.key_cols), step_seconds=step
-            )
-        out = level.withColumn(
-            "date", F.to_date(F.timestamp_seconds(F.col("bucket_ts")))
-        )
-        if ladder.metric_buckets > 0:
-            out = out.withColumn("mbucket", ladder.bucket_expr())
-        # sort by metric within each date partition: parquet min/max
-        # row-group statistics then prune metric-filtered fetches
-        # (SURVEY §4.2 "bucket or Z-order by metric")
-        out = out.sortWithinPartitions(
-            "metric" if "metric" in out.columns else ladder.key_cols[0]
-        )
-        if not _swap_in(
-            ladder.level_path(step),
-            lambda tmp: out.write.partitionBy(*ladder.partition_cols).parquet(tmp),
-        ):
-            return False
-        # Cascade the next level from the level just MATERIALIZED, not from
-        # its unevaluated plan: `prev = level` made every coarser build
-        # re-run this level's aggregation from raw (the exact re-read O4
-        # forbids). Reading the written parquet back scans the 10-600×
-        # smaller partials instead; values round-trip exactly (long/double
-        # columns, no rewriting), so the cascade output is unchanged.
-        prev = (
-            points.sparkSession.read.parquet(ladder.level_path(step))
-            .drop("date", "mbucket")
-        )
-        prev_step = step
-    _write_layout_manifest(ladder)
-    return True
+
+def read_level(spark: SparkSession, ladder: Ladder, path: str) -> DataFrame:
+    """Open a level directory, or one ``mbucket=`` directory of it, with
+    the schema the layout manifest records, so the read runs no
+    schema-inference job. A ladder whose manifest records no schema
+    falls back to inference."""
+    schema = ladder.level_schema()
+    if schema is None:
+        return spark.read.parquet(path)
+    if os.path.basename(path.rstrip("/")).startswith("mbucket="):
+        # a bucket directory's partition column is in its own name
+        schema = StructType([f for f in schema if f.name != "mbucket"])
+    return spark.read.schema(schema).parquet(path)
 
 
 def _parquet_files(path: str) -> dict[str, int]:
@@ -272,13 +432,12 @@ def _rewrite(
     )
 
 
-def _write_layout_manifest(ladder: Ladder) -> None:
+def _write_layout_manifest(ladder: Ladder, schema: StructType) -> None:
     """Record the layout the data was written with (ADVICE r7: the
     bucket-pruned delete/fetch paths must never trust the CONFIGURED
-    ``metric_buckets`` over the on-disk truth). Lives at the ladder
-    root — level swaps never touch it."""
-    import json
-
+    ``metric_buckets`` over the on-disk truth) and the level schema
+    :func:`read_level` reads with. Lives at the ladder root — level
+    swaps never touch it."""
     os.makedirs(ladder.root, exist_ok=True)
     tmp = ladder.manifest_path() + ".tmp"
     with open(tmp, "w") as fh:
@@ -286,6 +445,7 @@ def _write_layout_manifest(ladder: Ladder) -> None:
             {
                 "metric_buckets": int(ladder.metric_buckets),
                 "key_cols": list(ladder.key_cols),
+                "schema": schema.jsonValue(),
             },
             fh,
         )
@@ -361,16 +521,16 @@ def compact_level(
     per_leaf = _parquet_files(path)
     before = sum(per_leaf.values())
     # Short-circuit when there is nothing to merge: every partition dir
-    # already holds at most one file (the state build_ladder leaves a
-    # freshly built level in — its write lands one file per date at local
-    # SFs, and the metric sort-order compaction would re-establish is
-    # already the build's sort order). Rewriting anyway would read and
+    # already holds at most one file (the state build_ladders leaves a
+    # freshly built level in — its write lands one file per date, and
+    # the metric sort-order compaction would re-establish is already the
+    # build's sort order). Rewriting anyway would read and
     # rewrite the whole level for zero layout change; real compactors
     # (e.g. Iceberg's rewrite_data_files) skip-up-to-date the same way.
     # Fragmented levels (streaming upsert debris — >1 file in any leaf)
     # take the rewrite below unchanged.
     # ASSUMPTIONS (ADVICE r15): (a) a single-file leaf is build-ordered —
-    # true for every writer in this package (build_ladder and the
+    # true for every writer in this package (build_ladders and the
     # delete/compact rewrites all sortWithinPartitions on the series key;
     # the streaming upsert sink only ever ADDS files, making the leaf
     # multi-file and ineligible for the skip). A future single-file
@@ -380,10 +540,10 @@ def compact_level(
     # deployment gets file counts from the table format's manifest
     # (Iceberg/Delta) instead of listing.
     # An empty level (an expire dropped every date partition) has nothing
-    # to rewrite, and spark.read.parquet on it could not infer a schema.
+    # to rewrite.
     if not per_leaf or max(per_leaf.values()) <= 1:
         return before, before
-    df = spark.read.parquet(path)
+    df = read_level(spark, ladder, path)
     _swap_in(path, _rewrite(df, ladder.key_cols[0], max_records_per_file))
     return before, sum(_parquet_files(path).values())
 
@@ -432,7 +592,7 @@ def delete_metrics(
         if not os.path.isdir(path):
             deleted[a.step_seconds] = 0
             continue
-        df = spark.read.parquet(path)
+        df = read_level(spark, ladder, path)
         hit = (
             F.col(ladder.key_cols[0]).rlike(metric_regex)
             if metric_regex is not None
@@ -484,7 +644,7 @@ def _delete_exact_bucketed(
             bpath = os.path.join(path, f"mbucket={b}")
             if not os.path.isdir(bpath):
                 continue
-            bdf = spark.read.parquet(bpath)
+            bdf = read_level(spark, ladder, bpath)
             hit = F.col(key).isin(list(metrics))
             n_total, n_del = bdf.agg(
                 F.count(F.lit(1)), F.sum(hit.cast("long"))
@@ -519,11 +679,11 @@ def _delete_exact_bucketed(
 
 
 def load_levels(spark: SparkSession, ladder: Ladder) -> dict[int, DataFrame]:
-    """Open every materialized level (each ``spark.read.parquet`` runs a
-    schema-inference job; :func:`fetch_from_ladder` opens only the level
-    it routes to)."""
+    """Open every materialized level (:func:`read_level`)."""
     return {
-        a.step_seconds: spark.read.parquet(ladder.level_path(a.step_seconds))
+        a.step_seconds: read_level(
+            spark, ladder, ladder.level_path(a.step_seconds)
+        )
         for a in ladder.archives
     }
 
@@ -587,10 +747,9 @@ def fetch_from_ladder(
     """End-to-end reference read path over the materialized ladder:
     archive selection → partition-pruned scan → grid gap-fill.
 
-    The archive is routed FIRST and only that level is opened: each
-    ``spark.read.parquet`` costs a schema-inference job, and a level the
-    route does not pick (even an empty one, after an expire dropped all
-    its partitions) is never read.
+    The archive is routed FIRST and only that level is opened
+    (:func:`read_level`, with the recorded schema): a level the route
+    does not pick is never read.
 
     On a bucketed ladder, an EXACT metric name additionally prunes to
     its single ``mbucket=`` partition (hash-bucket pruning — the same
@@ -598,7 +757,7 @@ def fetch_from_ladder(
     fetch path already does."""
     archives = list(ladder.archives)
     step = route(archives, from_ts, until_ts, now_ts)[0].step_seconds
-    level = spark.read.parquet(ladder.level_path(step))
+    level = read_level(spark, ladder, ladder.level_path(step))
     if (
         ladder.metric_buckets > 0
         and metric_glob is not None

@@ -41,8 +41,9 @@ from kenshin_backup_spark.functions.deterministic import QUANT
 AGG_KERNELS = ("average", "sum", "last", "max", "min")
 
 
-def align_epoch(ts: Column | str, step_seconds: int) -> Column:
+def align_epoch(ts: Column | str, step_seconds: int | Column) -> Column:
     """Whisper bucket alignment ``ts - ts % step`` → epoch-seconds BIGINT.
+    ``step_seconds`` may be a column (a per-row step).
 
     Floors toward -inf on the epoch integer — identical to DuckDB
     ``(epoch_ms(ts)//1000 // step) * step`` (SURVEY §7 hard-part 6).
@@ -58,10 +59,11 @@ def rollup_partials(
     key_cols: list[str],
     ts_col: str = "ts",
     value_col: str = "value",
-    step_seconds: int,
+    step_seconds: int | Column,
 ) -> DataFrame:
     """Level-0 rollup: raw points → one bucket row per (keys, bucket_ts)
     carrying the composable partial state described in the module doc.
+    ``step_seconds`` may be a column (a per-row step).
 
     Output: ``key_cols + [bucket_ts, cnt, sum_q, min_v, max_v, last_ts, last_v]``.
     """
@@ -91,9 +93,10 @@ def cascade(
     partials: DataFrame,
     *,
     key_cols: list[str],
-    step_seconds: int,
+    step_seconds: int | Column,
 ) -> DataFrame:
     """Coarser level from a finer partials table (reference ``propagate``).
+    ``step_seconds`` may be a column (a per-row step).
 
     Exactly equivalent to :func:`rollup_partials` at ``step_seconds`` run
     directly on the raw points (property-tested in tests/test_rollup.py).

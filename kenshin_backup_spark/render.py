@@ -215,6 +215,10 @@ class _Parser:
         # ARGUMENT position are unaffected (arg() consumes them first).
         if len(self.toks) == 1 and self.toks[0].kind == "number":
             return ("leaf", self.toks[0].text)
+        # an empty target: aliasQuery re-queries a series named '' (the
+        # name sumSeriesWithWildcards(seriesByTag(...), 0) gives) as one
+        if not self.toks:
+            raise ValueError("render: empty target expression")
         node = self.expr()
         if self.peek() is not None:
             raise ValueError(f"trailing input at {self.peek()}")

@@ -394,6 +394,100 @@ def test_layout_manifest_guards_bucket_pruning(spark, tmp_path):
         assert bkt.verified_bucketed() is False
 
 
+def test_levels_read_with_the_recorded_schema(spark, tmp_path):
+    """The layout manifest records the schema Spark would infer for
+    every level (and, without mbucket, for a bucket directory);
+    read_level opens a level with it and runs no Spark job. A manifest
+    without a schema falls back to inference."""
+    import json
+    import uuid
+
+    from kenshin_backup_spark.operators.ladder import read_level
+
+    ladder = Ladder(
+        root=str(tmp_path / "schema"),
+        archives=(Archive(60, 200), Archive(600, 200)),
+        metric_buckets=4,
+    )
+    build_ladder(_points(spark), ladder)
+    sc = spark.sparkContext
+    group = f"read-level-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read_level")
+    try:
+        levels = {
+            a.step_seconds: read_level(
+                spark, ladder, ladder.level_path(a.step_seconds)
+            ).schema
+            for a in ladder.archives
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    for step, schema in levels.items():
+        assert schema == spark.read.parquet(ladder.level_path(step)).schema
+    bucket = os.path.join(
+        ladder.level_path(60),
+        sorted(e for e in os.listdir(ladder.level_path(60))
+               if e.startswith("mbucket="))[0],
+    )
+    assert (
+        read_level(spark, ladder, bucket).schema
+        == spark.read.parquet(bucket).schema
+    )
+
+    with open(ladder.manifest_path()) as fh:
+        manifest = json.load(fh)
+    del manifest["schema"]
+    with open(ladder.manifest_path(), "w") as fh:
+        json.dump(manifest, fh)
+    assert ladder.level_schema() is None
+    assert load_levels(spark, ladder)[60].schema == levels[60]
+
+
+def test_build_ladders_mixes_cascaded_and_raw_levels(spark, tmp_path):
+    """One build of two bucketed ladders, where the second's coarse step
+    is not a multiple of its fine one: that level aggregates raw in the
+    same round the first ladder's level cascades, and every level of
+    both equals rollup_partials run on that ladder's rows alone."""
+    from kenshin_backup_spark.operators.ladder import (
+        LADDER_COL,
+        build_ladders,
+    )
+
+    pts = _points(spark)
+    web = F.col("metric") == "srv.web.cpu"
+    ladders = [
+        Ladder(
+            root=str(tmp_path / name),
+            archives=archives,
+            metric_buckets=4,
+        )
+        for name, archives in (
+            ("web", (Archive(60, 200), Archive(600, 200))),
+            ("db", (Archive(60, 200), Archive(90, 200), Archive(900, 20))),
+        )
+    ]
+    routed = pts.withColumn(LADDER_COL, F.when(web, 0).otherwise(1))
+    assert build_ladders(routed, ladders) == [True, True]
+
+    cols = ["metric", "bucket_ts", "cnt", "sum_q", "min_v", "max_v",
+            "last_ts", "last_v"]
+    for ladder, rows in zip(ladders, (pts.where(web), pts.where(~web))):
+        for a in ladder.archives:
+            stored = load_levels(spark, ladder)[a.step_seconds]
+            want = rollup_partials(
+                rows, key_cols=["metric"], step_seconds=a.step_seconds
+            )
+            assert sorted(map(tuple, stored.select(*cols).collect())) == (
+                sorted(map(tuple, want.select(*cols).collect()))
+            ), (ladder.root, a.step_seconds)
+        assert all(
+            e.startswith("mbucket=")
+            for a in ladder.archives
+            for e in os.listdir(ladder.level_path(a.step_seconds))
+        )
+
+
 def _level_rows(spark, ladder):
     return {
         step: lvl.agg(F.sum("cnt")).first()[0]

@@ -2288,6 +2288,26 @@ def test_aliasquery_tagged_requery_and_empty_set(spark):
     assert empty == []
 
 
+def test_empty_target_raises_a_named_error(spark):
+    """An empty target is a named error, not the parser's internal
+    ``expected None, got None``. aliasQuery builds one from a series
+    named '' (sumSeriesWithWildcards over tagged names at node 0; fuzz
+    seed 61843 case 625)."""
+    base = spark.createDataFrame(
+        [("req;dc=east;app=a", 0, 1.0), ("req;dc=east;app=b", 0, 3.0)],
+        "metric string, bucket_ts long, value double",
+    )
+    with pytest.raises(ValueError, match="render: empty target expression"):
+        render(
+            "aliasQuery(sumSeriesWithWildcards(seriesByTag('dc=east'), 0), "
+            "'used', 'used', 'same %d')",
+            lambda glob: base,
+        ).collect()
+    for target in ("", "  "):
+        with pytest.raises(ValueError, match="empty target expression"):
+            _Parser(_tokenize(target)).parse()
+
+
 def test_negative_node_indices(spark):
     """graphite's node arguments are PYTHON list indices (aggKey does
     parts[node]), so negatives count from the end — aliasByNode(x, -1)

@@ -168,6 +168,12 @@ EXPECTED_ERRORS = [
     (r"applyByNode|aliasQuery", r"expected rparen", _GENERATED_FIRST_ARG),
     (r"applyByNode|aliasQuery", r"bad token", _GENERATED_FIRST_ARG),
     (r"applyByNode|aliasQuery", r"trailing input", _GENERATED_FIRST_ARG),
+    # A generated EMPTY name (sumSeriesWithWildcards(seriesByTag(...), 0)
+    # names its series '') rebuilds the empty target; graphite's
+    # evaluateTarget('') fails to parse it too. Pinned:
+    # test_render.py::test_empty_target_raises_a_named_error.
+    (r"applyByNode|aliasQuery", r"render: empty target expression",
+     _GENERATED_FIRST_ARG),
     # r15 (VERDICT r14 #1, judge seed 471103 case 550): the rail over a
     # threshold()/constantLine()-generated NUMERIC name ("3.0") rebuilds
     # 'sumSeries(3)' — the bare number parses as a SCALAR argument and
