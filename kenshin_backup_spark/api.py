@@ -49,7 +49,7 @@ from kenshin_backup_spark.operators.ladder import (
 from kenshin_backup_spark.operators.policies import (
     DEFAULT_POLICY,
     Policy,
-    assign_policy,
+    policy_index,
 )
 from kenshin_backup_spark.operators.rollup import finalize
 from kenshin_backup_spark.session import RENDER_CONFS, tune
@@ -146,10 +146,11 @@ class Engine:
     ) -> tuple[int, int] | None:
         """Materialize the retention ladder(s) for a long points frame.
 
-        :func:`assign_policy` tags each point with its metric's policy
-        (first match, else ``default``; carbon semantics), and one
-        :func:`build_ladders` call builds every policy's ladder from the
-        tagged rows: one raw pass, then one exchange and one write per
+        :func:`policy_index` tags each point with the index of its
+        metric's policy (first match, else ``default``; carbon
+        semantics), and one :func:`build_ladders` call builds every
+        policy's ladder from the tagged rows: one raw pass, then one
+        exchange and one write per
         level rank, each level cascaded from the one before (never
         re-reading raw) and swapped in beside the old one. Re-writing a
         policy's ladder replaces it (the batch equivalent of the
@@ -177,17 +178,11 @@ class Engine:
             F.col(ts_col).alias("ts"),
             F.col(value_col).alias("value"),
         )
-        index = None
-        for i, p in enumerate(self.policies):
-            hit = F.col("policy") == p.name
-            index = F.when(hit, i) if index is None else index.when(hit, i)
-        # a row that matches no pattern is tagged 'default'; without a
-        # policy of that name it routes nowhere
-        routed = (
-            assign_policy(pts, self.policies)
-            .select("metric", "ts", "value", index.alias(LADDER_COL))
-            .where(F.col(LADDER_COL).isNotNull())
-        )
+        # a row that matches no pattern routes to the 'default' policy;
+        # without a policy of that name it routes nowhere
+        routed = pts.withColumn(
+            LADDER_COL, policy_index(self.policies)
+        ).where(F.col(LADDER_COL).isNotNull())
         ob = None
         if observe_bounds:
             ob = Observation()

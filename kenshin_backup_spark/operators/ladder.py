@@ -12,14 +12,16 @@ batch cascade compose exactly).
 
 Scale notes (100 TB): the cascade keeps every level's input
 proportional to the *previous level's cardinality*, not raw row count.
-:func:`build_ladders` builds level *k* of every ladder in one pass: the
-round's input is repartitioned by (ladder, date of the new bucket), so
-the aggregate needs no further exchange and each round is one shuffle
-plus one write, with one task (one file) per (ladder, date), as
-compaction has. At 100 TB repartition on (ladder, date, metric-hash
-bucket) instead, so a day of raw points is not one task. Each level is
-written partitioned by ``date`` (``mbucket``/``date`` when bucketed) and
-sorted by metric within each write task.
+:func:`build_ladders` builds level *k* of every ladder in one pass, one
+shuffle plus one write. A small round's input is repartitioned by
+(ladder, date of the new bucket), so the aggregate needs no further
+exchange and each (ladder, date) leaf is one task and one file, as
+compaction leaves it. A round whose input is estimated above adaptive
+execution's smallest partition is not: the aggregate combines map-side
+and spreads each leaf over the shuffle's partitions, a file per task,
+so a day of raw points is never one task. Each level is written
+partitioned by ``date`` (``mbucket``/``date`` when bucketed) and sorted
+by metric within each write task.
 
 Every level write (a build, a compaction, a delete's rewrite) goes to a
 sibling temp directory that is then swapped in by :func:`_swap_in`, so a
@@ -174,29 +176,26 @@ class Ladder:
         return ("mbucket", "date") if self.metric_buckets > 0 else ("date",)
 
 
-def build_ladders(
-    points: DataFrame,
-    ladders: Sequence[Ladder],
-    *,
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> list[bool]:
+def build_ladders(points: DataFrame, ladders: Sequence[Ladder]) -> list[bool]:
     """Materialize every level of every ladder, building level *k* of all
-    of them in one pass. Each row of ``points`` routes to the ladder
-    whose index in ``ladders`` its :data:`LADDER_COL` column holds. The
-    ladders must share ``key_cols`` and ``metric_buckets``, and their
-    roots one filesystem.
+    of them in one pass. ``points`` holds the ladders' ``key_cols``,
+    ``ts`` and ``value``, and each row routes to the ladder whose index
+    in ``ladders`` its :data:`LADDER_COL` column holds. The ladders must
+    share ``key_cols`` and ``metric_buckets``, and their roots one
+    filesystem.
 
     Round 0 reads ``points`` once and runs :func:`rollup_partials` with a
     per-ladder step (a ``CASE`` on the index); round *k* runs
     :func:`cascade` over each ladder's level *k*-1 as just written, so no
     level re-reads raw (reference O4). A level whose step is not a
     multiple of the previous one (legal in the reference too) aggregates
-    raw instead. Each round's input is repartitioned by (ladder, date of
-    the new bucket), with ``date`` among the grouping keys, so a round is
-    one exchange and one write, and each (ladder, level, date) leaf one
-    file. The round writes ``partitionBy(ladder, …)`` into a staging
-    directory beside the ladders; each ladder's part is swapped in whole
+    raw instead. ``date`` is among the grouping keys and a round is one
+    exchange and one write. A small round's input is repartitioned by
+    (ladder, date of the new bucket), so each (ladder, level, date) leaf
+    is one file; a large one is spread over the shuffle's partitions
+    (:func:`_by_ladder_date`). The round writes
+    ``partitionBy(ladder, …)`` into a staging directory beside the
+    ladders; each ladder's part is swapped in whole
     (:func:`_swap_in`) and read back with the written frame's schema,
     which the layout manifest also records, so no read infers a schema.
 
@@ -259,11 +258,9 @@ def build_ladders(
                 frames.append(
                     rollup_partials(
                         _by_ladder_date(
-                            inp, align_epoch(ts_col, step), len(from_raw)
+                            inp, align_epoch("ts", step), len(from_raw)
                         ),
                         key_cols=keys,
-                        ts_col=ts_col,
-                        value_col=value_col,
                         step_seconds=step,
                     )
                 )
@@ -323,16 +320,30 @@ def _per_ladder(values: dict[int, int]) -> Column:
 
 def _by_ladder_date(df: DataFrame, bucket: Column, n_ladders: int) -> DataFrame:
     """``df`` (rows of ``n_ladders`` ladders) with the ``date`` of each
-    row's new epoch ``bucket``, repartitioned by (ladder, date): an
-    aggregate grouped by both needs no further exchange, and the write
-    gets one task per leaf. Rows of one ladder repartition by date
-    alone: their ladder column may be a literal, which the optimizer
-    folds out of the grouping keys but not out of the partitioning, and
-    the aggregate would then need an exchange of its own."""
+    row's new epoch ``bucket``. While ``df`` is estimated no larger than
+    the smallest partition adaptive execution coalesces to
+    (``spark.sql.adaptive.coalescePartitions.minPartitionSize``), it is
+    repartitioned by (ladder, date): an aggregate grouped by both needs
+    no further exchange, and the write gets one task, so one file, per
+    leaf. A larger ``df`` is left as it is, so the aggregate combines
+    map-side and spreads each leaf over the shuffle's partitions: one
+    task per (ladder, date) would leave a large write's raw points,
+    uncombined, to a single core.
+
+    Rows of one ladder repartition by date alone: their ladder column
+    may be a literal, which the optimizer folds out of the grouping keys
+    but not out of the partitioning, and the aggregate would then need
+    an exchange of its own."""
+    dated = df.withColumn("date", F.to_date(F.timestamp_seconds(bucket)))
+    spark = df.sparkSession
+    one_task = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    estimate = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if estimate > one_task:
+        return dated
     cols = [LADDER_COL, "date"] if n_ladders > 1 else ["date"]
-    return df.withColumn(
-        "date", F.to_date(F.timestamp_seconds(bucket))
-    ).repartition(*cols)
+    return dated.repartition(*cols)
 
 
 def build_ladder(
@@ -348,10 +359,13 @@ def build_ladder(
     built and a prior ladder at the same root stays readable as it
     was."""
     (written,) = build_ladders(
-        points.withColumn(LADDER_COL, F.lit(0)),
+        points.select(
+            *ladder.key_cols,
+            F.col(ts_col).alias("ts"),
+            F.col(value_col).alias("value"),
+            F.lit(0).alias(LADDER_COL),
+        ),
         [ladder],
-        ts_col=ts_col,
-        value_col=value_col,
     )
     return written
 

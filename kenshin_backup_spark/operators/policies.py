@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kenshin_backup_spark.operators.rollup import AGG_KERNELS
@@ -49,6 +49,22 @@ class Policy:
 DEFAULT_POLICY = Policy(name="default", pattern=".*")
 
 
+def _first_match(
+    col: Column, policies: list[Policy], values: list[Column], fallback: Column
+) -> Column:
+    """``values[i]`` of the first policy ``i`` whose pattern matches
+    ``col``, else ``fallback``: a cascaded ``when`` chain, which Catalyst
+    evaluates top-down exactly like the reference's ordered regex scan.
+    The match-everything pattern ``.*`` is spelled ``col IS NOT NULL``
+    (the same rows), so a filter on its value folds to that predicate
+    instead of a regex."""
+    acc = None
+    for p, v in zip(policies, values):
+        cond = col.isNotNull() if p.pattern == ".*" else col.rlike(p.pattern)
+        acc = F.when(cond, v) if acc is None else acc.when(cond, v)
+    return fallback if acc is None else acc.otherwise(fallback)
+
+
 def assign_policy(
     df: DataFrame,
     policies: list[Policy],
@@ -56,19 +72,32 @@ def assign_policy(
     metric_col: str = "metric",
     out_col: str = "policy",
 ) -> DataFrame:
-    """Add ``out_col`` = name of the first policy whose pattern matches.
-
-    First-match-wins over the *ordered* list — encoded as a cascaded
-    ``when`` chain, which Catalyst evaluates top-down exactly like the
-    reference's ordered regex scan. A row no pattern matches (a null
-    metric included) gets ``'default'``. The match-everything pattern
-    ``.*`` is spelled ``metric IS NOT NULL`` (the same rows), so a filter
-    on its policy folds to that predicate instead of a regex.
+    """Add ``out_col`` = name of the first policy whose pattern matches
+    (first match wins over the *ordered* list). A row no pattern matches
+    (a null metric included) gets ``'default'``.
     """
-    col = F.col(metric_col)
-    acc = None
-    for p in policies:
-        cond = col.isNotNull() if p.pattern == ".*" else col.rlike(p.pattern)
-        acc = F.when(cond, F.lit(p.name)) if acc is None else acc.when(cond, F.lit(p.name))
-    expr = acc.otherwise(F.lit(DEFAULT_POLICY.name)) if acc is not None else F.lit(DEFAULT_POLICY.name)
-    return df.withColumn(out_col, expr)
+    name = _first_match(
+        F.col(metric_col),
+        policies,
+        [F.lit(p.name) for p in policies],
+        F.lit(DEFAULT_POLICY.name),
+    )
+    return df.withColumn(out_col, name)
+
+
+def policy_index(policies: list[Policy]) -> Column:
+    """Index in ``policies`` of the policy :func:`assign_policy` names for
+    each row's ``metric`` (the first policy of that name); null when it
+    names ``'default'`` and no policy has that name."""
+    names = [p.name for p in policies]
+    fallback = (
+        F.lit(names.index(DEFAULT_POLICY.name))
+        if DEFAULT_POLICY.name in names
+        else F.lit(None).cast("int")
+    )
+    return _first_match(
+        F.col("metric"),
+        policies,
+        [F.lit(names.index(p.name)) for p in policies],
+        fallback,
+    )

@@ -488,6 +488,54 @@ def test_build_ladders_mixes_cascaded_and_raw_levels(spark, tmp_path):
         )
 
 
+def test_large_round_input_spreads_each_leaf(spark, tmp_path):
+    """A round whose input is estimated no larger than adaptive
+    execution's smallest partition writes each date leaf as one file; a
+    larger one is not repartitioned by (ladder, date), so its leaves
+    spread over the shuffle's tasks. Both builds store the same rows."""
+    ids = spark.range(4 * 2 * 1440)
+    pts = ids.select(
+        F.concat(F.lit("srv.h"), (F.col("id") % 4).cast("string")).alias(
+            "metric"
+        ),
+        F.timestamp_seconds((F.col("id") / 4).cast("long") * 60).alias("ts"),
+        (F.col("id") % 13).cast("double").alias("value"),
+    )
+    archives = (Archive(60, 4000), Archive(3600, 100))
+    small, large = (
+        Ladder(root=str(tmp_path / n), archives=archives)
+        for n in ("small", "large")
+    )
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    build_ladder(pts, small)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        build_ladder(pts, large)
+    finally:
+        spark.conf.set(key, old)
+
+    def files_per_leaf(ladder, step):
+        path = ladder.level_path(step)
+        return [
+            len([f for f in os.listdir(f"{path}/{d}") if f.endswith(".parquet")])
+            for d in sorted(os.listdir(path))
+            if d.startswith("date=")
+        ]
+
+    assert files_per_leaf(small, 60) == [1, 1]
+    assert max(files_per_leaf(large, 60)) > 1
+    cols = ["metric", "bucket_ts", "cnt", "sum_q", "min_v", "max_v",
+            "last_ts", "last_v"]
+    for a in archives:
+        got = [
+            sorted(map(tuple, load_levels(spark, lad)[a.step_seconds]
+                       .select(*cols).collect()))
+            for lad in (small, large)
+        ]
+        assert got[0] == got[1], a.step_seconds
+
+
 def _level_rows(spark, ladder):
     return {
         step: lvl.agg(F.sum("cnt")).first()[0]
